@@ -1660,7 +1660,9 @@ def main() -> None:
                     # session-keyed index builds, bucketed-table writes and
                     # _memo_load calls (r11 verdict: warm minima must never
                     # be conflated with the cold cost they exclude)
-                    "cold_build_sec": dict(Q.COLD_BUILD_SECONDS),
+                    "cold_build_sec": {
+                        k: round(v, 4) for k, v in Q.COLD_BUILD_SECONDS.items()
+                    },
                     "dedup_single_thread_input_mb": single_thread.get("input_mb"),
                     "dedup_single_thread_mbps": single_thread.get("mbps_gzip"),
                     "dedup_single_thread_none_mbps": single_thread.get("mbps_none"),

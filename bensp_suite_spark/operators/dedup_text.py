@@ -546,13 +546,11 @@ def near_dup_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") ->
     # the standard iterative-algorithm pattern; swap for checkpoint(dir) on
     # a real cluster if executor loss during the loop must be survivable.
     #
-    # The edge table is repartitioned on the JOIN key (y) before the
-    # checkpoint: localCheckpoint preserves output partitioning, so every
-    # round's edges-side of the label join reuses this one exchange
-    # instead of re-shuffling the (largest) table per round (guide §2.4;
-    # at bench scale the label side broadcasts and no edges exchange
-    # exists either way — the pre-partitioning is the 100 TB shape, where
-    # labels ∝ nodes force a shuffle join every round).
+    # The edge table is made symmetric and de-duplicated (distinct())
+    # before the checkpoint; it is NOT repartitioned on the join key y.
+    # At bench scale the label side broadcasts, so no edges exchange
+    # exists; where labels ∝ nodes force a shuffle join, every round
+    # re-shuffles the edges side of the label join.
     #
     # `new`'s checkpoint is LAZY (eager=False): the round's checksum
     # action materializes it and computes the fixpoint sum in ONE job

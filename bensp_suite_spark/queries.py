@@ -15,7 +15,12 @@ Determinism rules (so the driver's value-hash matches):
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+import time
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -53,62 +58,73 @@ def query(name: str, oracle: str | None = None):
 #: ignores it entirely (queries stay hermetic and self-contained).
 FIXTURE_BUILD_SECONDS: dict[str, float] = {}
 
-
-class _fixture_build:
-    """``with _fixture_build("query_name"): <build the tempdir input>`` —
-    accumulates wall time into FIXTURE_BUILD_SECONDS[name]."""
-
-    def __init__(self, name: str):
-        self.name = name
-
-    def __enter__(self):
-        import time as _time
-
-        self._t0 = _time.perf_counter()
-        return self
-
-    def __exit__(self, *exc):
-        import time as _time
-
-        FIXTURE_BUILD_SECONDS[self.name] = FIXTURE_BUILD_SECONDS.get(
-            self.name, 0.0
-        ) + (_time.perf_counter() - self._t0)
-        return False
-
-
 #: Cold first-invocation build/load seconds (r11 verdict item: the
 #: session-keyed index builds and ``_memo_load`` shift work out of warm
 #: reps — record what the COLD invocation paid so warm minima are never
 #: conflated with cold cost). Keys are ``"<query>:build"`` for on-disk
 #: index builds / bucketed-table writes and ``"load:<kind>"`` for the
 #: per-session memoized index loads; values accumulate across the run.
-#: The bench exports a snapshot as ``extras.cold_build_sec``.
+#: The bench exports a snapshot as ``extras.cold_build_sec``; unlike
+#: FIXTURE_BUILD_SECONDS, nothing is subtracted from any recorded time.
 COLD_BUILD_SECONDS: dict[str, float] = {}
 
 
-class _cold_build:
-    """``with _cold_build("name"): <one-time build>`` — accumulates wall
-    time into COLD_BUILD_SECONDS[name] (transparency only: unlike
-    _fixture_build, nothing is subtracted from any recorded time)."""
+@contextmanager
+def _timed(into: dict[str, float], name: str):
+    """Adds the block's wall seconds to ``into[name]`` (accumulating
+    across uses, also when the block raises)."""
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        into[name] = into.get(name, 0.0) + (time.perf_counter() - t0)
 
-    def __init__(self, name: str):
-        self.name = name
 
-    def __enter__(self):
-        import time as _time
+def _fixture_build(name: str):
+    """``with _fixture_build("query_name"): <build the tempdir input>``."""
+    return _timed(FIXTURE_BUILD_SECONDS, name)
 
-        self._t0 = _time.perf_counter()
-        return self
 
-    def __exit__(self, *exc):
-        import time as _time
+def _cold_build(name: str):
+    """``with _cold_build("name"): <one-time build>``."""
+    return _timed(COLD_BUILD_SECONDS, name)
 
-        COLD_BUILD_SECONDS[self.name] = round(
-            COLD_BUILD_SECONDS.get(self.name, 0.0)
-            + (_time.perf_counter() - self._t0),
-            4,
-        )
-        return False
+
+#: directories a query leaves behind on purpose — cached index builds and
+#: sources of a returned lazy DataFrame; removed when the interpreter exits
+_KEPT_DIRS: list[str] = []
+
+
+@atexit.register
+def _remove_kept_dirs() -> None:
+    for d in _KEPT_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+@contextmanager
+def _scratch(prefix: str, keep: bool = False):
+    """A fresh temp directory, removed when the block exits — also when it
+    raises. With ``keep``, a block that completes hands the directory to
+    _KEPT_DIRS instead: a returned lazy DataFrame or a cached index still
+    reads it."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    kept = False
+    try:
+        yield path
+        kept = keep
+    finally:
+        if kept:
+            _KEPT_DIRS.append(path)
+        else:
+            shutil.rmtree(path, ignore_errors=True)
+
+
+def _replay(spark: SparkSession, schema, path: str) -> DataFrame:
+    """A parquet file stream over ``path`` that admits one file per
+    trigger, so a multi-file source replays as several micro-batches."""
+    return (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
+    )
 
 
 class _stateful_stream_parts:
@@ -1298,20 +1314,9 @@ def ann_nsw_routed_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     by ef_search, never wrong answers. Golden-pinned from the
     independent numpy mirror of the whole composition (unit-space
     codebook train, per-cell encode, ADC beams, exact rerank)."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_routed_pq", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_routed_pq_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_routed_pq"
-            GA.save_nsw_routed_pq_index(
-                emb, path, n_cells=8, m=8, ef_build=24, n_subspaces=8,
-                n_centroids=256,
-            )
-            _ANN_INDEX_CACHE[("nsw_routed_pq", sf_dir)] = path
-    idx = _memo_load(spark, "nsw_routed_pq", path, GA.load_nsw_routed_pq_index)
+    idx = _nsw_routed_pq_index(spark, "ann_nsw_routed_pq_topk", sf_dir, emb)
     # 8-bit codes + a wider beam than the raw probe: ADC noise is paid in
     # beam width, never in answers (r9 calibration: C=256/ef=32 matches
     # the raw routed probe's recall on this fixture; C=16/ef=16 was 0.55)
@@ -1344,8 +1349,6 @@ def stream_routed_pq_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame
     import glob as _glob
     import hashlib as _hl
     import os as _os
-    import shutil
-    import tempfile
 
     from .streaming.incremental_dedup_stream import (
         seed_signatures,
@@ -1360,89 +1363,83 @@ def stream_routed_pq_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame
             _hl.md5(f"{tag}-{i}-{j}".encode()).hexdigest() for j in (1, 2, 3)
         )
 
-    base = tempfile.mkdtemp(prefix="bensp_srup_")
-    idx_path = _os.path.join(base, "idx")
-    with _fixture_build("stream_routed_pq_upsert_probe"):
-        # day-0 index over the base corpus: frozen centroids + codebooks
-        # (train slice = all base ids < 2048, mirroring the golden)
-        GA.save_nsw_routed_pq_index(
-            emb.filter(F.col("vec_id") < 400), idx_path, n_cells=8, m=8,
-            ef_build=24, n_subspaces=8, n_centroids=256,
-        )
-        # batches share tools/golden_reference._srup_batches's recipe:
-        # day 0 = ids 400..449 (first 5 copy history texts), day 1 =
-        # 450..499 (first 5 copy day-0 survivors 405..409)
-        b0 = [
-            (400 + i, txt("uh", i) if i < 5 else txt("ud", 400 + i))
-            for i in range(50)
-        ]
-        b1 = [
-            (450 + i, txt("ud", 405 + i) if i < 5 else txt("ud", 450 + i))
-            for i in range(50)
-        ]
-        hist = local_rows_df(
-            spark, [(i, txt("uh", i)) for i in range(20)],
-            "doc_id long, text string",
-        )
-        src = _os.path.join(base, "src")
-        _os.makedirs(src)
-        for i, rows in enumerate((b0, b1)):
-            sl = local_rows_df(spark, rows, "doc_id long, text string")
-            tmp = _os.path.join(base, f"w{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = _glob.glob(f"{tmp}/part-*.parquet")[0]
-            dst = _os.path.join(src, f"day{i}.parquet")
-            shutil.move(part, dst)
-            _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        seed_signatures(hist, _os.path.join(base, "sig"), use_bloom=False)
-    probe_out = _os.path.join(base, "probe_out")
+    with _scratch("bensp_srup_") as base:
+        idx_path = _os.path.join(base, "idx")
+        with _fixture_build("stream_routed_pq_upsert_probe"):
+            # day-0 index over the base corpus: frozen centroids + codebooks
+            # (train slice = all base ids < 2048, mirroring the golden)
+            GA.save_nsw_routed_pq_index(
+                emb.filter(F.col("vec_id") < 400), idx_path, n_cells=8, m=8,
+                ef_build=24, n_subspaces=8, n_centroids=256,
+            )
+            # batches share tools/golden_reference._srup_batches's recipe:
+            # day 0 = ids 400..449 (first 5 copy history texts), day 1 =
+            # 450..499 (first 5 copy day-0 survivors 405..409)
+            b0 = [
+                (400 + i, txt("uh", i) if i < 5 else txt("ud", 400 + i))
+                for i in range(50)
+            ]
+            b1 = [
+                (450 + i, txt("ud", 405 + i) if i < 5 else txt("ud", 450 + i))
+                for i in range(50)
+            ]
+            hist = local_rows_df(
+                spark, [(i, txt("uh", i)) for i in range(20)],
+                "doc_id long, text string",
+            )
+            src = _os.path.join(base, "src")
+            _os.makedirs(src)
+            for i, rows in enumerate((b0, b1)):
+                sl = local_rows_df(spark, rows, "doc_id long, text string")
+                tmp = _os.path.join(base, f"w{i}")
+                sl.coalesce(1).write.mode("overwrite").parquet(tmp)
+                part = _glob.glob(f"{tmp}/part-*.parquet")[0]
+                dst = _os.path.join(src, f"day{i}.parquet")
+                shutil.move(part, dst)
+                _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+            seed_signatures(hist, _os.path.join(base, "sig"), use_bloom=False)
+        probe_out = _os.path.join(base, "probe_out")
 
-    def maintain_and_probe(survivors: DataFrame, batch_id: int) -> None:
-        # survivors' embeddings continue the index (corpus = the lake
-        # table the exact rerank reads); probe the UPDATED index and
-        # write per-day (partition overwrite → replay-idempotent, the
-        # on_survivors contract)
-        add = emb.join(
-            survivors.select(F.col("doc_id").alias("vec_id")),
-            "vec_id",
-            "left_semi",
-        )
-        GA.upsert_nsw_routed_pq_index(add, emb, idx_path)
-        # NOT memoized: the upsert just rewrote shards, and a cached
-        # load would serve the pre-upsert file listing
-        idx = GA.load_nsw_routed_pq_index(spark, idx_path)
-        GA.nsw_routed_pq_ann_topk(
-            q, emb, idx, k=5, n_probe=2, ef_search=32
-        ).write.mode("overwrite").parquet(f"{probe_out}/day={batch_id}")
+        def maintain_and_probe(survivors: DataFrame, batch_id: int) -> None:
+            # survivors' embeddings continue the index (corpus = the lake
+            # table the exact rerank reads); probe the UPDATED index and
+            # write per-day (partition overwrite → replay-idempotent, the
+            # on_survivors contract)
+            add = emb.join(
+                survivors.select(F.col("doc_id").alias("vec_id")),
+                "vec_id",
+                "left_semi",
+            )
+            GA.upsert_nsw_routed_pq_index(add, emb, idx_path)
+            # NOT memoized: the upsert just rewrote shards, and a cached
+            # load would serve the pre-upsert file listing
+            idx = GA.load_nsw_routed_pq_index(spark, idx_path)
+            GA.nsw_routed_pq_ann_topk(
+                q, emb, idx, k=5, n_probe=2, ef_search=32
+            ).write.mode("overwrite").parquet(f"{probe_out}/day={batch_id}")
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    _run(
-        spark,
-        stream,
-        _os.path.join(base, "sig"),
-        _os.path.join(base, "flags"),
-        _os.path.join(base, "ckpt"),
-        compact_every=2,
-        retention_window=3,
-        on_survivors=maintain_and_probe,
-    )
-    result = (
-        spark.read.parquet(probe_out)
-        .select(
-            F.col("day").cast("long").alias("day"),
-            "query_id",
-            "neighbor_id",
-            "rank",
-            "cosine",
+        stream = _replay(spark, "doc_id long, text string", src)
+        _run(
+            spark,
+            stream,
+            _os.path.join(base, "sig"),
+            _os.path.join(base, "flags"),
+            _os.path.join(base, "ckpt"),
+            compact_every=2,
+            retention_window=3,
+            on_survivors=maintain_and_probe,
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        return (
+            spark.read.parquet(probe_out)
+            .select(
+                F.col("day").cast("long").alias("day"),
+                "query_id",
+                "neighbor_id",
+                "rank",
+                "cosine",
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 @query("ann_opq_topk", oracle=None)
@@ -1594,22 +1591,20 @@ def ann_ivfpq_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the inline build (doubles round-trip parquet exactly; shared golden
     oracle re-verified). Cold build seconds land in
     COLD_BUILD_SECONDS["ann_ivfpq_auto_topk:build"]."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    got = _ANN_INDEX_CACHE.get(("ivfpq_auto", sf_dir))
-    if got is None:
-        with _cold_build("ann_ivfpq_auto_topk:build"):
-            n_cells, _ = SIM.ivf_defaults(emb.count())
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/ivfpq_auto"
-            SIM.save_ivfpq_index(
-                emb, path, n_cells=n_cells, n_subspaces=8, n_centroids=256
-            )
-            got = (path, n_cells)
-            _ANN_INDEX_CACHE[("ivfpq_auto", sf_dir)] = got
-    path, n_cells = got
-    idx = _memo_load(spark, "ivfpq", path, SIM.load_ivfpq_index)
+
+    def build(path: str) -> int:
+        n_cells, _ = SIM.ivf_defaults(emb.count())
+        SIM.save_ivfpq_index(
+            emb, path, n_cells=n_cells, n_subspaces=8, n_centroids=256
+        )
+        return n_cells
+
+    idx, n_cells = _prebuilt(
+        spark, "ann_ivfpq_auto_topk", "ivfpq_auto", sf_dir, build,
+        "ivfpq", SIM.load_ivfpq_index,
+    )
     # the identical auto-resolution the inline path applies (ivf_defaults
     # probe rule); refine=None scales with the probe width as before
     n_probe = min(n_cells, max(8, n_cells // 16))
@@ -1731,39 +1726,30 @@ def stream_windowed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     tumbling windows, complete-mode memory sink. Result must equal the
     batch aggregation — proving the streaming path computes the same
     answer as SQL."""
-    import tempfile
     import uuid
 
     from .streaming import dedup_stream as DS
 
     ev = _t(spark, sf_dir, "events").select("ts", "event_type", "value")
-    src = tempfile.mkdtemp(prefix="bensp_stream_src_")
-    # 3 files → 3 micro-batches: enough to prove cross-batch state/watermark
-    # behavior; each extra availableNow micro-batch costs ~0.7 s of fixed
-    # micro-batch overhead on local mode
-    ev.repartition(3).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema("ts timestamp, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    agg = DS.windowed_event_metrics(stream, window="1 day", watermark="2 days")
-    qname = f"winq_{uuid.uuid4().hex[:8]}"
-    with _stateful_stream_parts(spark, src):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # the result lives in the memory sink; the temp source/checkpoint dirs
-    # are dead weight once the availableNow run terminates
-    import shutil
-
-    shutil.rmtree(src, ignore_errors=True)
-    return spark.sql(f"SELECT window_start, event_type, n_events FROM {qname}")
+    with _scratch("bensp_stream_src_") as src:
+        # 3 files → 3 micro-batches: enough to prove cross-batch state/watermark
+        # behavior; each extra availableNow micro-batch costs ~0.7 s of fixed
+        # micro-batch overhead on local mode
+        ev.repartition(3).write.mode("overwrite").parquet(src)
+        stream = _replay(spark, "ts timestamp, event_type string, value double", src)
+        agg = DS.windowed_event_metrics(stream, window="1 day", watermark="2 days")
+        qname = f"winq_{uuid.uuid4().hex[:8]}"
+        with _stateful_stream_parts(spark, src):
+            q = (
+                agg.writeStream.format("memory")
+                .queryName(qname)
+                .outputMode("complete")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        # the result lives in the memory sink, not in the temp source dir
+        return spark.sql(f"SELECT window_start, event_type, n_events FROM {qname}")
 
 
 # ---------------------------------------------------------------------------
@@ -1882,9 +1868,6 @@ def stream_audio_snippet_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     only that snippet's landmarks), so the drained result set must equal
     the batch query bit-for-bit — shares
     multimodal_audio_snippet_search's golden oracle VERBATIM."""
-    import shutil
-    import tempfile
-
     import numpy as np
 
     from .multimodal import audio_landmarks as AL
@@ -1912,23 +1895,17 @@ def stream_audio_snippet_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             AV.encode_pcm_s16le((tracks[0][4096:12288] // 2).astype(np.int16)),
         ),
     ]
-    with _fixture_build("stream_audio_snippet_search"):
-        base = tempfile.mkdtemp(prefix="bensp_stream_snip_")
-        local_rows_df(spark, snip_rows, AV.AUDIO_TABLE_SCHEMA, 2).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/src")
-        index = AL.extract_landmarks(corpus).localCheckpoint(eager=True)
-    stream = (
-        spark.readStream.schema(AV.AUDIO_TABLE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    stream_snippet_match(spark, stream, index, f"{base}/out", f"{base}/ckpt")
-    from .streaming.ann_stream import read_sink
+    with _scratch("bensp_stream_snip_") as base:
+        with _fixture_build("stream_audio_snippet_search"):
+            local_rows_df(spark, snip_rows, AV.AUDIO_TABLE_SCHEMA, 2).write.mode(
+                "overwrite"
+            ).parquet(f"{base}/src")
+            index = AL.extract_landmarks(corpus).localCheckpoint(eager=True)
+        stream = _replay(spark, AV.AUDIO_TABLE_SCHEMA, f"{base}/src")
+        stream_snippet_match(spark, stream, index, f"{base}/out", f"{base}/ckpt")
+        from .streaming.ann_stream import read_sink
 
-    result = read_sink(spark, f"{base}/out").localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        return read_sink(spark, f"{base}/out").localCheckpoint(eager=True)
 
 
 @query("multimodal_audio_dedup_wav")
@@ -4334,7 +4311,6 @@ def cdc_ddp_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     digests. Deterministic end to end (Rabin boundaries + sha1 + gzip are
     bit-stable) → golden-pinned oracle."""
     import os as _os
-    import tempfile as _tf
 
     from .dedup import pipeline as DP
     from .sources.ddp import serialize_ddp
@@ -4355,9 +4331,12 @@ def cdc_ddp_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture: three sequential DP.encode jobs build the archives being
     # scanned — that construction cost is NOT the datasource scan under
     # measurement (it dominated the benched number and tripped the r5
-    # drift guard), so it reports itself to the bench's build/run split
-    with _fixture_build("cdc_ddp_datasource_scan"):
-        d = _tf.mkdtemp(prefix="bensp_ddp_q_")
+    # drift guard), so it reports itself to the bench's build/run split.
+    # The returned DataFrame scans the archives lazily, so they are kept.
+    with (
+        _scratch("bensp_ddp_q_", keep=True) as d,
+        _fixture_build("cdc_ddp_datasource_scan"),
+    ):
         for g in range(3):
             part = files.filter(F.col("file_id") % 3 == g)
             blob = serialize_ddp(DP.encode(part, "gzip"), "gzip")
@@ -4482,31 +4461,22 @@ def stream_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain to a parquet sink. Winner IDENTITY is arrival order, so the
     deterministic — and checked — result is the surviving passage-digest
     SET, which must equal SQL's DISTINCT over the batch passage table."""
-    import shutil
-    import tempfile
-
     from .streaming import text_dedup_stream as TDS
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="bensp_stream_passages_")
-    src = f"{base}/src"
-    out = f"{base}/out"
-    ckpt = f"{base}/ckpt"
-    docs.repartition(3).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _stateful_stream_parts(spark, src):
-        TDS.stream_passage_dedup(spark, stream, out, ckpt)
-    # materialize into block-manager storage so the temp sink can go away
-    # before the driver consumes the returned DataFrame
-    result = (
-        spark.read.parquet(out).select("passage_md5").localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+    with _scratch("bensp_stream_passages_") as base:
+        src = f"{base}/src"
+        out = f"{base}/out"
+        ckpt = f"{base}/ckpt"
+        docs.repartition(3).write.mode("overwrite").parquet(src)
+        stream = _replay(spark, "doc_id long, text string", src)
+        with _stateful_stream_parts(spark, src):
+            TDS.stream_passage_dedup(spark, stream, out, ckpt)
+        # materialize into block-manager storage so the temp sink can go away
+        # before the driver consumes the returned DataFrame
+        return (
+            spark.read.parquet(out).select("passage_md5").localCheckpoint(eager=True)
+        )
 
 
 @query(
@@ -4523,28 +4493,19 @@ def stream_exact_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic check surface is the surviving content-hash SET (winner
     identity is arrival order), which must equal SQL's DISTINCT over the
     batch hashes — the streaming analog of dedup_exact_text."""
-    import shutil
-    import tempfile
-
     from .streaming import text_dedup_stream as TDS
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="bensp_stream_exact_")
-    docs.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    with _stateful_stream_parts(spark, f"{base}/src"):
-        TDS.stream_exact_dedup(spark, stream, f"{base}/out", f"{base}/ckpt")
-    result = (
-        spark.read.parquet(f"{base}/out")
-        .select("content_hash")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+    with _scratch("bensp_stream_exact_") as base:
+        docs.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
+        stream = _replay(spark, "doc_id long, text string", f"{base}/src")
+        with _stateful_stream_parts(spark, f"{base}/src"):
+            TDS.stream_exact_dedup(spark, stream, f"{base}/out", f"{base}/ckpt")
+        return (
+            spark.read.parquet(f"{base}/out")
+            .select("content_hash")
+            .localCheckpoint(eager=True)
+        )
 
 
 @query("stream_ann_brute_topk", oracle=SIM.cosine_topk_oracle_sql(k=5, max_query_id=8))
@@ -4555,26 +4516,17 @@ def stream_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row's result is independent of arrival batching, so the full output
     is deterministic and shares ann_cosine_topk's exact SQL oracle — the
     streaming path must compute the identical ranking."""
-    import shutil
-    import tempfile
-
     from .streaming import ann_stream as ANS
 
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding")
-    base = tempfile.mkdtemp(prefix="bensp_stream_ann_")
-    queries_df.repartition(2).write.mode("overwrite").parquet(f"{base}/src")
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    ANS.stream_ann_topk(
-        spark, stream, emb, f"{base}/out", f"{base}/ckpt", k=5, mode="bruteforce"
-    )
-    result = ANS.read_sink(spark, f"{base}/out").localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+    with _scratch("bensp_stream_ann_") as base:
+        queries_df.repartition(2).write.mode("overwrite").parquet(f"{base}/src")
+        stream = _replay(spark, "vec_id long, embedding array<float>", f"{base}/src")
+        ANS.stream_ann_topk(
+            spark, stream, emb, f"{base}/out", f"{base}/ckpt", k=5, mode="bruteforce"
+        )
+        return ANS.read_sink(spark, f"{base}/out").localCheckpoint(eager=True)
 
 
 # S3 fixture: deterministic bytes → the oracle's golden VALUES are plain
@@ -4619,30 +4571,26 @@ def source_recursive_dir_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference's ferret walk is the same shape
     (scan_dir, ferret-pthreads.c:330-433)."""
     import os as _os
-    import shutil
-    import tempfile
 
     from .sources.binaryfiles import read_files
 
-    with _fixture_build("source_recursive_dir_scan"):
-        base = tempfile.mkdtemp(prefix="bensp_s3_scan_")
-        for rel, n, seed in _S3_FILES:
-            p = _os.path.join(base, rel)
-            _os.makedirs(_os.path.dirname(p), exist_ok=True)
-            with open(p, "wb") as fh:
-                fh.write(bytes((j * seed * 131 + 17) % 256 for j in range(n)))
-        for junk in (".hidden", "sub/.DS_Store"):
-            with open(_os.path.join(base, junk), "wb") as fh:
-                fh.write(b"\x00\x01")
-    files = read_files(spark, base, recursive=True)
-    result = files.select(
-        "file_name",
-        "file_id",
-        F.col("length").cast("long"),
-        F.md5("content").alias("content_md5"),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+    with _scratch("bensp_s3_scan_") as base:
+        with _fixture_build("source_recursive_dir_scan"):
+            for rel, n, seed in _S3_FILES:
+                p = _os.path.join(base, rel)
+                _os.makedirs(_os.path.dirname(p), exist_ok=True)
+                with open(p, "wb") as fh:
+                    fh.write(bytes((j * seed * 131 + 17) % 256 for j in range(n)))
+            for junk in (".hidden", "sub/.DS_Store"):
+                with open(_os.path.join(base, junk), "wb") as fh:
+                    fh.write(b"\x00\x01")
+        files = read_files(spark, base, recursive=True)
+        return files.select(
+            "file_name",
+            "file_id",
+            F.col("length").cast("long"),
+            F.md5("content").alias("content_md5"),
+        ).localCheckpoint(eager=True)
 
 
 # --- WARC source fixture: literal record spec shared by the builder and
@@ -4735,8 +4683,6 @@ def source_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same archive-member shape as the TAR ingest the reference reads
     (apps/dedup/src/new_dedup.c:925-1107)."""
     import os as _os
-    import shutil
-    import tempfile
 
     from .sources.warc import (
         build_http_response,
@@ -4744,34 +4690,32 @@ def source_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_warc_records,
     )
 
-    with _fixture_build("source_warc_scan"):
-        base = tempfile.mkdtemp(prefix="bensp_warc_scan_")
-        for fname, gz, recs in _WARC_FILES:
-            triples = []
-            for rtype, uri, status, ctype, payload in recs:
-                block = (
-                    build_http_response(payload, status, ctype)
-                    if status is not None
-                    else payload
-                )
-                triples.append((rtype, uri, block))
-            with open(_os.path.join(base, fname), "wb") as fh:
-                fh.write(build_warc_bytes(triples, gzip_records=gz))
-    result = (
-        read_warc_records(spark, base)
-        .select(
-            "warc_name",
-            "record_idx",
-            "record_type",
-            "url",
-            "http_status",
-            "content_type",
-            F.md5("payload").alias("payload_md5"),
+    with _scratch("bensp_warc_scan_") as base:
+        with _fixture_build("source_warc_scan"):
+            for fname, gz, recs in _WARC_FILES:
+                triples = []
+                for rtype, uri, status, ctype, payload in recs:
+                    block = (
+                        build_http_response(payload, status, ctype)
+                        if status is not None
+                        else payload
+                    )
+                    triples.append((rtype, uri, block))
+                with open(_os.path.join(base, fname), "wb") as fh:
+                    fh.write(build_warc_bytes(triples, gzip_records=gz))
+        return (
+            read_warc_records(spark, base)
+            .select(
+                "warc_name",
+                "record_idx",
+                "record_type",
+                "url",
+                "http_status",
+                "content_type",
+                F.md5("payload").alias("payload_md5"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
 
 
 def _warc_pages_golden() -> str:
@@ -4809,8 +4753,6 @@ def stream_warc_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly (record iteration never spans batches: a segment is one
     binaryFile row). Golden pinned from the literal fixture spec."""
     import os as _os
-    import shutil
-    import tempfile
 
     from .sources.warc import (
         build_http_response,
@@ -4819,28 +4761,26 @@ def stream_warc_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .streaming.event_streams import run_to_parquet
 
-    with _fixture_build("stream_warc_pages"):
-        base = tempfile.mkdtemp(prefix="bensp_warc_stream_")
-        src = _os.path.join(base, "src")
-        _os.makedirs(src)
-        for fname, gz, recs in _WARC_FILES:
-            triples = []
-            for rtype, uri, status, ctype, payload in recs:
-                block = (
-                    build_http_response(payload, status, ctype)
-                    if status is not None
-                    else payload
-                )
-                triples.append((rtype, uri, block))
-            with open(_os.path.join(src, fname), "wb") as fh:
-                fh.write(build_warc_bytes(triples, gzip_records=gz))
-    pages = read_warc_pages(
-        spark, src, streaming=True, max_files_per_trigger=1
-    ).select("warc_name", "record_idx", "url", F.md5("html").alias("html_md5"))
-    run_to_parquet(pages, f"{base}/out", f"{base}/ckpt")
-    result = spark.read.parquet(f"{base}/out").localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+    with _scratch("bensp_warc_stream_") as base:
+        with _fixture_build("stream_warc_pages"):
+            src = _os.path.join(base, "src")
+            _os.makedirs(src)
+            for fname, gz, recs in _WARC_FILES:
+                triples = []
+                for rtype, uri, status, ctype, payload in recs:
+                    block = (
+                        build_http_response(payload, status, ctype)
+                        if status is not None
+                        else payload
+                    )
+                    triples.append((rtype, uri, block))
+                with open(_os.path.join(src, fname), "wb") as fh:
+                    fh.write(build_warc_bytes(triples, gzip_records=gz))
+        pages = read_warc_pages(
+            spark, src, streaming=True, max_files_per_trigger=1
+        ).select("warc_name", "record_idx", "url", F.md5("html").alias("html_md5"))
+        run_to_parquet(pages, f"{base}/out", f"{base}/ckpt")
+        return spark.read.parquet(f"{base}/out").localCheckpoint(eager=True)
 
 
 @query(
@@ -4858,29 +4798,24 @@ def source_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference pass — at 100 TB inference is a second full read). The
     re-aggregated totals must equal the parquet truth exactly; integer
     columns make the parity bit-exact."""
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "source", F.length("text").cast("long").alias("n_chars")
     )
-    base = tempfile.mkdtemp(prefix="bensp_csv_")
-    docs.write.mode("overwrite").option("header", True).csv(f"{base}/docs")
-    back = (
-        spark.read.schema("doc_id long, source string, n_chars long")
-        .option("header", True)
-        .csv(f"{base}/docs")
-    )
-    result = (
-        back.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
+    with _scratch("bensp_csv_") as base:
+        docs.write.mode("overwrite").option("header", True).csv(f"{base}/docs")
+        back = (
+            spark.read.schema("doc_id long, source string, n_chars long")
+            .option("header", True)
+            .csv(f"{base}/docs")
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        return (
+            back.groupBy("source")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_chars").alias("total_chars"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 @query(
@@ -4899,26 +4834,21 @@ def source_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the round-tripped text must equal the parquet truth, so a
     single mangled character fails the hash). Explicit schema on the
     read, no inference scan."""
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    base = tempfile.mkdtemp(prefix="bensp_jsonl_")
-    docs.write.mode("overwrite").json(f"{base}/docs")
-    back = spark.read.schema("doc_id long, source string, text string").json(
-        f"{base}/docs"
-    )
-    result = (
-        back.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count_distinct(F.md5("text")).alias("n_distinct_texts"),
-            F.sum(F.length("text")).cast("long").alias("total_chars"),
+    with _scratch("bensp_jsonl_") as base:
+        docs.write.mode("overwrite").json(f"{base}/docs")
+        back = spark.read.schema("doc_id long, source string, text string").json(
+            f"{base}/docs"
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        return (
+            back.groupBy("source")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.count_distinct(F.md5("text")).alias("n_distinct_texts"),
+                F.sum(F.length("text")).cast("long").alias("total_chars"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 _EVENT_STREAM_SCHEMA = (
@@ -4950,52 +4880,40 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB like the dedup state."""
     import glob as _glob
     import os as _os
-    import shutil
-    import tempfile
 
     from .streaming import event_streams as ES
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="bensp_stream_ij_")
-    with _fixture_build("stream_interval_join"):
-        # the two replay-source writes are independent single-directory
-        # jobs — overlap them (guide §2.6) so the fixture pays one write
-        # latency; construction seconds are reported via
-        # FIXTURE_BUILD_SECONDS like every other stream-source fixture
-        from concurrent.futures import ThreadPoolExecutor as _TPE
+    with _scratch("bensp_stream_ij_") as base:
+        with _fixture_build("stream_interval_join"):
+            # the two replay-source writes are independent single-directory
+            # jobs — overlap them (guide §2.6) so the fixture pays one write
+            # latency; construction seconds are reported via
+            # FIXTURE_BUILD_SECONDS like every other stream-source fixture
+            from concurrent.futures import ThreadPoolExecutor as _TPE
 
-        def _write_side(arg):
-            name, side = arg
-            df = ev.filter(F.col("event_type") == side)
-            # 2 slices per side: cross-batch state is exercised (the
-            # first batch's unmatched rows must pair with the second
-            # batch's other side) at half the trigger cost of finer
-            # slicing
-            df.repartitionByRange(2, "ts").write.parquet(f"{base}/{name}")
-            for i, p in enumerate(
-                sorted(_glob.glob(f"{base}/{name}/part-*.parquet"))
-            ):
-                _os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+            def _write_side(arg):
+                name, side = arg
+                df = ev.filter(F.col("event_type") == side)
+                # 2 slices per side: cross-batch state is exercised (the
+                # first batch's unmatched rows must pair with the second
+                # batch's other side) at half the trigger cost of finer
+                # slicing
+                df.repartitionByRange(2, "ts").write.parquet(f"{base}/{name}")
+                for i, p in enumerate(
+                    sorted(_glob.glob(f"{base}/{name}/part-*.parquet"))
+                ):
+                    _os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
 
-        with _TPE(max_workers=2) as _pool:
-            list(_pool.map(_write_side, (("c", "click"), ("v", "view"))))
-    c_s = (
-        spark.readStream.schema(_EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/c")
-    )
-    v_s = (
-        spark.readStream.schema(_EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/v")
-    )
-    with _stateful_stream_parts(spark, f"{base}/c", f"{base}/v"):
-        ES.run_to_parquet(ES.interval_join(c_s, v_s), f"{base}/out", f"{base}/ckpt")
-    result = spark.read.parquet(f"{base}/out").localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+            with _TPE(max_workers=2) as _pool:
+                list(_pool.map(_write_side, (("c", "click"), ("v", "view"))))
+        c_s = _replay(spark, _EVENT_STREAM_SCHEMA, f"{base}/c")
+        v_s = _replay(spark, _EVENT_STREAM_SCHEMA, f"{base}/v")
+        with _stateful_stream_parts(spark, f"{base}/c", f"{base}/v"):
+            ES.run_to_parquet(ES.interval_join(c_s, v_s), f"{base}/out", f"{base}/ckpt")
+        return spark.read.parquet(f"{base}/out").localCheckpoint(eager=True)
 
 
 @query(
@@ -5018,70 +4936,58 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta this query exists to verify)."""
     import glob as _glob
     import os as _os
-    import shutil
-    import tempfile
 
     from .streaming import event_streams as ES
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="bensp_stream_ijo_")
-    with _fixture_build("stream_interval_join_outer"):
-        # overlapped independent side writes + reported construction
-        # seconds — same protocol as stream_interval_join
-        from concurrent.futures import ThreadPoolExecutor as _TPE
+    with _scratch("bensp_stream_ijo_") as base:
+        with _fixture_build("stream_interval_join_outer"):
+            # overlapped independent side writes + reported construction
+            # seconds — same protocol as stream_interval_join
+            from concurrent.futures import ThreadPoolExecutor as _TPE
 
-        def _write_side(arg):
-            name, side = arg
-            df = ev.filter(F.col("event_type") == side)
-            df.repartitionByRange(2, "ts").write.parquet(f"{base}/{name}")
-            parts = sorted(_glob.glob(f"{base}/{name}/part-*.parquet"))
-            sent = df.limit(1).select(
-                F.lit(999_999_999).alias("event_id"),
-                (F.col("ts") + F.expr("INTERVAL 3650 DAYS")).alias("ts"),
-                F.lit(-1).cast("long").alias("user_id"),
-                F.lit("sentinel").alias("event_type"),
-                F.lit(0.0).alias("value"),
-            )
-            sent.coalesce(1).write.mode("append").parquet(f"{base}/{name}")
-            newest = max(
-                _glob.glob(f"{base}/{name}/part-*.parquet"),
-                key=_os.path.getmtime,
-            )
-            for i, p in enumerate(parts):
-                _os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
-            _os.utime(newest, (1_700_000_100, 1_700_000_100))
+            def _write_side(arg):
+                name, side = arg
+                df = ev.filter(F.col("event_type") == side)
+                df.repartitionByRange(2, "ts").write.parquet(f"{base}/{name}")
+                parts = sorted(_glob.glob(f"{base}/{name}/part-*.parquet"))
+                sent = df.limit(1).select(
+                    F.lit(999_999_999).alias("event_id"),
+                    (F.col("ts") + F.expr("INTERVAL 3650 DAYS")).alias("ts"),
+                    F.lit(-1).cast("long").alias("user_id"),
+                    F.lit("sentinel").alias("event_type"),
+                    F.lit(0.0).alias("value"),
+                )
+                sent.coalesce(1).write.mode("append").parquet(f"{base}/{name}")
+                newest = max(
+                    _glob.glob(f"{base}/{name}/part-*.parquet"),
+                    key=_os.path.getmtime,
+                )
+                for i, p in enumerate(parts):
+                    _os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+                _os.utime(newest, (1_700_000_100, 1_700_000_100))
 
-        with _TPE(max_workers=2) as _pool:
-            list(_pool.map(_write_side, (("c", "click"), ("v", "view"))))
-    c_s = (
-        spark.readStream.schema(_EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/c")
-    )
-    v_s = (
-        spark.readStream.schema(_EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/v")
-    )
-    with _stateful_stream_parts(spark, f"{base}/c", f"{base}/v"):
-        ES.run_to_parquet(
-            ES.interval_join(c_s, v_s, how="left_outer"),
-            f"{base}/out",
-            f"{base}/ckpt",
+            with _TPE(max_workers=2) as _pool:
+                list(_pool.map(_write_side, (("c", "click"), ("v", "view"))))
+        c_s = _replay(spark, _EVENT_STREAM_SCHEMA, f"{base}/c")
+        v_s = _replay(spark, _EVENT_STREAM_SCHEMA, f"{base}/v")
+        with _stateful_stream_parts(spark, f"{base}/c", f"{base}/v"):
+            ES.run_to_parquet(
+                ES.interval_join(c_s, v_s, how="left_outer"),
+                f"{base}/out",
+                f"{base}/ckpt",
+            )
+        # deterministic check surface: the (user, click, view) pairing set —
+        # NULL view_id marks an outer row (the timestamp columns add no
+        # information beyond the ids here: event_id is unique)
+        return (
+            spark.read.parquet(f"{base}/out")
+            .filter(F.col("user_id") >= 0)
+            .select("user_id", "click_id", "view_id")
+            .localCheckpoint(eager=True)
         )
-    # deterministic check surface: the (user, click, view) pairing set —
-    # NULL view_id marks an outer row (the timestamp columns add no
-    # information beyond the ids here: event_id is unique)
-    result = (
-        spark.read.parquet(f"{base}/out")
-        .filter(F.col("user_id") >= 0)
-        .select("user_id", "click_id", "view_id")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
 
 
 @query(
@@ -5101,34 +5007,27 @@ def stream_topk_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     key's standings, and the FINAL standings (max batch_id per key) must
     equal the batch top-5 with the exact (value desc, id asc) tiebreak —
     heap state carried across batches, not recomputed per trigger."""
-    import shutil
-    import tempfile
-
     from .streaming import topk_stream as TS
 
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    base = tempfile.mkdtemp(prefix="bensp_stream_topk_")
-    ev.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
-    stream = (
-        spark.readStream.schema("event_id long, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    with _stateful_stream_parts(spark, f"{base}/src"):
-        TS.stream_topk_per_key(
-            spark, stream, f"{base}/out", f"{base}/ckpt",
-            key="event_type", item_col="event_id", order_col="value", k=5,
+    with _scratch("bensp_stream_topk_") as base:
+        ev.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
+        stream = _replay(
+            spark, "event_id long, event_type string, value double", f"{base}/src"
         )
-    out = spark.read.parquet(f"{base}/out")
-    w = Window.partitionBy("key")
-    result = (
-        out.withColumn("mb", F.max("batch_id").over(w))
-        .filter(F.col("batch_id") == F.col("mb"))
-        .select("key", "rank", "item_id", "order_value")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        with _stateful_stream_parts(spark, f"{base}/src"):
+            TS.stream_topk_per_key(
+                spark, stream, f"{base}/out", f"{base}/ckpt",
+                key="event_type", item_col="event_id", order_col="value", k=5,
+            )
+        out = spark.read.parquet(f"{base}/out")
+        w = Window.partitionBy("key")
+        return (
+            out.withColumn("mb", F.max("batch_id").over(w))
+            .filter(F.col("batch_id") == F.col("mb"))
+            .select("key", "rank", "item_id", "order_value")
+            .localCheckpoint(eager=True)
+        )
 
 
 @query(
@@ -5160,9 +5059,6 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     every real session finalizes under availableNow; the emitted set
     must equal the batch lag/cumsum sessionization — the streaming
     counterpart of a5_session_windows, sharing its oracle."""
-    import shutil
-    import tempfile
-
     from .streaming import event_streams as ES
 
     ev = _t(spark, sf_dir, "events").select(
@@ -5175,18 +5071,16 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("sentinel").alias("event_type"),
         F.lit(0.0).alias("value"),
     )
-    base = tempfile.mkdtemp(prefix="bensp_stream_sess_")
-    ev.unionByName(sentinel).repartition(5).write.parquet(f"{base}/src")
-    stream = spark.readStream.schema(_EVENT_STREAM_SCHEMA).parquet(f"{base}/src")
-    with _stateful_stream_parts(spark, f"{base}/src"):
-        ES.run_to_parquet(ES.session_counts(stream), f"{base}/out", f"{base}/ckpt")
-    result = (
-        spark.read.parquet(f"{base}/out")
-        .filter(F.col("user_id") >= 0)
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+    with _scratch("bensp_stream_sess_") as base:
+        ev.unionByName(sentinel).repartition(5).write.parquet(f"{base}/src")
+        stream = spark.readStream.schema(_EVENT_STREAM_SCHEMA).parquet(f"{base}/src")
+        with _stateful_stream_parts(spark, f"{base}/src"):
+            ES.run_to_parquet(ES.session_counts(stream), f"{base}/out", f"{base}/ckpt")
+        return (
+            spark.read.parquet(f"{base}/out")
+            .filter(F.col("user_id") >= 0)
+            .localCheckpoint(eager=True)
+        )
 
 
 @query(
@@ -5207,35 +5101,26 @@ def stream_per_key_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not — it must equal LEAST(total, quota) exactly, which is the
     deterministic surface the oracle checks (n_offered joins the full
     per-key totals so under-admission and over-admission both fail)."""
-    import shutil
-    import tempfile
-
     from .streaming import quota_stream as QS
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    base = tempfile.mkdtemp(prefix="bensp_stream_quota_")
-    docs.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
-    stream = (
-        spark.readStream.schema("doc_id long, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    with _stateful_stream_parts(spark, f"{base}/src"):
-        QS.stream_per_key_quota(
-            spark, stream, f"{base}/out", f"{base}/ckpt",
-            key="source", quota=40, output_schema="doc_id long, source string",
+    with _scratch("bensp_stream_quota_") as base:
+        docs.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
+        stream = _replay(spark, "doc_id long, source string", f"{base}/src")
+        with _stateful_stream_parts(spark, f"{base}/src"):
+            QS.stream_per_key_quota(
+                spark, stream, f"{base}/out", f"{base}/ckpt",
+                key="source", quota=40, output_schema="doc_id long, source string",
+            )
+        admitted = spark.read.parquet(f"{base}/out")
+        offered = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_offered"))
+        return (
+            admitted.groupBy("source")
+            .agg(F.count(F.lit(1)).alias("n_admitted"))
+            .join(offered, "source")
+            .select("source", "n_admitted", "n_offered")
+            .localCheckpoint(eager=True)
         )
-    admitted = spark.read.parquet(f"{base}/out")
-    offered = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_offered"))
-    result = (
-        admitted.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_admitted"))
-        .join(offered, "source")
-        .select("source", "n_admitted", "n_offered")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
 
 
 _INCR_HISTORY_SQL = "SELECT doc_id, text FROM documents"
@@ -5575,13 +5460,13 @@ def layout_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning time (PartitionFilters, asserted in tests/test_layout.py).
     Results must equal the straight-SQL aggregation over the unpartitioned
     table, proving the layout round-trip is lossless."""
-    import tempfile as _tf
-
     from .operators import layout as L
 
     ev = _t(spark, sf_dir, "events").select("event_type", "ts", "value")
-    path = _tf.mkdtemp(prefix="bensp_layout_q_") + "/events_parted"
-    L.write_partitioned(ev, path, ["event_type"], sort_cols=["ts"])
+    # the returned DataFrame reads the layout lazily, so it is kept
+    with _scratch("bensp_layout_q_", keep=True) as d:
+        path = f"{d}/events_parted"
+        L.write_partitioned(ev, path, ["event_type"], sort_cols=["ts"])
     back = L.read_partitioned(spark, path).filter(
         F.col("event_type").isin("click", "purchase")
     )
@@ -5718,6 +5603,47 @@ def _memo_load(spark: SparkSession, kind: str, path: str, loader):
     return got
 
 
+def _prebuilt(spark, name, family, sf_dir, build, kind, load):
+    """Build-once index: the first call for ``(family, sf_dir)`` in this
+    process runs ``build(path)`` into a kept directory, timed under
+    COLD_BUILD_SECONDS["<name>:build"]; every call then loads the index
+    once per session through _memo_load(kind). The index is deterministic
+    per corpus, so repeated invocations (bench reps) reuse the persisted
+    build. Returns ``(index, what build returned)``."""
+    got = _ANN_INDEX_CACHE.get((family, sf_dir))
+    if got is None:
+        with _cold_build(f"{name}:build"), _scratch("bensp_ann_idx_", keep=True) as d:
+            path = f"{d}/{family}"
+            got = (path, build(path))
+        _ANN_INDEX_CACHE[(family, sf_dir)] = got
+    path, built = got
+    return _memo_load(spark, kind, path, load), built
+
+
+def _nsw_index(spark: SparkSession, name: str, sf_dir: str, emb: DataFrame):
+    """The sharded-NSW index over the embeddings table (ann_nsw_topk's
+    build parameters)."""
+    idx, _ = _prebuilt(
+        spark, name, "nsw", sf_dir,
+        lambda path: GA.save_nsw_index(emb, path, n_shards=4, m=8, ef_build=24),
+        "nsw", GA.load_nsw_index,
+    )
+    return idx
+
+
+def _nsw_routed_pq_index(spark: SparkSession, name: str, sf_dir: str, emb: DataFrame):
+    """The PQ-compressed routed NSW index over the embeddings table."""
+    idx, _ = _prebuilt(
+        spark, name, "nsw_routed_pq", sf_dir,
+        lambda path: GA.save_nsw_routed_pq_index(
+            emb, path, n_cells=8, m=8, ef_build=24, n_subspaces=8,
+            n_centroids=256,
+        ),
+        "nsw_routed_pq", GA.load_nsw_routed_pq_index,
+    )
+    return idx
+
+
 @query(
     "ann_ivf_prebuilt_topk",
     oracle=SIM.ivf_topk_oracle_sql(k=5, max_query_id=8, n_cells=16, n_probe=2),
@@ -5728,19 +5654,13 @@ def ann_ivf_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment — is paid at write time, the query pays only the probe
     join and exact re-rank. Must match the inline-build oracle exactly
     (doubles round-trip parquet bit-exactly)."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    # build-once contract: the index is deterministic per corpus, so
-    # repeated invocations (bench reps) reuse the persisted build
-    path = _ANN_INDEX_CACHE.get(("ivf", sf_dir))
-    if path is None:
-        with _cold_build("ann_ivf_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/ivf"
-            SIM.save_ivf_index(emb, path, n_cells=16)
-            _ANN_INDEX_CACHE[("ivf", sf_dir)] = path
-    idx = _memo_load(spark, "ivf", path, SIM.load_ivf_index)
+    idx, _ = _prebuilt(
+        spark, "ann_ivf_prebuilt_topk", "ivf", sf_dir,
+        lambda path: SIM.save_ivf_index(emb, path, n_cells=16),
+        "ivf", SIM.load_ivf_index,
+    )
     return SIM.ivf_ann_topk(q, emb, k=5, n_cells=16, n_probe=2, index=idx)
 
 
@@ -5757,19 +5677,18 @@ def ann_ivf_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     half) and assignment is pure arithmetic, the upserted index must
     answer queries identically to a from-scratch build over everything —
     it shares ann_ivf_topk's exact SQL oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("ivf_upsert", sf_dir))
-    if path is None:
-        with _cold_build("ann_ivf_upsert_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/ivf_upsert"
-            half = emb.agg((F.max("vec_id") / 2).cast("long").alias("m")).collect()[0]["m"]
-            SIM.save_ivf_index(emb.filter(F.col("vec_id") <= half), path, n_cells=16)
-            SIM.upsert_ivf_index(spark, path, emb.filter(F.col("vec_id") > half))
-            _ANN_INDEX_CACHE[("ivf_upsert", sf_dir)] = path
-    idx = _memo_load(spark, "ivf", path, SIM.load_ivf_index)
+
+    def build(path: str) -> None:
+        half = emb.agg((F.max("vec_id") / 2).cast("long").alias("m")).collect()[0]["m"]
+        SIM.save_ivf_index(emb.filter(F.col("vec_id") <= half), path, n_cells=16)
+        SIM.upsert_ivf_index(spark, path, emb.filter(F.col("vec_id") > half))
+
+    idx, _ = _prebuilt(
+        spark, "ann_ivf_upsert_topk", "ivf_upsert", sf_dir, build,
+        "ivf", SIM.load_ivf_index,
+    )
     return SIM.ivf_ann_topk(q, emb, k=5, n_cells=16, n_probe=2, index=idx)
 
 
@@ -5807,56 +5726,55 @@ def pipeline_daily_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     extend the IVF corpus. Proves the stage contracts (dedup flags →
     survivor ids → vector schema → index append) actually compose, not
     just that each part works alone."""
-    import tempfile as _tf
-
     from .session import pooled_persist
 
     emb = _t(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     emb_d = emb.select("vec_id", v.alias("embedding"))
     q = emb_d.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("ivf_daily", sf_dir))
-    if path is None:
-        with _cold_build("pipeline_daily_increment:build"):
-            # --- stage 1: dedup the derived new batch against history -----
-            docs = _t(spark, sf_dir, "documents")
-            history = docs.select("doc_id", "text")
-            words = F.split(F.trim(F.col("text")), r"\s+")
-            keep = F.greatest(F.size(words) - 3, F.lit(1))
-            jitter = docs.select(
-                (F.col("doc_id") + DT.AUG_OFFSET).alias("doc_id"),
-                F.array_join(F.slice(words, 1, keep), " ").alias("text"),
-            )
-            exact_copies = docs.filter(F.col("doc_id") < 20).select(
-                (F.col("doc_id") + 2 * DT.AUG_OFFSET).alias("doc_id"), "text"
-            )
-            new_batch = pooled_persist(
-                jitter.unionByName(exact_copies), "q.pipeline_daily.new_batch"
-            )
-            hist_h, hist_s = DT.history_signatures(history)
-            sig = (
-                pooled_persist(hist_h, "q.pipeline_daily.hist_hashes"),
-                pooled_persist(hist_s, "q.pipeline_daily.hist_sims"),
-            )
-            flags = DT.incremental_dedup(new_batch, max_hamming=3, history_sig=sig)
-            survivors = flags.filter(F.col("is_kept")).select("doc_id")
-            # --- stage 2: embed survivors (engine-exact jitter transform) --
-            surv_emb = survivors.join(
-                emb_d.withColumnRenamed("vec_id", "src_id"),
-                F.col("doc_id") - DT.AUG_OFFSET == F.col("src_id"),
-            ).select(
-                F.col("doc_id").alias("vec_id"),
-                F.transform(
-                    F.col("embedding"), lambda x: x * F.lit(1.01) + F.lit(0.001)
-                ).alias("embedding"),
-            )
-            # --- stage 3: upsert into the persisted history index ----------
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/ivf_daily"
-            SIM.save_ivf_index(emb_d, path, n_cells=16)
-            SIM.upsert_ivf_index(spark, path, surv_emb)
-            _ANN_INDEX_CACHE[("ivf_daily", sf_dir)] = path
+
+    def build(path: str) -> None:
+        # --- stage 1: dedup the derived new batch against history -----
+        docs = _t(spark, sf_dir, "documents")
+        history = docs.select("doc_id", "text")
+        words = F.split(F.trim(F.col("text")), r"\s+")
+        keep = F.greatest(F.size(words) - 3, F.lit(1))
+        jitter = docs.select(
+            (F.col("doc_id") + DT.AUG_OFFSET).alias("doc_id"),
+            F.array_join(F.slice(words, 1, keep), " ").alias("text"),
+        )
+        exact_copies = docs.filter(F.col("doc_id") < 20).select(
+            (F.col("doc_id") + 2 * DT.AUG_OFFSET).alias("doc_id"), "text"
+        )
+        new_batch = pooled_persist(
+            jitter.unionByName(exact_copies), "q.pipeline_daily.new_batch"
+        )
+        hist_h, hist_s = DT.history_signatures(history)
+        sig = (
+            pooled_persist(hist_h, "q.pipeline_daily.hist_hashes"),
+            pooled_persist(hist_s, "q.pipeline_daily.hist_sims"),
+        )
+        flags = DT.incremental_dedup(new_batch, max_hamming=3, history_sig=sig)
+        survivors = flags.filter(F.col("is_kept")).select("doc_id")
+        # --- stage 2: embed survivors (engine-exact jitter transform) --
+        surv_emb = survivors.join(
+            emb_d.withColumnRenamed("vec_id", "src_id"),
+            F.col("doc_id") - DT.AUG_OFFSET == F.col("src_id"),
+        ).select(
+            F.col("doc_id").alias("vec_id"),
+            F.transform(
+                F.col("embedding"), lambda x: x * F.lit(1.01) + F.lit(0.001)
+            ).alias("embedding"),
+        )
+        # --- stage 3: upsert into the persisted history index ----------
+        SIM.save_ivf_index(emb_d, path, n_cells=16)
+        SIM.upsert_ivf_index(spark, path, surv_emb)
+
+    idx, _ = _prebuilt(
+        spark, "pipeline_daily_increment", "ivf_daily", sf_dir, build,
+        "ivf", SIM.load_ivf_index,
+    )
     # --- stage 4: probe the merged index ------------------------------
-    idx = _memo_load(spark, "ivf", path, SIM.load_ivf_index)
     return SIM.ivf_ann_topk(q, emb_d, k=5, n_cells=16, n_probe=2, index=idx)
 
 
@@ -5866,17 +5784,12 @@ def ann_pq_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet): Lloyd training and the encode scan happen at build time.
     Shares ann_pq_topk's golden oracle — the round-tripped index must
     reproduce the inline build bit-for-bit."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("pq", sf_dir))
-    if path is None:
-        with _cold_build("ann_pq_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/pq"
-            SIM.save_pq_index(emb, path)
-            _ANN_INDEX_CACHE[("pq", sf_dir)] = path
-    idx = _memo_load(spark, "pq", path, SIM.load_pq_index)
+    idx, _ = _prebuilt(
+        spark, "ann_pq_prebuilt_topk", "pq", sf_dir,
+        lambda path: SIM.save_pq_index(emb, path), "pq", SIM.load_pq_index,
+    )
     return SIM.pq_ann_topk(q, emb, k=5, refine=10, index=idx)
 
 
@@ -5893,17 +5806,13 @@ def ann_ivfpq_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     build time; the query path is probe-join + ADC + exact rerank only.
     Must reproduce the inline build bit-for-bit — shares ann_ivfpq_topk's
     independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("ivfpq", sf_dir))
-    if path is None:
-        with _cold_build("ann_ivfpq_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/ivfpq"
-            SIM.save_ivfpq_index(emb, path, n_cells=16, n_centroids=16)
-            _ANN_INDEX_CACHE[("ivfpq", sf_dir)] = path
-    idx = _memo_load(spark, "ivfpq", path, SIM.load_ivfpq_index)
+    idx, _ = _prebuilt(
+        spark, "ann_ivfpq_prebuilt_topk", "ivfpq", sf_dir,
+        lambda path: SIM.save_ivfpq_index(emb, path, n_cells=16, n_centroids=16),
+        "ivfpq", SIM.load_ivfpq_index,
+    )
     return SIM.ivfpq_ann_topk(q, emb, k=5, n_probe=2, refine=4, index=idx)
 
 
@@ -5919,17 +5828,9 @@ def ann_nsw_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Probing a saved graph is bit-identical to the inline build over the
     same corpus (parquet round-trips the doubles and the adjacency
     exactly) — shares ann_nsw_topk's independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw"
-            GA.save_nsw_index(emb, path, n_shards=4, m=8, ef_build=24)
-            _ANN_INDEX_CACHE[("nsw", sf_dir)] = path
-    idx = _memo_load(spark, "nsw", path, GA.load_nsw_index)
+    idx = _nsw_index(spark, "ann_nsw_prebuilt_topk", sf_dir, emb)
     return GA.nsw_ann_topk(q, emb, k=5, ef_search=16, index=idx)
 
 
@@ -5946,20 +5847,19 @@ def ann_nsw_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the full rebuild's order, so the upserted graph — and
     therefore the probe — is bit-identical to the inline build over the
     whole corpus: shares ann_nsw_topk's independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_upsert", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_upsert_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_upsert"
-            GA.save_nsw_index(
-                emb.filter(F.col("vec_id") < 400), path, n_shards=4, m=8, ef_build=24
-            )
-            GA.upsert_nsw_index(emb.filter(F.col("vec_id") >= 400), path)
-            _ANN_INDEX_CACHE[("nsw_upsert", sf_dir)] = path
-    idx = _memo_load(spark, "nsw", path, GA.load_nsw_index)
+
+    def build(path: str) -> None:
+        GA.save_nsw_index(
+            emb.filter(F.col("vec_id") < 400), path, n_shards=4, m=8, ef_build=24
+        )
+        GA.upsert_nsw_index(emb.filter(F.col("vec_id") >= 400), path)
+
+    idx, _ = _prebuilt(
+        spark, "ann_nsw_upsert_topk", "nsw_upsert", sf_dir, build,
+        "nsw", GA.load_nsw_index,
+    )
     return GA.nsw_ann_topk(q, emb, k=5, ef_search=16, index=idx)
 
 
@@ -5974,38 +5874,21 @@ def stream_ann_nsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     across queries, so the drained result set equals the batch probe at
     any trigger sizing: shares ann_nsw_topk's independent golden oracle
     VERBATIM."""
-    import shutil
-    import tempfile
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw", sf_dir))
-    if path is None:
-        with _cold_build("stream_ann_nsw_topk:build"):
-            import tempfile as _tf
-
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw"
-            GA.save_nsw_index(emb, path, n_shards=4, m=8, ef_build=24)
-            _ANN_INDEX_CACHE[("nsw", sf_dir)] = path
-    idx = _memo_load(spark, "nsw", path, GA.load_nsw_index)
+    idx = _nsw_index(spark, "stream_ann_nsw_topk", sf_dir, emb)
     from .streaming.ann_stream import stream_nsw_topk
 
-    with _fixture_build("stream_ann_nsw_topk"):
-        base = tempfile.mkdtemp(prefix="bensp_stream_nsw_")
-        q.repartition(2).write.mode("overwrite").parquet(f"{base}/src")
-    stream = (
-        spark.readStream.schema(q.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    stream_nsw_topk(
-        spark, stream, emb, idx, f"{base}/out", f"{base}/ckpt", k=5, ef_search=16
-    )
-    from .streaming.ann_stream import read_sink
+    with _scratch("bensp_stream_nsw_") as base:
+        with _fixture_build("stream_ann_nsw_topk"):
+            q.repartition(2).write.mode("overwrite").parquet(f"{base}/src")
+        stream = _replay(spark, q.schema, f"{base}/src")
+        stream_nsw_topk(
+            spark, stream, emb, idx, f"{base}/out", f"{base}/ckpt", k=5, ef_search=16
+        )
+        from .streaming.ann_stream import read_sink
 
-    result = read_sink(spark, f"{base}/out").localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        return read_sink(spark, f"{base}/out").localCheckpoint(eager=True)
 
 
 ORACLES["stream_ann_nsw_topk"] = ORACLES["ann_nsw_topk"]
@@ -6019,17 +5902,13 @@ def ann_nsw_routed_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell graph were paid at write time; the query pays n_probe beams +
     the exact re-rank. Bit-identical to the inline routed build — shares
     ann_nsw_routed_topk's independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_routed", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_routed_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_routed"
-            GA.save_nsw_routed_index(emb, path, n_cells=8, m=8, ef_build=24)
-            _ANN_INDEX_CACHE[("nsw_routed", sf_dir)] = path
-    idx = _memo_load(spark, "nsw_routed", path, GA.load_nsw_routed_index)
+    idx, _ = _prebuilt(
+        spark, "ann_nsw_routed_prebuilt_topk", "nsw_routed", sf_dir,
+        lambda path: GA.save_nsw_routed_index(emb, path, n_cells=8, m=8, ef_build=24),
+        "nsw_routed", GA.load_nsw_routed_index,
+    )
     return GA.nsw_routed_ann_topk(
         q, emb, k=5, n_probe=2, ef_search=16, index=idx
     )
@@ -6049,20 +5928,19 @@ def ann_nsw_routed_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     order IS the full rebuild's, so the upserted index — and the probe —
     is bit-identical to the inline routed build over the whole corpus:
     shares ann_nsw_routed_topk's independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_routed_upsert", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_routed_upsert_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_routed_upsert"
-            GA.save_nsw_routed_index(
-                emb.filter(F.col("vec_id") < 400), path, n_cells=8, m=8, ef_build=24
-            )
-            GA.upsert_nsw_routed_index(emb.filter(F.col("vec_id") >= 400), path)
-            _ANN_INDEX_CACHE[("nsw_routed_upsert", sf_dir)] = path
-    idx = _memo_load(spark, "nsw_routed", path, GA.load_nsw_routed_index)
+
+    def build(path: str) -> None:
+        GA.save_nsw_routed_index(
+            emb.filter(F.col("vec_id") < 400), path, n_cells=8, m=8, ef_build=24
+        )
+        GA.upsert_nsw_routed_index(emb.filter(F.col("vec_id") >= 400), path)
+
+    idx, _ = _prebuilt(
+        spark, "ann_nsw_routed_upsert_topk", "nsw_routed_upsert", sf_dir, build,
+        "nsw_routed", GA.load_nsw_routed_index,
+    )
     return GA.nsw_routed_ann_topk(q, emb, k=5, n_probe=2, ef_search=16, index=idx)
 
 
@@ -6077,39 +5955,20 @@ def stream_ann_routed_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     over code-only shards, exact rerank from the static raw corpus; the
     drained result set equals the batch probe at any trigger sizing, so
     it shares ann_nsw_routed_pq_topk's independent golden verbatim."""
-    import shutil
-    import tempfile
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.select("vec_id", "embedding").filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_routed_pq", sf_dir))
-    if path is None:
-        with _cold_build("stream_ann_routed_pq_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_routed_pq"
-            GA.save_nsw_routed_pq_index(
-                emb, path, n_cells=8, m=8, ef_build=24, n_subspaces=8,
-                n_centroids=256,
-            )
-            _ANN_INDEX_CACHE[("nsw_routed_pq", sf_dir)] = path
-    idx = _memo_load(spark, "nsw_routed_pq", path, GA.load_nsw_routed_pq_index)
+    idx = _nsw_routed_pq_index(spark, "stream_ann_routed_pq_topk", sf_dir, emb)
     from .streaming.ann_stream import read_sink, stream_routed_pq_topk
 
-    with _fixture_build("stream_ann_routed_pq_topk"):
-        base = tempfile.mkdtemp(prefix="bensp_stream_rpq_")
-        q.repartition(2).write.mode("overwrite").parquet(f"{base}/src")
-    stream = (
-        spark.readStream.schema(q.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    stream_routed_pq_topk(
-        spark, stream, emb, idx, f"{base}/out", f"{base}/ckpt", k=5,
-        n_probe=2, ef_search=32,
-    )
-    result = read_sink(spark, f"{base}/out").localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+    with _scratch("bensp_stream_rpq_") as base:
+        with _fixture_build("stream_ann_routed_pq_topk"):
+            q.repartition(2).write.mode("overwrite").parquet(f"{base}/src")
+        stream = _replay(spark, q.schema, f"{base}/src")
+        stream_routed_pq_topk(
+            spark, stream, emb, idx, f"{base}/out", f"{base}/ckpt", k=5,
+            n_probe=2, ef_search=32,
+        )
+        return read_sink(spark, f"{base}/out").localCheckpoint(eager=True)
 
 
 ORACLES["stream_ann_routed_pq_topk"] = ORACLES["ann_nsw_routed_pq_topk"]
@@ -6122,19 +5981,15 @@ def ann_nsw_routed_spill_prebuilt_topk(spark: SparkSession, sf_dir: str) -> Data
     time, the spill factor rides the meta so the probe collapses
     duplicate nominations. Bit-identical to the inline spilled build —
     shares ann_nsw_routed_spill_topk's independent golden oracle."""
-    import tempfile as _tf
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    path = _ANN_INDEX_CACHE.get(("nsw_routed_spill", sf_dir))
-    if path is None:
-        with _cold_build("ann_nsw_routed_spill_prebuilt_topk:build"):
-            path = _tf.mkdtemp(prefix="bensp_ann_idx_") + "/nsw_routed_spill"
-            GA.save_nsw_routed_index(
-                emb, path, n_cells=8, m=8, ef_build=24, spill_eps=0.25
-            )
-            _ANN_INDEX_CACHE[("nsw_routed_spill", sf_dir)] = path
-    idx = _memo_load(spark, "nsw_routed", path, GA.load_nsw_routed_index)
+    idx, _ = _prebuilt(
+        spark, "ann_nsw_routed_spill_prebuilt_topk", "nsw_routed_spill", sf_dir,
+        lambda path: GA.save_nsw_routed_index(
+            emb, path, n_cells=8, m=8, ef_build=24, spill_eps=0.25
+        ),
+        "nsw_routed", GA.load_nsw_routed_index,
+    )
     return GA.nsw_routed_ann_topk(
         q, emb, k=5, n_probe=2, ef_search=16, index=idx
     )
@@ -6472,8 +6327,6 @@ def pipeline_warc_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from (segment seq, record position): at scale the id is exactly this
     (warc file, record offset) pair — no coordination across segments."""
     import os as _os
-    import shutil
-    import tempfile
 
     from .pipelines.web import curate_web_corpus
     from .sources.warc import (
@@ -6503,37 +6356,35 @@ def pipeline_warc_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src_pages = joined.select("doc_id", url.alias("url"), html.alias("html"))
 
-    with _fixture_build("pipeline_warc_curation"):
-        base = tempfile.mkdtemp(prefix="bensp_warc_cur_")
-        rows = sorted(src_pages.collect(), key=lambda r: r["doc_id"])
-        per_seg = 100
-        for seg in range(3):
-            chunk = rows[seg * per_seg : (seg + 1) * per_seg]
-            recs = [("warcinfo", None, b"software: bensp-fixture\r\n")] + [
-                (
-                    "response",
-                    r["url"],
-                    build_http_response(r["html"].encode("utf-8")),
-                )
-                for r in chunk
-            ]
-            fname = f"pages-{seg:05d}.warc" + (".gz" if seg == 1 else "")
-            with open(_os.path.join(base, fname), "wb") as fh:
-                fh.write(build_warc_bytes(recs, gzip_records=(seg == 1)))
-    pages = read_warc_pages(spark, base).select(
-        (
-            F.regexp_extract("warc_name", r"pages-(\d+)", 1).cast("long") * per_seg
-            + F.col("record_idx")
-            - 1  # the leading warcinfo record occupies idx 0
-        ).alias("doc_id"),
-        "url",
-        "html",
-    )
-    result = curate_web_corpus(
-        pages, max_per_domain=20, blocklist=["src1.example.com"]
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+    with _scratch("bensp_warc_cur_") as base:
+        with _fixture_build("pipeline_warc_curation"):
+            rows = sorted(src_pages.collect(), key=lambda r: r["doc_id"])
+            per_seg = 100
+            for seg in range(3):
+                chunk = rows[seg * per_seg : (seg + 1) * per_seg]
+                recs = [("warcinfo", None, b"software: bensp-fixture\r\n")] + [
+                    (
+                        "response",
+                        r["url"],
+                        build_http_response(r["html"].encode("utf-8")),
+                    )
+                    for r in chunk
+                ]
+                fname = f"pages-{seg:05d}.warc" + (".gz" if seg == 1 else "")
+                with open(_os.path.join(base, fname), "wb") as fh:
+                    fh.write(build_warc_bytes(recs, gzip_records=(seg == 1)))
+        pages = read_warc_pages(spark, base).select(
+            (
+                F.regexp_extract("warc_name", r"pages-(\d+)", 1).cast("long") * per_seg
+                + F.col("record_idx")
+                - 1  # the leading warcinfo record occupies idx 0
+            ).alias("doc_id"),
+            "url",
+            "html",
+        )
+        return curate_web_corpus(
+            pages, max_per_domain=20, blocklist=["src1.example.com"]
+        ).localCheckpoint(eager=True)
 
 
 ORACLES["pipeline_warc_curation"] = ORACLES["pipeline_web_curation"]
@@ -6685,24 +6536,15 @@ def stream_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained edge set must equal the batch extraction exactly (it shares
     web_link_graph's oracle verbatim). This is how a live crawl feeds
     the frontier ranker: extract per micro-batch, rank on a cadence."""
-    import shutil
-    import tempfile
-
     from .streaming.event_streams import run_to_parquet
 
     pages = _link_graph_pages(spark, sf_dir)
-    with _fixture_build("stream_link_graph"):
-        base = tempfile.mkdtemp(prefix="bensp_stream_lg_")
-        pages.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
-    stream = (
-        spark.readStream.schema("doc_id long, url string, html string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    run_to_parquet(URL.extract_links(stream), f"{base}/out", f"{base}/ckpt")
-    result = spark.read.parquet(f"{base}/out").localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+    with _scratch("bensp_stream_lg_") as base:
+        with _fixture_build("stream_link_graph"):
+            pages.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
+        stream = _replay(spark, "doc_id long, url string, html string", f"{base}/src")
+        run_to_parquet(URL.extract_links(stream), f"{base}/out", f"{base}/ckpt")
+        return spark.read.parquet(f"{base}/out").localCheckpoint(eager=True)
 
 
 _ANCHOR_ORACLE = f"""
@@ -6925,9 +6767,6 @@ def stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary- and order-independent: the final snapshot must equal the
     batch sketch's cells exactly — pinned by the engine-exact batch
     oracle over the same tokens."""
-    import shutil
-    import tempfile
-
     from .streaming import cms_stream as CSTR
     from .streaming.event_streams import run_to_parquet
 
@@ -6935,29 +6774,23 @@ def stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = docs.select(
         F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
     )
-    base = tempfile.mkdtemp(prefix="bensp_stream_cms_")
-    with _fixture_build("stream_cms_cells"):
-        tokens.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
-    stream = (
-        spark.readStream.schema("token string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    with _stateful_stream_parts(spark, f"{base}/src"):
-        run_to_parquet(
-            CSTR.cms_cells_stream(stream, "token", w=_SCMS_W, d=_SCMS_D),
-            f"{base}/out",
-            f"{base}/ckpt",
+    with _scratch("bensp_stream_cms_") as base:
+        with _fixture_build("stream_cms_cells"):
+            tokens.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
+        stream = _replay(spark, "token string", f"{base}/src")
+        with _stateful_stream_parts(spark, f"{base}/src"):
+            run_to_parquet(
+                CSTR.cms_cells_stream(stream, "token", w=_SCMS_W, d=_SCMS_D),
+                f"{base}/out",
+                f"{base}/ckpt",
+            )
+        out = spark.read.parquet(f"{base}/out")
+        last = out.groupBy("row").agg(F.max("seq").alias("seq"))
+        return (
+            out.join(last, ["row", "seq"])
+            .select("row", "col", "cnt")
+            .localCheckpoint(eager=True)
         )
-    out = spark.read.parquet(f"{base}/out")
-    last = out.groupBy("row").agg(F.max("seq").alias("seq"))
-    result = (
-        out.join(last, ["row", "seq"])
-        .select("row", "col", "cnt")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
 
 
 @query("stream_hash_sample", oracle=_hash_sample_oracle_sql(0.25))
@@ -6968,24 +6801,15 @@ def stream_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of batch boundaries, arrival order, and trigger sizing.
     Replayed as a 3-file stream; the drained output must equal the batch
     filter exactly (it shares sample_hash_bernoulli's oracle)."""
-    import shutil
-    import tempfile
-
     from .streaming.event_streams import run_to_parquet
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    with _fixture_build("stream_hash_sample"):
-        base = tempfile.mkdtemp(prefix="bensp_stream_sample_")
-        docs.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
-    stream = (
-        spark.readStream.schema("doc_id long, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    run_to_parquet(SMP.hash_sample(stream, 0.25), f"{base}/out", f"{base}/ckpt")
-    result = spark.read.parquet(f"{base}/out").localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+    with _scratch("bensp_stream_sample_") as base:
+        with _fixture_build("stream_hash_sample"):
+            docs.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
+        stream = _replay(spark, "doc_id long, source string", f"{base}/src")
+        run_to_parquet(SMP.hash_sample(stream, 0.25), f"{base}/out", f"{base}/ckpt")
+        return spark.read.parquet(f"{base}/out").localCheckpoint(eager=True)
 
 
 _KMV_GROUP_ORACLE = f"""
@@ -7050,9 +6874,6 @@ def stream_kmv_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold, so the post-drain state is batch-boundary- and order-
     independent: the final snapshot must equal the batch per-group
     sketch exactly — it shares sketch_kmv_by_group's oracle."""
-    import shutil
-    import tempfile
-
     from .streaming import kmv_stream as KS
     from .streaming.event_streams import run_to_parquet
 
@@ -7061,42 +6882,37 @@ def stream_kmv_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = docs.filter(
         F.col("text").isNotNull()  # NULL texts never enter the keyed sketch state
     ).select("source", SMP.hash_bucket(F.col("text")).alias("h"))
-    with _fixture_build("stream_kmv_per_key"):
-        base = tempfile.mkdtemp(prefix="bensp_stream_kmv_")
-        hashed.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
-    stream = (
-        spark.readStream.schema("source string, h long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    with _stateful_stream_parts(spark, f"{base}/src"):
-        run_to_parquet(
-            KS.stream_kmv_per_key(stream, k=k), f"{base}/out", f"{base}/ckpt"
+    with _scratch("bensp_stream_kmv_") as base:
+        with _fixture_build("stream_kmv_per_key"):
+            hashed.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
+        stream = _replay(spark, "source string, h long", f"{base}/src")
+        with _stateful_stream_parts(spark, f"{base}/src"):
+            run_to_parquet(
+                KS.stream_kmv_per_key(stream, k=k), f"{base}/out", f"{base}/ckpt"
+            )
+        out = spark.read.parquet(f"{base}/out")
+        w = Window.partitionBy("source").orderBy(F.col("seq").desc())
+        final = (
+            out.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(
+                "source",
+                "n_hashes",
+                "kth_min",
+                F.round(
+                    F.when(
+                        F.col("n_hashes") < k, F.col("n_hashes").cast("double")
+                    ).otherwise(
+                        F.lit(float(k - 1))
+                        * F.lit(SMP.BUCKET_SPACE)
+                        / F.col("kth_min").cast("double")
+                    ),
+                    3,
+                ).alias("distinct_est"),
+            )
+            .localCheckpoint(eager=True)
         )
-    out = spark.read.parquet(f"{base}/out")
-    w = Window.partitionBy("source").orderBy(F.col("seq").desc())
-    final = (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "source",
-            "n_hashes",
-            "kth_min",
-            F.round(
-                F.when(
-                    F.col("n_hashes") < k, F.col("n_hashes").cast("double")
-                ).otherwise(
-                    F.lit(float(k - 1))
-                    * F.lit(SMP.BUCKET_SPACE)
-                    / F.col("kth_min").cast("double")
-                ),
-                3,
-            ).alias("distinct_est"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return final
+        return final
 
 
 @query(
@@ -7215,27 +7031,22 @@ def source_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct counts — a lossless-text proof, not just numeric totals
     (the property that matters when the text column IS the product).
     Explicit schema on the read like every interchange source here."""
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    with _fixture_build("source_orc_scan"):
-        base = tempfile.mkdtemp(prefix="bensp_orc_")
-        docs.write.mode("overwrite").orc(f"{base}/docs")
-    back = spark.read.schema("doc_id long, source string, text string").orc(
-        f"{base}/docs"
-    )
-    result = (
-        back.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count_distinct(F.md5("text")).alias("n_distinct_texts"),
-            F.sum(F.length("text").cast("long")).alias("total_chars"),
+    with _scratch("bensp_orc_") as base:
+        with _fixture_build("source_orc_scan"):
+            docs.write.mode("overwrite").orc(f"{base}/docs")
+        back = spark.read.schema("doc_id long, source string, text string").orc(
+            f"{base}/docs"
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        return (
+            back.groupBy("source")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.count_distinct(F.md5("text")).alias("n_distinct_texts"),
+                F.sum(F.length("text").cast("long")).alias("total_chars"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 @query("multimodal_tar_ingest_dedup")
@@ -7251,50 +7062,46 @@ def multimodal_tar_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     TAR layer must be byte-transparent."""
     import io
     import os
-    import shutil
     import tarfile
-    import tempfile
 
     import numpy as np
 
     from .multimodal import audio_video as AV
     from .sources.binaryfiles import read_tar_members
 
-    with _fixture_build("multimodal_tar_ingest_dedup"):
-        base = tempfile.mkdtemp(prefix="bensp_tar_ingest_")
-        sigs = []
-        with tarfile.open(os.path.join(base, "clips.tar"), "w") as tf:
-            def add(mid: int, payload: bytes) -> None:
-                info = tarfile.TarInfo(name=f"clips/clip_{mid}.wav")
-                info.size = len(payload)
-                tf.addfile(info, io.BytesIO(payload))
+    with _scratch("bensp_tar_ingest_") as base:
+        with _fixture_build("multimodal_tar_ingest_dedup"):
+            sigs = []
+            with tarfile.open(os.path.join(base, "clips.tar"), "w") as tf:
+                def add(mid: int, payload: bytes) -> None:
+                    info = tarfile.TarInfo(name=f"clips/clip_{mid}.wav")
+                    info.size = len(payload)
+                    tf.addfile(info, io.BytesIO(payload))
 
-            for i in range(8):
-                rng = np.random.default_rng(90 + i)
-                env = rng.uniform(0.1, 1.0, 65).repeat(130)[:8192]
-                sig = (rng.uniform(-1, 1, 8192) * env * 12000).astype(np.int16)
-                sigs.append(sig)
-                add(i, AV.encode_wav(sig))
-            for i in range(3):
-                add(100 + i, AV.encode_wav(sigs[i] // 2))
-            # a dotfile member the P1 filter must drop before decode
-            junk = tarfile.TarInfo(name="clips/.DS_Store")
-            junk.size = 4
-            tf.addfile(junk, io.BytesIO(b"\x00\x01\x02\x03"))
+                for i in range(8):
+                    rng = np.random.default_rng(90 + i)
+                    env = rng.uniform(0.1, 1.0, 65).repeat(130)[:8192]
+                    sig = (rng.uniform(-1, 1, 8192) * env * 12000).astype(np.int16)
+                    sigs.append(sig)
+                    add(i, AV.encode_wav(sig))
+                for i in range(3):
+                    add(100 + i, AV.encode_wav(sigs[i] // 2))
+                # a dotfile member the P1 filter must drop before decode
+                junk = tarfile.TarInfo(name="clips/.DS_Store")
+                junk.size = 4
+                tf.addfile(junk, io.BytesIO(b"\x00\x01\x02\x03"))
 
-    members = read_tar_members(spark, base)
-    audio = members.select(
-        F.regexp_extract("file_name", r"clip_(\d+)\.wav$", 1)
-        .cast("long")
-        .alias("media_id"),
-        F.lit("wav").alias("format"),
-        F.lit(16000).alias("sample_rate"),
-        F.lit(1).alias("n_channels"),
-        F.col("content").alias("audio"),
-    )
-    result = AV.audio_near_dup_pairs(audio, max_hamming=3).localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        members = read_tar_members(spark, base)
+        audio = members.select(
+            F.regexp_extract("file_name", r"clip_(\d+)\.wav$", 1)
+            .cast("long")
+            .alias("media_id"),
+            F.lit("wav").alias("format"),
+            F.lit(16000).alias("sample_rate"),
+            F.lit(1).alias("n_channels"),
+            F.col("content").alias("audio"),
+        )
+        return AV.audio_near_dup_pairs(audio, max_hamming=3).localCheckpoint(eager=True)
 
 
 # the TAR layer is byte-transparent, so the pairs must equal the WAV
@@ -7313,8 +7120,6 @@ def multimodal_zip_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ZIP layer, like TAR, must be byte-transparent."""
     import io
     import os
-    import shutil
-    import tempfile
     import zipfile
 
     import numpy as np
@@ -7322,36 +7127,34 @@ def multimodal_zip_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .multimodal import audio_video as AV
     from .sources.binaryfiles import read_zip_members
 
-    with _fixture_build("multimodal_zip_ingest_dedup"):
-        base = tempfile.mkdtemp(prefix="bensp_zip_ingest_")
-        sigs = []
-        with zipfile.ZipFile(
-            os.path.join(base, "clips.zip"), "w", zipfile.ZIP_DEFLATED
-        ) as zf:
-            for i in range(8):
-                rng = np.random.default_rng(90 + i)
-                env = rng.uniform(0.1, 1.0, 65).repeat(130)[:8192]
-                sig = (rng.uniform(-1, 1, 8192) * env * 12000).astype(np.int16)
-                sigs.append(sig)
-                zf.writestr(f"clips/clip_{i}.wav", AV.encode_wav(sig))
-            for i in range(3):
-                zf.writestr(f"clips/clip_{100 + i}.wav", AV.encode_wav(sigs[i] // 2))
-            # a dotfile member the P1 filter must drop before decode
-            zf.writestr("clips/.DS_Store", b"\x00\x01\x02\x03")
+    with _scratch("bensp_zip_ingest_") as base:
+        with _fixture_build("multimodal_zip_ingest_dedup"):
+            sigs = []
+            with zipfile.ZipFile(
+                os.path.join(base, "clips.zip"), "w", zipfile.ZIP_DEFLATED
+            ) as zf:
+                for i in range(8):
+                    rng = np.random.default_rng(90 + i)
+                    env = rng.uniform(0.1, 1.0, 65).repeat(130)[:8192]
+                    sig = (rng.uniform(-1, 1, 8192) * env * 12000).astype(np.int16)
+                    sigs.append(sig)
+                    zf.writestr(f"clips/clip_{i}.wav", AV.encode_wav(sig))
+                for i in range(3):
+                    zf.writestr(f"clips/clip_{100 + i}.wav", AV.encode_wav(sigs[i] // 2))
+                # a dotfile member the P1 filter must drop before decode
+                zf.writestr("clips/.DS_Store", b"\x00\x01\x02\x03")
 
-    members = read_zip_members(spark, base)
-    audio = members.select(
-        F.regexp_extract("file_name", r"clip_(\d+)\.wav$", 1)
-        .cast("long")
-        .alias("media_id"),
-        F.lit("wav").alias("format"),
-        F.lit(16000).alias("sample_rate"),
-        F.lit(1).alias("n_channels"),
-        F.col("content").alias("audio"),
-    )
-    result = AV.audio_near_dup_pairs(audio, max_hamming=3).localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        members = read_zip_members(spark, base)
+        audio = members.select(
+            F.regexp_extract("file_name", r"clip_(\d+)\.wav$", 1)
+            .cast("long")
+            .alias("media_id"),
+            F.lit("wav").alias("format"),
+            F.lit(16000).alias("sample_rate"),
+            F.lit(1).alias("n_channels"),
+            F.col("content").alias("audio"),
+        )
+        return AV.audio_near_dup_pairs(audio, max_hamming=3).localCheckpoint(eager=True)
 
 
 # byte-transparent like TAR: identical clips → the same golden
@@ -7659,8 +7462,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline_daily_increment_day3.)"""
     import glob as _glob
     import os as _os
-    import shutil
-    import tempfile
 
     from .pipelines.daily import daily_step
     from .streaming.incremental_dedup_stream import (
@@ -7678,52 +7479,46 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join(F.slice(words, 1, keep), " ").alias("text"),
         )
 
-    base = tempfile.mkdtemp(prefix="bensp_stream_incr_")
-    with _fixture_build("stream_incremental_dedup"):
-        slice_a = jitter(3, 1, 150).unionByName(
-            docs.filter(F.col("doc_id") < 10).select(
-                (F.col("doc_id") + 2 * DT.AUG_OFFSET).alias("doc_id"), "text"
+    with _scratch("bensp_stream_incr_") as base:
+        with _fixture_build("stream_incremental_dedup"):
+            slice_a = jitter(3, 1, 150).unionByName(
+                docs.filter(F.col("doc_id") < 10).select(
+                    (F.col("doc_id") + 2 * DT.AUG_OFFSET).alias("doc_id"), "text"
+                )
             )
+            # slice B's planted copies need slice-A's survivors — derive them
+            # with the batch daily step (fixture work, same derivation as the
+            # oracle; the STREAM recomputes its own flags from seeded state)
+            h0, s0 = DT.history_signatures(docs)
+            _, surv_a, _ = daily_step(
+                (h0, s0), slice_a, day="si_fix", advance=False
+            )
+            slice_b = surv_a.filter(F.col("doc_id") < DT.AUG_OFFSET + 100).select(
+                (F.col("doc_id") + 3 * DT.AUG_OFFSET).alias("doc_id"), "text"
+            ).unionByName(jitter(5, 5, 75))
+            src = _os.path.join(base, "src")
+            _os.makedirs(src)
+            for i, sl in enumerate((slice_a, slice_b)):
+                tmp = _os.path.join(base, f"w{i}")
+                sl.coalesce(1).write.mode("overwrite").parquet(tmp)
+                part = _glob.glob(f"{tmp}/part-*.parquet")[0]
+                dst = _os.path.join(src, f"slice{i}.parquet")
+                shutil.move(part, dst)
+                _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+            seed_signatures(docs, _os.path.join(base, "sig"))
+        stream = _replay(spark, "doc_id long, text string", src)
+        _run(
+            spark,
+            stream,
+            _os.path.join(base, "sig"),
+            _os.path.join(base, "out"),
+            _os.path.join(base, "ckpt"),
         )
-        # slice B's planted copies need slice-A's survivors — derive them
-        # with the batch daily step (fixture work, same derivation as the
-        # oracle; the STREAM recomputes its own flags from seeded state)
-        h0, s0 = DT.history_signatures(docs)
-        _, surv_a, _ = daily_step(
-            (h0, s0), slice_a, day="si_fix", advance=False
+        return (
+            spark.read.parquet(_os.path.join(base, "out"))
+            .drop("batch_id")
+            .localCheckpoint(eager=True)
         )
-        slice_b = surv_a.filter(F.col("doc_id") < DT.AUG_OFFSET + 100).select(
-            (F.col("doc_id") + 3 * DT.AUG_OFFSET).alias("doc_id"), "text"
-        ).unionByName(jitter(5, 5, 75))
-        src = _os.path.join(base, "src")
-        _os.makedirs(src)
-        for i, sl in enumerate((slice_a, slice_b)):
-            tmp = _os.path.join(base, f"w{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = _glob.glob(f"{tmp}/part-*.parquet")[0]
-            dst = _os.path.join(src, f"slice{i}.parquet")
-            shutil.move(part, dst)
-            _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        seed_signatures(docs, _os.path.join(base, "sig"))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    _run(
-        spark,
-        stream,
-        _os.path.join(base, "sig"),
-        _os.path.join(base, "out"),
-        _os.path.join(base, "ckpt"),
-    )
-    result = (
-        spark.read.parquet(_os.path.join(base, "out"))
-        .drop("batch_id")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
 
 
 # --- streaming incremental dedup WITH RETENTION (r9) -----------------------
@@ -7796,8 +7591,6 @@ def stream_incremental_dedup_retention(spark: SparkSession, sf_dir: str) -> Data
     apps/dedup/src/encoder.c:1520)."""
     import glob as _glob
     import os as _os
-    import shutil
-    import tempfile
 
     from .streaming.incremental_dedup_stream import (
         seed_signatures,
@@ -7823,60 +7616,54 @@ def stream_incremental_dedup_retention(spark: SparkSession, sf_dir: str) -> Data
         )
 
     empty = local_rows_df(spark, [], "doc_id long, text string")
-    base = tempfile.mkdtemp(prefix="bensp_stream_ret_")
-    with _fixture_build("stream_incremental_dedup_retention"):
-        slice_a = tokens("ra", 1)
-        slice_b = tokens("rb", 3)
-        # offsets mirror _SR_C_SQL exactly: A-copies at +6·AUG on top of
-        # A's +1·AUG (→ 7·AUG range), B-copies at +5·AUG on top of
-        # B's +3·AUG (→ 8·AUG range), fresh at 9·AUG
-        slice_c = (
-            slice_a.select(
-                (F.col("doc_id") + 6 * DT.AUG_OFFSET).alias("doc_id"), "text"
-            )
-            .unionByName(
-                slice_b.select(
-                    (F.col("doc_id") + 5 * DT.AUG_OFFSET).alias("doc_id"),
-                    "text",
+    with _scratch("bensp_stream_ret_") as base:
+        with _fixture_build("stream_incremental_dedup_retention"):
+            slice_a = tokens("ra", 1)
+            slice_b = tokens("rb", 3)
+            # offsets mirror _SR_C_SQL exactly: A-copies at +6·AUG on top of
+            # A's +1·AUG (→ 7·AUG range), B-copies at +5·AUG on top of
+            # B's +3·AUG (→ 8·AUG range), fresh at 9·AUG
+            slice_c = (
+                slice_a.select(
+                    (F.col("doc_id") + 6 * DT.AUG_OFFSET).alias("doc_id"), "text"
                 )
+                .unionByName(
+                    slice_b.select(
+                        (F.col("doc_id") + 5 * DT.AUG_OFFSET).alias("doc_id"),
+                        "text",
+                    )
+                )
+                .unionByName(tokens("rc", 9))
             )
-            .unionByName(tokens("rc", 9))
+            src = _os.path.join(base, "src")
+            _os.makedirs(src)
+            for i, sl in enumerate((slice_a, slice_b, slice_c)):
+                tmp = _os.path.join(base, f"w{i}")
+                sl.coalesce(1).write.mode("overwrite").parquet(tmp)
+                part = _glob.glob(f"{tmp}/part-*.parquet")[0]
+                dst = _os.path.join(src, f"slice{i}.parquet")
+                shutil.move(part, dst)
+                _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+            # no blooms at toy scale: the size gate skips the probe below the
+            # broadcast crossover anyway, and each expiring roll-up would pay
+            # two full bitset rebuilds — the bloom+rebuild path is covered by
+            # tests/test_streaming.py; flags are identical either way
+            seed_signatures(empty, _os.path.join(base, "sig"), use_bloom=False)
+        stream = _replay(spark, "doc_id long, text string", src)
+        _run(
+            spark,
+            stream,
+            _os.path.join(base, "sig"),
+            _os.path.join(base, "out"),
+            _os.path.join(base, "ckpt"),
+            compact_every=3,
+            retention_window=1,
         )
-        src = _os.path.join(base, "src")
-        _os.makedirs(src)
-        for i, sl in enumerate((slice_a, slice_b, slice_c)):
-            tmp = _os.path.join(base, f"w{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = _glob.glob(f"{tmp}/part-*.parquet")[0]
-            dst = _os.path.join(src, f"slice{i}.parquet")
-            shutil.move(part, dst)
-            _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        # no blooms at toy scale: the size gate skips the probe below the
-        # broadcast crossover anyway, and each expiring roll-up would pay
-        # two full bitset rebuilds — the bloom+rebuild path is covered by
-        # tests/test_streaming.py; flags are identical either way
-        seed_signatures(empty, _os.path.join(base, "sig"), use_bloom=False)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    _run(
-        spark,
-        stream,
-        _os.path.join(base, "sig"),
-        _os.path.join(base, "out"),
-        _os.path.join(base, "ckpt"),
-        compact_every=3,
-        retention_window=1,
-    )
-    result = (
-        spark.read.parquet(_os.path.join(base, "out"))
-        .drop("batch_id")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        return (
+            spark.read.parquet(_os.path.join(base, "out"))
+            .drop("batch_id")
+            .localCheckpoint(eager=True)
+        )
 
 
 @query("pipeline_warc_daily", oracle=None)
@@ -7895,8 +7682,6 @@ def pipeline_warc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch anywhere in the WARC round trip, the HTML extraction, or
     the retention state machine fails the pin."""
     import os as _os
-    import shutil
-    import tempfile
 
     from .operators.text_analysis import extract_html_text
     from .sources.warc import (
@@ -7923,64 +7708,62 @@ def pipeline_warc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_texts, b_texts, c_fresh = day_texts("ra"), day_texts("rb"), day_texts("rc")
     days = [a_texts, b_texts, a_texts + b_texts + c_fresh]
     empty = local_rows_df(spark, [], "doc_id long, text string")
-    base = tempfile.mkdtemp(prefix="bensp_warc_daily_")
-    with _fixture_build("pipeline_warc_daily"):
-        src = _os.path.join(base, "src")
-        _os.makedirs(src)
-        for day, texts in enumerate(days):
-            recs = [("warcinfo", None, b"software: bensp-fixture\r\n")] + [
-                (
-                    "response",
-                    f"https://crawl.example.com/d{day}/{i}",
-                    build_http_response(
-                        f"<html><body><p>{t}</p></body></html>".encode()
-                    ),
-                )
-                for i, t in enumerate(texts)
-            ]
-            fname = f"day-{day:05d}.warc" + (".gz" if day == 1 else "")
-            dst = _os.path.join(src, fname)
-            with open(dst, "wb") as fh:
-                fh.write(build_warc_bytes(recs, gzip_records=(day == 1)))
-            _os.utime(dst, (1_700_000_000 + day, 1_700_000_000 + day))
-        # blooms off for the same reason as stream_incremental_dedup_retention
-        seed_signatures(empty, _os.path.join(base, "sig"), use_bloom=False)
-    pages = read_warc_pages(spark, src, streaming=True, max_files_per_trigger=1)
-    # doc ids reconstruct stream_incremental_dedup_retention's scheme from
-    # (segment, record position): day 0 → +1·AUG, day 1 → +3·AUG, day 2 →
-    # A-copies +7·AUG / B-copies +8·AUG / fresh +9·AUG by position
-    day_no = F.regexp_extract("warc_name", r"day-(\d+)", 1).cast("long")
-    pos = F.col("record_idx") - 1  # warcinfo occupies idx 0
-    aug = F.lit(DT.AUG_OFFSET)
-    doc_id = (
-        F.when(day_no == 0, aug + pos)
-        .when(day_no == 1, 3 * aug + pos)
-        .otherwise(
-            F.when(pos < _SR_N, 7 * aug + pos)
-            .when(pos < 2 * _SR_N, 8 * aug + (pos - _SR_N))
-            .otherwise(9 * aug + (pos - 2 * _SR_N))
+    with _scratch("bensp_warc_daily_") as base:
+        with _fixture_build("pipeline_warc_daily"):
+            src = _os.path.join(base, "src")
+            _os.makedirs(src)
+            for day, texts in enumerate(days):
+                recs = [("warcinfo", None, b"software: bensp-fixture\r\n")] + [
+                    (
+                        "response",
+                        f"https://crawl.example.com/d{day}/{i}",
+                        build_http_response(
+                            f"<html><body><p>{t}</p></body></html>".encode()
+                        ),
+                    )
+                    for i, t in enumerate(texts)
+                ]
+                fname = f"day-{day:05d}.warc" + (".gz" if day == 1 else "")
+                dst = _os.path.join(src, fname)
+                with open(dst, "wb") as fh:
+                    fh.write(build_warc_bytes(recs, gzip_records=(day == 1)))
+                _os.utime(dst, (1_700_000_000 + day, 1_700_000_000 + day))
+            # blooms off for the same reason as stream_incremental_dedup_retention
+            seed_signatures(empty, _os.path.join(base, "sig"), use_bloom=False)
+        pages = read_warc_pages(spark, src, streaming=True, max_files_per_trigger=1)
+        # doc ids reconstruct stream_incremental_dedup_retention's scheme from
+        # (segment, record position): day 0 → +1·AUG, day 1 → +3·AUG, day 2 →
+        # A-copies +7·AUG / B-copies +8·AUG / fresh +9·AUG by position
+        day_no = F.regexp_extract("warc_name", r"day-(\d+)", 1).cast("long")
+        pos = F.col("record_idx") - 1  # warcinfo occupies idx 0
+        aug = F.lit(DT.AUG_OFFSET)
+        doc_id = (
+            F.when(day_no == 0, aug + pos)
+            .when(day_no == 1, 3 * aug + pos)
+            .otherwise(
+                F.when(pos < _SR_N, 7 * aug + pos)
+                .when(pos < 2 * _SR_N, 8 * aug + (pos - _SR_N))
+                .otherwise(9 * aug + (pos - 2 * _SR_N))
+            )
         )
-    )
-    docs_stream = pages.select(
-        doc_id.alias("doc_id"),
-        extract_html_text(F.col("html")).alias("text"),
-    )
-    _run(
-        spark,
-        docs_stream,
-        _os.path.join(base, "sig"),
-        _os.path.join(base, "out"),
-        _os.path.join(base, "ckpt"),
-        compact_every=3,
-        retention_window=1,
-    )
-    result = (
-        spark.read.parquet(_os.path.join(base, "out"))
-        .drop("batch_id")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        docs_stream = pages.select(
+            doc_id.alias("doc_id"),
+            extract_html_text(F.col("html")).alias("text"),
+        )
+        _run(
+            spark,
+            docs_stream,
+            _os.path.join(base, "sig"),
+            _os.path.join(base, "out"),
+            _os.path.join(base, "ckpt"),
+            compact_every=3,
+            retention_window=1,
+        )
+        return (
+            spark.read.parquet(_os.path.join(base, "out"))
+            .drop("batch_id")
+            .localCheckpoint(eager=True)
+        )
 
 
 ORACLES["pipeline_warc_daily"] = ORACLES["stream_incremental_dedup_retention"]

@@ -158,9 +158,10 @@ def pooled_persist(df, key: str):
     queries twice in a bench sweep and dozens of dead generations pile up in
     unified memory, squeezing execution memory (spills) and evicting the
     caches that ARE live. Keeping exactly one generation per call site keeps
-    the benefit (branches share one materialization) without the leak. An
-    unpersisted previous generation silently recomputes if re-executed —
-    slower, never wrong.
+    the benefit (branches share one materialization) without the leak. A
+    pin does NOT recompute: it is a ``localCheckpoint`` with truncated
+    lineage, so an action on a pin whose blocks are lost (executor loss,
+    cleared local storage) fails instead of falling back to its plan.
 
     The handed-out pin is ``localCheckpoint(eager=True)`` rather than a
     bare ``persist()``: a persisted DataFrame still carries its FULL

@@ -46,8 +46,8 @@ _DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 def cache_tables(spark: SparkSession, sf_dir: str) -> None:
     """Persist + materialize every test table for this (session, sf_dir).
 
-    Diagnostic-tool helper only (tools/probe_drift_*, profiling scripts,
-    interactive exploration). bench.py deliberately does NOT call this:
+    Diagnostic-tool helper only (profiling scripts, interactive
+    exploration). bench.py deliberately does NOT call this:
     every timed bench rep must compute from the parquet inputs, so
     persisting base tables ahead of the timed loop would move the scan
     outside the measured region (removed in r11 — OPTIMIZATION_r11.md

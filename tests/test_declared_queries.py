@@ -36,6 +36,53 @@ def test_query_smoke_sf0001(spark, name):
     assert df.count() >= 0
 
 
+#: sha256 of the registry: each QUERIES name + NUL in declaration order,
+#: then each ORACLES entry as name NUL text NUL in name order. A change
+#: that means to add, drop, reorder or re-word a declared query updates
+#: this value; any other change must leave it alone.
+_REGISTRY_SHA256 = "40f24e5256451dc23d6c4db61b6318a2ebb376f0dde3aa60f384b6453aa3e4a0"
+
+
+def test_registry_snapshot_is_unchanged():
+    """The driver-facing surface — query order and every oracle's text —
+    is byte-identical to the pinned snapshot. No SparkSession."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for name in Q.QUERIES:
+        h.update(name.encode() + b"\0")
+    for name, sql in sorted(Q.ORACLES.items()):
+        h.update(name.encode() + b"\0" + sql.encode() + b"\0")
+    assert (len(Q.QUERIES), len(Q.ORACLES)) == (220, 220)
+    assert h.hexdigest() == _REGISTRY_SHA256
+
+
+def test_failing_stream_query_removes_its_temp_dirs(spark, monkeypatch):
+    """A stream query whose sink raises still removes the temp directory
+    it replayed its source from."""
+    import os
+    import tempfile
+
+    from bensp_suite_spark.streaming import text_dedup_stream as TDS
+
+    def failing_sink(*args, **kwargs):
+        raise RuntimeError("sink failed")
+
+    monkeypatch.setattr(TDS, "stream_exact_dedup", failing_sink)
+    # Spark makes its session-wide artifact dir at the first job, not per
+    # query: run one before the snapshot
+    spark.range(1).collect()
+    tmp = tempfile.gettempdir()
+
+    def dirs() -> set[str]:
+        return {n for n in os.listdir(tmp) if os.path.isdir(os.path.join(tmp, n))}
+
+    before = dirs()
+    with pytest.raises(RuntimeError, match="sink failed"):
+        Q.QUERIES["stream_exact_doc_dedup"](spark, SF_CORRECT)
+    assert dirs() - before == set()
+
+
 def test_golden_reference_matches_pins():
     """Anti-self-reference guard: the pinned golden VALUES must equal the
     output of the independent non-Spark reference implementations
