@@ -62,13 +62,25 @@ lock-step; change one, change both):
 from __future__ import annotations
 
 import heapq
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import QUERY_BATCH_LIMIT, _dot, _norm
+from ..session import local_rows_df
+from .similarity import (
+    QUERY_BATCH_LIMIT,
+    _dot,
+    _load_codebooks,
+    _norm,
+    _pq_lloyd,
+    _save_codebooks,
+    ivf_assign,
+    ivf_assign_spill,
+    ivf_centroids,
+)
 
 __all__ = [
     "nsw_build",
@@ -202,34 +214,160 @@ def nsw_build(V: np.ndarray, m: int = 8, ef_build: int = 24) -> list[list[int]]:
     return nbrs
 
 
-def _shard_candidates(
-    qids: np.ndarray, qmat: np.ndarray, m: int, ef_build: int, ef_search: int
-):
-    """Make the applyInPandas shard worker: build the shard's NSW graph,
-    beam-search every query, emit (query_id, neighbor_id) nominations."""
+# ---------------------------------------------------------------------------
+# Per-shard kernels. Every probe, build and upsert below is a thin
+# adapter over these; each keeps the spec's op order (row-wise unit
+# vectors in float64, position order = ascending id at build time, ADC
+# tables as elementwise-mul + sum), so nominations are bit-identical
+# whichever transport carries them.
+# ---------------------------------------------------------------------------
+
+_CAND_SCHEMA = "query_id long, neighbor_id long"
+
+
+def _graph_schema(books: np.ndarray | None) -> str:
+    """Saved graph rows: raw vectors, or PQ codes when ``books`` is set."""
+    vec = "cv array<double>" if books is None else "codes array<int>"
+    return f"shard long, pos long, vec_id long, {vec}, nbrs array<long>"
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: str) -> DataFrame:
+    """(id_as, vec_as) rows of ``df``, the vector cast to array<double>."""
+    return df.select(
+        F.col(id_col).alias(id_as), F.col(vec_col).cast("array<double>").alias(vec_as)
+    )
+
+
+def _unit_rows(vecs) -> np.ndarray:
+    """Row-wise ``v / np.linalg.norm(v)`` in float64 — the spec's unit vectors."""
+    V = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
+    return V / np.linalg.norm(V, axis=1, keepdims=True)
+
+
+def _adc_tables(Q: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Per-query ADC tables against the unit-space codebooks:
+    tab[q, s, c] = dot(q_s, books[s, c]) — elementwise-mul + sum, the
+    exact op the golden mirror uses (row-independent, so a table does not
+    depend on which other queries share its batch)."""
+    S, _C, ds = books.shape
+    qsub = Q.reshape(Q.shape[0], S, ds)
+    return (books[None, :, :, :] * qsub[:, :, None, :]).sum(-1)
+
+
+def _pq_codes(U: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, S) PQ codes of unit vectors; ties -> lowest centroid id."""
+    S, _C, ds = books.shape
+    sub = U.reshape(U.shape[0], S, ds)
+    d2 = ((sub[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1)
+    return d2.argmin(-1)
+
+
+def _shard_graph(pdf: pd.DataFrame, build: tuple[int, int] | None = None):
+    """One shard's graph → (ids, V | codes, nbrs) in position order.
+    With ``build=(m, ef_build)`` the rows are raw (neighbor_id, cv) and
+    the graph is built here (positions = ascending id); otherwise they
+    are saved (pos, vec_id, cv | codes, nbrs) rows."""
+    if build is not None:
+        pdf = pdf.sort_values("neighbor_id")
+        V = _unit_rows(pdf["cv"])
+        ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+        return ids, V, nsw_build(V, m=build[0], ef_build=build[1])
+    pdf = pdf.sort_values("pos")
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    nbrs = [list(map(int, x)) for x in pdf["nbrs"]]
+    if "codes" in pdf:
+        codes = np.array([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
+        return ids, codes, nbrs
+    return ids, _unit_rows(pdf["cv"]), nbrs
+
+
+def _nominate(qids, beams) -> pd.DataFrame:
+    """Per-query beams of neighbor ids → the (query_id, neighbor_id)
+    candidate frame, typed int64 also when there is nothing to nominate."""
+    out_q, out_n = [], []
+    for q, beam in zip(qids, beams):
+        for n in beam:
+            out_q.append(int(q))
+            out_n.append(int(n))
+    return pd.DataFrame(
+        {
+            "query_id": pd.Series(out_q, dtype="int64"),
+            "neighbor_id": pd.Series(out_n, dtype="int64"),
+        }
+    )
+
+
+def _search_shard(pdf: pd.DataFrame, qids, Q, ef_search: int, build=None) -> pd.DataFrame:
+    """Beam every query over one shard's graph and nominate what the
+    beams reach. ``Q`` holds unit query vectors, or the queries' ADC
+    tables when the shard stores PQ codes."""
+    ids, X, nbrs = _shard_graph(pdf, build)
+    beam = nsw_beam_search_adc if "codes" in pdf else nsw_beam_search
+    return _nominate(qids, ([ids[p] for _, p in beam(X, nbrs, q, ef_search)] for q in Q))
+
+
+def _wave_worker(qids, Q, ef_search: int, build=None, probes=None):
+    """applyInPandas worker over ``groupBy("shard")`` for one driver wave:
+    the wave's queries ride in the closure. ``probes`` (cell → rows of
+    ``Q``) restricts each cell to the queries routed to it; a cell that
+    no query probes is skipped without building or reading its graph."""
 
     def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
-        ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-        if len(V) == 0:
-            return pd.DataFrame({"query_id": [], "neighbor_id": []})
-        V = V / np.linalg.norm(V, axis=1, keepdims=True)
-        nbrs = nsw_build(V, m=m, ef_build=ef_build)
-        out_q, out_n = [], []
-        for qi in range(len(qids)):
-            res = nsw_beam_search(V, nbrs, qmat[qi], ef_search)
-            for _, p in res:
-                out_q.append(int(qids[qi]))
-                out_n.append(int(ids[p]))
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(out_q, dtype="int64"),
-                "neighbor_id": pd.Series(out_n, dtype="int64"),
-            }
-        )
+        if probes is None:
+            return _search_shard(pdf, qids, Q, ef_search, build)
+        rows = sorted(probes.get(int(pdf["shard"].iloc[0]), []))
+        if not rows:
+            return _nominate((), ())
+        return _search_shard(pdf, qids[rows], Q[rows], ef_search, build)
 
     return worker
+
+
+def _cogroup_worker(ef_search: int, build=None, books=None):
+    """``cogroup().applyInPandas`` worker: one cell's routed queries meet
+    its graph rows, with zero driver staging. ADC tables are computed per
+    cell from the closure's ``books``."""
+
+    def worker(qpdf: pd.DataFrame, gpdf: pd.DataFrame) -> pd.DataFrame:
+        if qpdf.empty or gpdf.empty:
+            return _nominate((), ())
+        qpdf = qpdf.sort_values("query_id")
+        Q = _unit_rows(qpdf["qv"])
+        if books is not None:
+            Q = _adc_tables(Q, books)
+        qids = qpdf["query_id"].to_numpy(dtype=np.int64)
+        return _search_shard(gpdf, qids, Q, ef_search, build)
+
+    return worker
+
+
+def _waves(q_sel: DataFrame, probe) -> DataFrame:
+    """The family's driver-staged query transport: queries are collected
+    in waves of at most QUERY_BATCH_LIMIT (hash chunks of query_id), each
+    sorted by id and unit-normalized; ``probe(qids, qmat, chunk)`` turns
+    one wave into its candidate DataFrame (``chunk`` is the wave's
+    query_id filter, None for a single wave). → the union of the waves,
+    an empty candidate frame when there are no queries."""
+    # limit-probe instead of a count job: the common queries ≪ corpus
+    # call collects its single wave directly (one driver job instead of
+    # count + collect — measured ~0.2 s per declared-query call)
+    q_head = q_sel.limit(QUERY_BATCH_LIMIT + 1).collect()
+    n_chunks = 1
+    if len(q_head) > QUERY_BATCH_LIMIT:
+        n_chunks = -(-q_sel.count() // QUERY_BATCH_LIMIT)
+    chunk_expr = F.pmod(F.xxhash64(F.col("query_id")), F.lit(n_chunks))
+    parts = []
+    for ci in range(n_chunks):
+        chunk = None if n_chunks == 1 else chunk_expr == ci
+        rows = q_head if chunk is None else q_sel.filter(chunk).collect()
+        if not rows:
+            continue
+        rows.sort(key=lambda r: r["query_id"])
+        qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+        parts.append(probe(qids, _unit_rows([r["qv"] for r in rows]), chunk))
+    if not parts:
+        return local_rows_df(q_sel.sparkSession, [], _CAND_SCHEMA)
+    return reduce(DataFrame.unionByName, parts)
 
 
 def _exact_rerank(cand: DataFrame, q_sel: DataFrame, c_sel: DataFrame, k: int) -> DataFrame:
@@ -254,116 +392,252 @@ def _exact_rerank(cand: DataFrame, q_sel: DataFrame, c_sel: DataFrame, k: int) -
     )
 
 
-_CAND_SCHEMA = "query_id long, neighbor_id long"
+def _route(sel: DataFrame, cent: DataFrame, eps: float, id_col: str) -> DataFrame:
+    """``sel`` (id_col, cv) rows tagged with their cell as ``shard``: the
+    nearest cell, or with ``eps`` > 0 the SPANN closure (every cell
+    within (1+eps) of the nearest)."""
+    assign = (
+        ivf_assign_spill(sel, cent, eps, id_col, "cv")
+        if eps > 0.0
+        else ivf_assign(sel, cent, 1, id_col, "cv")
+    )
+    return sel.join(assign.select(id_col, "cell"), id_col).withColumnRenamed(
+        "cell", "shard"
+    )
 
 
-def _empty_cand() -> pd.DataFrame:
+def _routed_topk(
+    q_sel: DataFrame,
+    c_sel: DataFrame,
+    cent: DataFrame,
+    src: DataFrame,
+    k: int,
+    n_probe: int,
+    ef_search: int,
+    spilled: bool,
+    probe_mode: str,
+    build: tuple[int, int] | None = None,
+    books: np.ndarray | None = None,
+) -> DataFrame:
+    """The routed probe: each query beams only its ``n_probe`` nearest
+    cells' graphs (``src`` rows, grouped by ``shard``), staged on the
+    driver in waves or shuffled to the cells by one cogroup."""
+    qassign = ivf_assign(q_sel, cent, n_probe, "query_id", "qv").select(
+        "query_id", "cell"
+    )
+    if probe_mode == "cogroup":
+        cand = (
+            qassign.join(q_sel, "query_id")
+            .select("cell", "query_id", "qv")
+            .groupBy("cell")
+            .cogroup(src.groupBy("shard"))
+            .applyInPandas(_cogroup_worker(ef_search, build, books), _CAND_SCHEMA)
+        )
+    else:
+
+        def probe(qids, qmat, chunk):
+            qidx = {int(q): i for i, q in enumerate(qids)}
+            probes: dict[int, list[int]] = {}
+            qa = qassign if chunk is None else qassign.filter(chunk)
+            for r in qa.collect():
+                probes.setdefault(int(r["cell"]), []).append(qidx[int(r["query_id"])])
+            Q = qmat if books is None else _adc_tables(qmat, books)
+            return src.groupBy("shard").applyInPandas(
+                _wave_worker(qids, Q, ef_search, build, probes), _CAND_SCHEMA
+            )
+
+        cand = _waves(q_sel, probe)
+    if spilled:
+        # closure assignment puts boundary vectors in several probed
+        # cells — collapse duplicate nominations before the rank window
+        # (a duplicate surviving to row_number would occupy two ranks)
+        cand = cand.distinct()
+    return _exact_rerank(cand, q_sel, c_sel, k)
+
+
+def _graph_rows(shard: int, ids, U, cvs, nbrs, books=None) -> pd.DataFrame:
+    """One shard's saved rows in position order: the raw ``cvs``, or
+    with ``books`` the PQ codes of the unit vectors ``U`` instead."""
+    if books is None:
+        vec = {"cv": cvs}
+    else:
+        vec = {"codes": [list(map(int, c)) for c in _pq_codes(U, books)]}
     return pd.DataFrame(
         {
-            "query_id": pd.Series([], dtype="int64"),
-            "neighbor_id": pd.Series([], dtype="int64"),
+            "shard": np.full(len(ids), shard, dtype=np.int64),
+            "pos": np.arange(len(ids), dtype=np.int64),
+            "vec_id": ids,
+            **vec,
+            "nbrs": [list(map(int, x)) for x in nbrs],
         }
     )
 
 
-def _routed_probe_cogroup(
-    q_sel: DataFrame,
-    qassign: DataFrame,
-    src: DataFrame,
-    prebuilt: bool,
-    m: int,
-    ef_build: int,
-    ef_search: int,
-) -> DataFrame:
-    """Fully-distributed routed probe (zero driver staging): queries
-    shuffle to their probe cells, and each (cell-queries, cell-graph)
-    pair runs inside ONE ``cogroup().applyInPandas`` worker — the
-    same per-row normalization and per-query beam as the wave path, so
-    nominations are bit-identical; only the transport differs."""
+def _build_graphs(sharded: DataFrame, m: int, ef_build: int, books=None) -> DataFrame:
+    """The saves' build: one ``applyInPandas`` group per shard of raw
+    (shard, neighbor_id, cv) rows, the inline probe's own build, so
+    probing a saved index is bit-identical to the inline path. The graph
+    is always built at full precision; ``books`` only changes what is
+    stored per node."""
 
-    def worker(qpdf: pd.DataFrame, gpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or gpdf.empty:
-            return _empty_cand()
-        qpdf = qpdf.sort_values("query_id").reset_index(drop=True)
-        qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-        qmat = np.array([np.asarray(v, dtype=np.float64) for v in qpdf["qv"]])
-        qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-        if prebuilt:
-            gpdf = gpdf.sort_values("pos").reset_index(drop=True)
-            ids = gpdf["vec_id"].to_numpy(dtype=np.int64)
-            V = np.array([np.asarray(v, dtype=np.float64) for v in gpdf["cv"]])
-            V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            nbrs = [list(map(int, x)) for x in gpdf["nbrs"]]
-        else:
-            gpdf = gpdf.sort_values("neighbor_id").reset_index(drop=True)
-            ids = gpdf["neighbor_id"].to_numpy(dtype=np.int64)
-            V = np.array([np.asarray(v, dtype=np.float64) for v in gpdf["cv"]])
-            V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            nbrs = nsw_build(V, m=m, ef_build=ef_build)
-        out_q, out_n = [], []
-        for qi in range(len(qids)):
-            for _, p in nsw_beam_search(V, nbrs, qmat[qi], ef_search):
-                out_q.append(int(qids[qi]))
-                out_n.append(int(ids[p]))
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(out_q, dtype="int64"),
-                "neighbor_id": pd.Series(out_n, dtype="int64"),
-            }
+    def worker(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("neighbor_id")  # raw cv is stored in position order
+        ids, U, nbrs = _shard_graph(pdf, build=(m, ef_build))
+        return _graph_rows(int(pdf["shard"].iloc[0]), ids, U, list(pdf["cv"]), nbrs, books)
+
+    return sharded.groupBy("shard").applyInPandas(worker, _graph_schema(books))
+
+
+def _write_meta(spark, path: str, row: tuple, schema: str) -> None:
+    """Every save writes its meta file LAST (see _FROZEN_META_CACHE)."""
+    local_rows_df(spark, [row], schema).write.mode("overwrite").parquet(path + "/meta")
+
+
+def _read_meta(spark, path: str) -> dict:
+    return spark.read.parquet(path + "/meta").collect()[0].asDict()
+
+
+def _routed_params(meta: dict) -> dict:
+    return {
+        "n_cells": int(meta["n_cells"]),
+        "m": int(meta["m"]),
+        "ef_build": int(meta["ef_build"]),
+        # pre-r9 indexes have no spill column — they were built with the
+        # plain nearest-cell assignment
+        "spill_eps": float(meta.get("spill_eps", 0.0) or 0.0),
+    }
+
+
+def _save_routed(corpus, path, cent, m, ef_build, id_col, vec_col, spill_eps, books=None):
+    """The routed saves' shared body: route the corpus to its cells,
+    build one graph per cell, write graph/ then centroids/ (the caller
+    writes meta/ last)."""
+    c_sel = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+    sharded = _route(c_sel, cent, spill_eps, "neighbor_id")
+    graphs = _build_graphs(sharded, m, ef_build, books)
+    graphs.write.mode("overwrite").partitionBy("shard").parquet(path + "/graph")
+    cent.coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
+
+
+def nsw_ann_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int = 5,
+    n_shards: int = 4,
+    m: int = 8,
+    ef_build: int = 24,
+    ef_search: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    index: tuple[DataFrame, dict] | None = None,
+) -> DataFrame:
+    """Sharded-NSW graph ANN top-k (see module docstring for the spec
+    and the 100 TB sharding story).
+
+    The Python graph only NOMINATES candidates (≤ n_shards·ef_search
+    per query); the returned ranking is exact JVM-side cosine over the
+    nomination union with the family's rounded-cosine + id tiebreaks —
+    so recall is the only approximation, never the scores. Query
+    batches above QUERY_BATCH_LIMIT run in hash-chunked waves.
+    ``index=(graph_df, params)`` from :func:`load_nsw_index` skips the
+    per-call graph build (the mkdb-offline frame) — probing a saved
+    index is bit-identical to the inline path over the same corpus.
+    """
+    q_sel = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    c_sel = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+    if index is None:
+        src = c_sel.withColumn("shard", F.col("neighbor_id") % F.lit(n_shards))
+        build = (m, ef_build)
+    else:
+        src, build = index[0], None
+
+    def probe(qids, qmat, _chunk):
+        return src.groupBy("shard").applyInPandas(
+            _wave_worker(qids, qmat, ef_search, build), _CAND_SCHEMA
         )
 
-    q_cells = qassign.join(q_sel, "query_id").select("cell", "query_id", "qv")
-    return (
-        q_cells.groupBy("cell")
-        .cogroup(src.groupBy("shard"))
-        .applyInPandas(worker, _CAND_SCHEMA)
+    return _exact_rerank(_waves(q_sel, probe), q_sel, c_sel, k)
+
+
+def build_nsw_index(
+    corpus: DataFrame,
+    n_shards: int = 4,
+    m: int = 8,
+    ef_build: int = 24,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Materialize the per-shard NSW adjacency as a DataFrame:
+    (shard, pos, vec_id, cv, nbrs) where ``pos`` is the node's insertion
+    position (ascending vec_id within the shard — the determinism spec)
+    and ``nbrs`` holds shard-local neighbor positions. One
+    ``applyInPandas`` group per shard, exactly the inline build's
+    worker, so probing a saved index is bit-identical to the inline
+    path."""
+    c_sel = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+    sharded = c_sel.withColumn("shard", F.col("neighbor_id") % F.lit(n_shards))
+    return _build_graphs(sharded, m, ef_build)
+
+
+def save_nsw_index(
+    corpus: DataFrame,
+    path: str,
+    n_shards: int = 4,
+    m: int = 8,
+    ef_build: int = 24,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Build + persist the sharded NSW graph (parquet partitioned by
+    shard, parameters alongside) — the mkdb-offline frame every other
+    index family here has: the build is paid once, probes pay only the
+    beam search. Rebuilding one shard after a lost ingest batch rewrites
+    one partition, never the index."""
+    idx = build_nsw_index(corpus, n_shards, m, ef_build, id_col, vec_col)
+    idx.write.mode("overwrite").partitionBy("shard").parquet(path + "/graph")
+    _write_meta(
+        corpus.sparkSession, path, (int(n_shards), int(m), int(ef_build)),
+        "n_shards int, m int, ef_build int",
     )
 
 
-def _routed_pq_probe_cogroup(
-    q_sel: DataFrame,
-    qassign: DataFrame,
-    graph_df: DataFrame,
-    books: np.ndarray,
-    ef_search: int,
-) -> DataFrame:
-    """ADC twin of :func:`_routed_probe_cogroup`: per-query ADC tables
-    are computed inside the worker from the closure's codebooks — same
-    elementwise-mul + sum as the wave path, row-independent, so tables
-    (and beams) are bit-identical."""
-    S, C, ds = books.shape
+def load_nsw_index(spark, path: str) -> tuple[DataFrame, dict]:
+    """→ (graph DataFrame, params) for ``nsw_ann_topk(index=…)``. The
+    params collect is memoized per (session, path, meta mtime) — meta is
+    frozen post-save; the graph read stays fresh (see _frozen_memo)."""
 
-    def worker(qpdf: pd.DataFrame, gpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or gpdf.empty:
-            return _empty_cand()
-        qpdf = qpdf.sort_values("query_id").reset_index(drop=True)
-        qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-        qmat = np.array([np.asarray(v, dtype=np.float64) for v in qpdf["qv"]])
-        qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-        qsub = qmat.reshape(qmat.shape[0], S, ds)
-        tables = (books[None, :, :, :] * qsub[:, :, None, :]).sum(-1)
-        gpdf = gpdf.sort_values("pos").reset_index(drop=True)
-        ids = gpdf["vec_id"].to_numpy(dtype=np.int64)
-        codes = np.array([np.asarray(c, dtype=np.int64) for c in gpdf["codes"]])
-        nbrs = [list(map(int, x)) for x in gpdf["nbrs"]]
-        out_q, out_n = [], []
-        for qi in range(len(qids)):
-            for _, p in nsw_beam_search_adc(codes, nbrs, tables[qi], ef_search):
-                out_q.append(int(qids[qi]))
-                out_n.append(int(ids[p]))
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(out_q, dtype="int64"),
-                "neighbor_id": pd.Series(out_n, dtype="int64"),
-            }
-        )
+    def _load_frozen():
+        meta = _read_meta(spark, path)
+        return ({k: int(meta[k]) for k in ("n_shards", "m", "ef_build")},)
 
-    q_cells = qassign.join(q_sel, "query_id").select("cell", "query_id", "qv")
-    return (
-        q_cells.groupBy("cell")
-        .cogroup(graph_df.groupBy("shard"))
-        .applyInPandas(worker, _CAND_SCHEMA)
+    (params,) = _frozen_memo(spark, path, _load_frozen)
+    return (spark.read.parquet(path + "/graph"), params)
+
+
+def upsert_nsw_index(
+    new: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Append new vectors to a saved NSW index by CONTINUING each
+    shard's deterministic insertion sequence (new nodes take positions
+    after the existing ones, ascending id; the degree-cap prune may
+    rewire existing nodes, so touched shard partitions are rewritten).
+
+    Append-only id discipline ⇒ exact rebuild equivalence: if every new
+    id is greater than every indexed id, the continued insertion order
+    IS the full rebuild's order, so the upserted graph is bit-identical
+    to ``save_nsw_index`` over the union (tested). Interleaved ids still
+    yield a valid NSW graph — insertion order is part of the graph's
+    identity, as in every incremental HNSW deployment — but not the
+    rebuild's; keep ingest batches id-monotone if you need replayable
+    parity."""
+    graph, params = load_nsw_index(new.sparkSession, path)
+    add = _vectors(new, id_col, vec_col, "vec_id", "cv").withColumn(
+        "shard", F.col("vec_id") % F.lit(params["n_shards"])
     )
+    _continue_shards(add, graph, path, params["m"], params["ef_build"])
 
 
 def nsw_routed_ann_topk(
@@ -411,181 +685,20 @@ def nsw_routed_ann_topk(
     of streamed queries never serialize through the driver. Nomination
     sets are bit-identical (same per-row normalization, same per-query
     beam): tests pin parity."""
-    from .similarity import ivf_assign, ivf_assign_spill, ivf_centroids
-
-    q_sel = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    c_sel = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
+    q_sel = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    c_sel = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
     if index is not None:
         # prebuilt routed index (save_nsw_routed_index): centroids route
         # the queries, per-cell graphs were built at save time
-        cent, graph_df, _params = index
-        sharded = None
-        spilled = float(_params.get("spill_eps", 0.0)) > 0.0
+        cent, src, params = index
+        spilled, build = float(params.get("spill_eps", 0.0)) > 0.0, None
     else:
         cent = ivf_centroids(corpus, n_cells, id_col, vec_col)
-        if spill_eps > 0.0:
-            cassign = ivf_assign_spill(
-                c_sel, cent, spill_eps, "neighbor_id", "cv"
-            ).select("neighbor_id", "cell")
-        else:
-            cassign = ivf_assign(c_sel, cent, 1, "neighbor_id", "cv").select(
-                "neighbor_id", "cell"
-            )
-        sharded = c_sel.join(cassign, "neighbor_id").withColumnRenamed(
-            "cell", "shard"
-        )
-        spilled = spill_eps > 0.0
-    qassign = ivf_assign(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        cent,
-        n_probe,
-        "query_id",
-        "qv",
-    ).select("query_id", "cell")
-
-    if probe_mode == "cogroup":
-        src = graph_df if index is not None else sharded
-        cand = _routed_probe_cogroup(
-            q_sel, qassign, src,
-            prebuilt=index is not None, m=m, ef_build=ef_build,
-            ef_search=ef_search,
-        )
-        if spilled:
-            cand = cand.distinct()
-        return _exact_rerank(cand, q_sel, c_sel, k)
-
-    # limit-probe instead of a count job: the common queries ≪ corpus
-    # call collects its single wave directly (one driver job instead of
-    # count + collect — measured ~0.2 s per declared-query call)
-    q_head = q_sel.limit(QUERY_BATCH_LIMIT + 1).collect()
-    if len(q_head) <= QUERY_BATCH_LIMIT:
-        n_chunks = 1
-    else:
-        n_q = q_sel.count()
-        n_chunks = max(1, -(-n_q // QUERY_BATCH_LIMIT))
-    chunk_expr = F.pmod(F.xxhash64(F.col("query_id")), F.lit(n_chunks))
-    cand_parts = []
-    for ci in range(n_chunks):
-        qc = q_sel if n_chunks == 1 else q_sel.filter(chunk_expr == ci)
-        rows = q_head if n_chunks == 1 else qc.collect()
-        if not rows:
-            continue
-        rows.sort(key=lambda r: r["query_id"])
-        qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
-        qmat = np.array([r["qv"] for r in rows], dtype=np.float64)
-        qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-        qidx = {int(q): i for i, q in enumerate(qids)}
-        qa = qassign if n_chunks == 1 else qassign.filter(chunk_expr == ci)
-        probes: dict[int, list[int]] = {}
-        for r in qa.collect():
-            probes.setdefault(int(r["cell"]), []).append(qidx[int(r["query_id"])])
-
-        def make_worker(probes=probes, qids=qids, qmat=qmat, prebuilt=(index is not None)):
-            def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-                cell = int(pdf["shard"].iloc[0])
-                probing = sorted(probes.get(cell, []))
-                if not probing:
-                    return pd.DataFrame(
-                        {
-                            "query_id": pd.Series([], dtype="int64"),
-                            "neighbor_id": pd.Series([], dtype="int64"),
-                        }
-                    )
-                if prebuilt:
-                    pdf = pdf.sort_values("pos").reset_index(drop=True)
-                    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                    V = np.array(
-                        [np.asarray(v, dtype=np.float64) for v in pdf["cv"]]
-                    )
-                    V = V / np.linalg.norm(V, axis=1, keepdims=True)
-                    nbrs = [list(map(int, x)) for x in pdf["nbrs"]]
-                else:
-                    pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
-                    ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-                    V = np.array(
-                        [np.asarray(v, dtype=np.float64) for v in pdf["cv"]]
-                    )
-                    V = V / np.linalg.norm(V, axis=1, keepdims=True)
-                    nbrs = nsw_build(V, m=m, ef_build=ef_build)
-                out_q, out_n = [], []
-                for qi in probing:
-                    for _, p in nsw_beam_search(V, nbrs, qmat[qi], ef_search):
-                        out_q.append(int(qids[qi]))
-                        out_n.append(int(ids[p]))
-                return pd.DataFrame(
-                    {
-                        "query_id": pd.Series(out_q, dtype="int64"),
-                        "neighbor_id": pd.Series(out_n, dtype="int64"),
-                    }
-                )
-
-            return worker
-
-        src = graph_df if index is not None else sharded
-        cand_parts.append(
-            src.groupBy("shard").applyInPandas(
-                make_worker(), "query_id long, neighbor_id long"
-            )
-        )
-    cand = cand_parts[0]
-    for extra in cand_parts[1:]:
-        cand = cand.unionByName(extra)
-    if spilled:
-        # closure assignment puts boundary vectors in several probed
-        # cells — collapse duplicate nominations before the rank window
-        # (a duplicate surviving to row_number would occupy two ranks)
-        cand = cand.distinct()
-    return _exact_rerank(cand, q_sel, c_sel, k)
-
-
-def build_nsw_index(
-    corpus: DataFrame,
-    n_shards: int = 4,
-    m: int = 8,
-    ef_build: int = 24,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Materialize the per-shard NSW adjacency as a DataFrame:
-    (shard, pos, vec_id, cv, nbrs) where ``pos`` is the node's insertion
-    position (ascending vec_id within the shard — the determinism spec)
-    and ``nbrs`` holds shard-local neighbor positions. One
-    ``applyInPandas`` group per shard, exactly the inline build's
-    worker, so probing a saved index is bit-identical to the inline
-    path."""
-
-    def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-        if len(V) == 0:
-            return pd.DataFrame(
-                {"shard": [], "pos": [], "vec_id": [], "cv": [], "nbrs": []}
-            )
-        U = V / np.linalg.norm(V, axis=1, keepdims=True)
-        nbrs = nsw_build(U, m=m, ef_build=ef_build)
-        return pd.DataFrame(
-            {
-                "shard": pdf["shard"].astype("int64"),
-                "pos": pd.Series(range(len(V)), dtype="int64"),
-                "vec_id": pdf["neighbor_id"].astype("int64"),
-                "cv": pdf["cv"],
-                "nbrs": [list(map(int, x)) for x in nbrs],
-            }
-        )
-
-    c_sel = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("shard", F.col("neighbor_id") % F.lit(n_shards))
-    return c_sel.groupBy("shard").applyInPandas(
-        worker,
-        "shard long, pos long, vec_id long, cv array<double>, nbrs array<long>",
+        src = _route(c_sel, cent, spill_eps, "neighbor_id")
+        spilled, build = spill_eps > 0.0, (m, ef_build)
+    return _routed_topk(
+        q_sel, c_sel, cent, src, k, n_probe, ef_search,
+        spilled=spilled, probe_mode=probe_mode, build=build,
     )
 
 
@@ -608,54 +721,13 @@ def save_nsw_routed_index(
     cell graphs over the SPANN closure assignment (boundary vectors join
     every cell within (1+eps) of their nearest) and is persisted in the
     meta so the probe knows to collapse duplicate nominations."""
-    from .similarity import ivf_assign, ivf_assign_spill, ivf_centroids
-
     cent = ivf_centroids(corpus, n_cells, id_col, vec_col)
-    c_sel = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    assign = (
-        ivf_assign_spill(c_sel, cent, spill_eps, "neighbor_id", "cv")
-        if spill_eps > 0.0
-        else ivf_assign(c_sel, cent, 1, "neighbor_id", "cv")
-    )
-    sharded = (
-        c_sel.join(
-            assign.select("neighbor_id", "cell"),
-            "neighbor_id",
-        ).withColumnRenamed("cell", "shard")
-    )
-
-    def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-        U = V / np.linalg.norm(V, axis=1, keepdims=True)
-        nbrs = nsw_build(U, m=m, ef_build=ef_build)
-        return pd.DataFrame(
-            {
-                "shard": pdf["shard"].astype("int64"),
-                "pos": pd.Series(range(len(V)), dtype="int64"),
-                "vec_id": pdf["neighbor_id"].astype("int64"),
-                "cv": pdf["cv"],
-                "nbrs": [list(map(int, x)) for x in nbrs],
-            }
-        )
-
-    idx = sharded.groupBy("shard").applyInPandas(
-        worker,
-        "shard long, pos long, vec_id long, cv array<double>, nbrs array<long>",
-    )
-    idx.write.mode("overwrite").partitionBy("shard").parquet(path + "/graph")
-    cent.coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
-    spark = corpus.sparkSession
-    from ..session import local_rows_df as _ldf
-
-    _ldf(
-        spark,
-        [(int(n_cells), int(m), int(ef_build), float(spill_eps))],
+    _save_routed(corpus, path, cent, m, ef_build, id_col, vec_col, spill_eps)
+    _write_meta(
+        corpus.sparkSession, path,
+        (int(n_cells), int(m), int(ef_build), float(spill_eps)),
         "n_cells int, m int, ef_build int, spill_eps double",
-    ).write.mode("overwrite").parquet(path + "/meta")
+    )
 
 
 def load_nsw_routed_index(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
@@ -664,22 +736,59 @@ def load_nsw_routed_index(spark, path: str) -> tuple[DataFrame, DataFrame, dict]
     path, meta mtime); the graph read stays fresh (see _frozen_memo)."""
 
     def _load_frozen():
-        meta = spark.read.parquet(path + "/meta").collect()[0]
-        row = meta.asDict()
-        return (
-            spark.read.parquet(path + "/centroids"),
-            {
-                "n_cells": int(row["n_cells"]),
-                "m": int(row["m"]),
-                "ef_build": int(row["ef_build"]),
-                # pre-r9 indexes have no spill column — they were built
-                # with the plain nearest-cell assignment
-                "spill_eps": float(row.get("spill_eps", 0.0) or 0.0),
-            },
-        )
+        params = _routed_params(_read_meta(spark, path))
+        return (spark.read.parquet(path + "/centroids"), params)
 
     cent, params = _frozen_memo(spark, path, _load_frozen)
     return (cent, spark.read.parquet(path + "/graph"), params)
+
+
+def upsert_nsw_routed_index(
+    new: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Append new vectors to a saved ROUTED index: assignment against the
+    PERSISTED centroids (spill-aware — the index's own spill_eps rides
+    its meta), then each touched cell CONTINUES its deterministic
+    insertion sequence; only touched cell partitions rewrite.
+
+    Rebuild equivalence: ``ivf_centroids`` is the deterministic
+    lowest-id rule, so if every new id is GREATER than every indexed id a
+    full ``save_nsw_routed_index`` over the union picks the SAME
+    centroids, the same cell membership, and the same per-cell insertion
+    order — the upserted index is bit-identical to the rebuild (tested).
+    Interleaved ids still yield a valid index against the frozen
+    centroids; keep ingest id-monotone for replayable parity.
+
+    REPLAY-IDEMPOTENT: (shard, vec_id) pairs already present are dropped
+    before insertion, so retrying the same upsert (a crashed streaming
+    batch, a double-scheduled job) converges to the once-applied index
+    instead of duplicating nodes — the contract the streaming
+    index-maintenance loop relies on."""
+    cent, graph, params = load_nsw_routed_index(new.sparkSession, path)
+    n_sel = _vectors(new, id_col, vec_col, "vec_id", "cv")
+    add = _route(n_sel, cent, params.get("spill_eps", 0.0), "vec_id")
+    # REPLAY-IDEMPOTENT: drop (shard, vec_id) pairs the graph already
+    # holds — assignment is deterministic against frozen centroids, so a
+    # retried upsert (a crashed streaming batch, a double-scheduled job)
+    # re-derives the same pairs and every already-written shard drops out
+    # of `touched` instead of receiving duplicate nodes; a second full
+    # replay is a no-op. Fresh ingest is unaffected (nothing matches).
+    # Persisted: feeds both the touched-shard collect and the rebuild
+    # plan — one assignment-UDF pass instead of one per action.
+    add = add.join(
+        graph.select("shard", "vec_id"), ["shard", "vec_id"], "left_anti"
+    ).persist()
+    try:
+        _continue_shards(add, graph, path, params["m"], params["ef_build"])
+    finally:
+        add.unpersist()
+
+
+#: column names of the routed-PQ index's books/ table
+_NSW_BOOK_COLS = ("s", "c", "vec")
 
 
 def _unit_pq_codebooks(
@@ -697,8 +806,6 @@ def _unit_pq_codebooks(
     the per-cell encode and the independent golden mirror share one IEEE
     op sequence end to end. Bounded driver sample, same contract as
     ``similarity.pq_codebooks``."""
-    from .similarity import _pq_lloyd
-
     rows = (
         corpus.filter(F.col(id_col) < train_sample)
         .orderBy(id_col)
@@ -708,6 +815,7 @@ def _unit_pq_codebooks(
     mat = np.array([r["v"] for r in rows], dtype=np.float64)
     mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     return _pq_lloyd(mat, n_subspaces, n_centroids, 8)
+
 
 
 def save_nsw_routed_pq_index(
@@ -734,66 +842,126 @@ def save_nsw_routed_pq_index(
     recovered by ef_search, never wrong answers. Codebooks train on unit
     vectors (the beams' coding space) and persist beside the graph;
     ``spill_eps`` composes the SPANN closure assignment."""
-    from .similarity import ivf_assign, ivf_assign_spill, ivf_centroids
-
     cent = ivf_centroids(corpus, n_cells, id_col, vec_col)
     books = _unit_pq_codebooks(corpus, n_subspaces, n_centroids, id_col, vec_col)
-    c_sel = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    assign = (
-        ivf_assign_spill(c_sel, cent, spill_eps, "neighbor_id", "cv")
-        if spill_eps > 0.0
-        else ivf_assign(c_sel, cent, 1, "neighbor_id", "cv")
-    )
-    sharded = c_sel.join(
-        assign.select("neighbor_id", "cell"), "neighbor_id"
-    ).withColumnRenamed("cell", "shard")
-    S, C, ds = books.shape
-
-    def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-        U = V / np.linalg.norm(V, axis=1, keepdims=True)
-        nbrs = nsw_build(U, m=m, ef_build=ef_build)  # full-precision build
-        sub = U.reshape(U.shape[0], S, ds)
-        d2 = ((sub[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1)
-        codes = d2.argmin(-1)  # (n, S); ties -> lowest centroid id
-        return pd.DataFrame(
-            {
-                "shard": pdf["shard"].astype("int64"),
-                "pos": pd.Series(range(len(U)), dtype="int64"),
-                "vec_id": pdf["neighbor_id"].astype("int64"),
-                "codes": [list(map(int, c)) for c in codes],
-                "nbrs": [list(map(int, x)) for x in nbrs],
-            }
-        )
-
-    idx = sharded.groupBy("shard").applyInPandas(
-        worker,
-        "shard long, pos long, vec_id long, codes array<int>, nbrs array<long>",
-    )
-    idx.write.mode("overwrite").partitionBy("shard").parquet(path + "/graph")
-    cent.coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
+    _save_routed(corpus, path, cent, m, ef_build, id_col, vec_col, spill_eps, books)
     spark = corpus.sparkSession
-    from ..session import local_rows_df as _ldf
-
-    _ldf(
-        spark,
-        [
-            (int(s), int(c), books[s, c].tolist())
-            for s in range(S)
-            for c in range(C)
-        ],
-        "s int, c int, vec array<double>",
-    ).write.mode("overwrite").parquet(path + "/books")
-    _ldf(
-        spark,
-        [(int(n_cells), int(m), int(ef_build), int(S), int(C), float(spill_eps))],
+    _save_codebooks(spark, books, path + "/books", _NSW_BOOK_COLS)
+    S, C, _ds = books.shape
+    _write_meta(
+        spark, path,
+        (int(n_cells), int(m), int(ef_build), int(S), int(C), float(spill_eps)),
         "n_cells int, m int, ef_build int, n_subspaces int, "
         "n_centroids int, spill_eps double",
-    ).write.mode("overwrite").parquet(path + "/meta")
+    )
+
+
+def load_nsw_routed_pq_index(
+    spark, path: str
+) -> tuple[DataFrame, DataFrame, np.ndarray, dict]:
+    """→ (centroids, graph, codebooks, params) for
+    ``nsw_routed_pq_ann_topk``. The codebook fetch is bounded (S·C
+    rows). Meta/books/centroids are frozen post-save (upserts rewrite
+    only graph shards), so their collects are memoized per (session,
+    path, meta mtime); the graph read is always fresh."""
+
+    def _load_frozen():
+        params = _routed_params(_read_meta(spark, path))
+        books = _load_codebooks(spark, path + "/books", _NSW_BOOK_COLS)
+        return (spark.read.parquet(path + "/centroids"), books, params)
+
+    cent, books, params = _frozen_memo(spark, path, _load_frozen)
+    return (cent, spark.read.parquet(path + "/graph"), books, params)
+
+
+def nsw_routed_pq_ann_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    index: tuple[DataFrame, DataFrame, np.ndarray, dict],
+    k: int = 5,
+    n_probe: int = 2,
+    ef_search: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    probe_mode: str = "waves",
+) -> DataFrame:
+    """Probe a :func:`save_nsw_routed_pq_index` index: queries route to
+    their ``n_probe`` nearest cells (the routed family's assignment),
+    each probed cell beams with ADC over its nodes' PQ CODES
+    (:func:`nsw_beam_search_adc` — the shard holds no raw vectors), and
+    the nomination union exact-reranks against the raw corpus table.
+    Per-query cost: n_probe beams over 8-byte codes + refine-sized exact
+    cosine — the memory-bound rung of the routed ladder. Wave-chunked
+    above QUERY_BATCH_LIMIT like the whole family; ``probe_mode=
+    "cogroup"`` runs the fully-distributed probe instead (zero driver
+    collect — see nsw_routed_ann_topk)."""
+    cent, graph_df, books, params = index
+    return _routed_topk(
+        _vectors(queries, id_col, vec_col, "query_id", "qv"),
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv"),
+        cent, graph_df, k, n_probe, ef_search,
+        spilled=params.get("spill_eps", 0.0) > 0.0, probe_mode=probe_mode,
+        books=books,
+    )
+
+
+def upsert_nsw_routed_pq_index(
+    new: DataFrame,
+    corpus: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Append new vectors to a saved routed-PQ index — DiskANN-style
+    maintenance: the shards hold only codes + adjacency, so the touched
+    cells' RAW vectors are recovered from ``corpus`` (the lake-resident
+    table the exact re-rank already reads; it must contain the indexed
+    vectors), insertion continues at FULL precision, and every node
+    re-encodes against the FROZEN persisted codebooks (deterministic
+    encode ⇒ old nodes' codes are reproduced bit-for-bit; new codes use
+    the frozen books — the add-vs-retrain contract of ``upsert_pq_index``:
+    codes stay cell-independent and valid, retraining is an explicit
+    rebuild). With id-monotone ingest above the codebook train-sample
+    window the upserted index equals a full rebuild over the union
+    bit-for-bit (same centroids, same train slice, same insertion order —
+    tested); below it, rebuild would retrain the books, which is exactly
+    the retrain decision this function refuses to make silently.
+    Replay-idempotent like :func:`upsert_nsw_routed_index` — retried
+    upserts drop their already-indexed (shard, vec_id) pairs."""
+    cent, graph, books, params = load_nsw_routed_pq_index(new.sparkSession, path)
+    n_sel = _vectors(new, id_col, vec_col, "vec_id", "cv")
+    add = _route(n_sel, cent, params.get("spill_eps", 0.0), "vec_id")
+    # replay-idempotent, same argument as upsert_nsw_routed_index: a
+    # retried batch's already-written (shard, vec_id) pairs drop out.
+    # Persisted: the anti-joined assignment feeds BOTH the bounded
+    # touched-shard collect and the rebuild plan — without the pin the
+    # per-row assignment UDF pass runs once per action (r11 verdict
+    # item: batch the shard-touch discovery instead of re-deriving it).
+    add = add.join(
+        graph.select("shard", "vec_id"), ["shard", "vec_id"], "left_anti"
+    ).persist()
+    # fail LOUDLY if the corpus is missing any indexed vector: an inner
+    # join would silently drop those nodes, _continue_insertion would
+    # renumber positions, and surviving nbrs arrays would point at the
+    # old positions — a quietly corrupted graph (r9 ADVICE). The check
+    # rides the rebuild pass itself (LEFT join; a null cv on an indexed
+    # row raises inside the worker, before any shard write) instead of
+    # paying a separate per-batch anti-join job.
+    raw = _vectors(corpus, id_col, vec_col, "vec_id", "cv")
+    recovered = graph.select("shard", "pos", "vec_id", "nbrs").join(raw, "vec_id", "left")
+    try:
+        _continue_shards(add, recovered, path, params["m"], params["ef_build"], books)
+    except Exception as exc:
+        # surface the worker-side guard as the API's documented
+        # ValueError (the raise happens during the pre-write
+        # materialization, so no shard partition was rewritten)
+        msg = str(exc)
+        tag = "corpus is missing raw vectors"
+        if tag in msg:
+            raise ValueError(msg[msg.index(tag):].split("\n")[0]) from exc
+        raise
+    finally:
+        add.unpersist()
 
 
 #: (applicationId, path, meta_stamp) → the FROZEN parts of a saved index
@@ -830,9 +998,11 @@ def _frozen_memo(spark, path: str, loader):
     key = (spark.sparkContext.applicationId, path, stamp)
     got = _FROZEN_META_CACHE.get(key)
     if got is None:
-        # evict stale stamps of the same (session, path)
+        # evict stale stamps of the same (session, path), and every entry
+        # of a stopped session: a process has one live SparkContext, so a
+        # handle bound to another applicationId can never be served again
         for k in [
-            k for k in _FROZEN_META_CACHE if k[0] == key[0] and k[1] == path
+            k for k in _FROZEN_META_CACHE if k[0] != key[0] or k[1] == path
         ]:
             del _FROZEN_META_CACHE[k]
         got = loader()
@@ -840,243 +1010,13 @@ def _frozen_memo(spark, path: str, loader):
     return got
 
 
-def load_nsw_routed_pq_index(
-    spark, path: str
-) -> tuple[DataFrame, DataFrame, np.ndarray, dict]:
-    """→ (centroids, graph, codebooks, params) for
-    ``nsw_routed_pq_ann_topk``. The codebook fetch is bounded (S·C
-    rows). Meta/books/centroids are frozen post-save (upserts rewrite
-    only graph shards), so their collects are memoized per (session,
-    path, meta mtime); the graph read is always fresh."""
-
-    def _load_frozen():
-        meta = spark.read.parquet(path + "/meta").collect()[0].asDict()
-        S, C = int(meta["n_subspaces"]), int(meta["n_centroids"])
-        brows = spark.read.parquet(path + "/books").collect()
-        books = np.zeros((S, C, len(brows[0]["vec"])), dtype=np.float64)
-        for r in brows:
-            books[int(r["s"]), int(r["c"])] = np.asarray(
-                r["vec"], dtype=np.float64
-            )
-        return (
-            spark.read.parquet(path + "/centroids"),
-            books,
-            {
-                "n_cells": int(meta["n_cells"]),
-                "m": int(meta["m"]),
-                "ef_build": int(meta["ef_build"]),
-                "spill_eps": float(meta.get("spill_eps", 0.0) or 0.0),
-            },
-        )
-
-    cent, books, params = _frozen_memo(spark, path, _load_frozen)
-    return (cent, spark.read.parquet(path + "/graph"), books, params)
-
-
-def nsw_routed_pq_ann_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    index: tuple[DataFrame, DataFrame, np.ndarray, dict],
-    k: int = 5,
-    n_probe: int = 2,
-    ef_search: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_mode: str = "waves",
-) -> DataFrame:
-    """Probe a :func:`save_nsw_routed_pq_index` index: queries route to
-    their ``n_probe`` nearest cells (the routed family's assignment),
-    each probed cell beams with ADC over its nodes' PQ CODES
-    (:func:`nsw_beam_search_adc` — the shard holds no raw vectors), and
-    the nomination union exact-reranks against the raw corpus table.
-    Per-query cost: n_probe beams over 8-byte codes + refine-sized exact
-    cosine — the memory-bound rung of the routed ladder. Wave-chunked
-    above QUERY_BATCH_LIMIT like the whole family; ``probe_mode=
-    "cogroup"`` runs the fully-distributed probe instead (zero driver
-    collect — see nsw_routed_ann_topk)."""
-    from .similarity import ivf_assign
-
-    cent, graph_df, books, params = index
-    spilled = params.get("spill_eps", 0.0) > 0.0
-    S, C, ds = books.shape
-    q_sel = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    c_sel = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    qassign = ivf_assign(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        cent,
-        n_probe,
-        "query_id",
-        "qv",
-    ).select("query_id", "cell")
-    if probe_mode == "cogroup":
-        cand = _routed_pq_probe_cogroup(
-            q_sel, qassign, graph_df, books, ef_search
-        )
-        if spilled:
-            cand = cand.distinct()
-        return _exact_rerank(cand, q_sel, c_sel, k)
-    # limit-probe instead of a count job: the common queries ≪ corpus
-    # call collects its single wave directly (one driver job instead of
-    # count + collect — measured ~0.2 s per declared-query call)
-    q_head = q_sel.limit(QUERY_BATCH_LIMIT + 1).collect()
-    if len(q_head) <= QUERY_BATCH_LIMIT:
-        n_chunks = 1
-    else:
-        n_q = q_sel.count()
-        n_chunks = max(1, -(-n_q // QUERY_BATCH_LIMIT))
-    chunk_expr = F.pmod(F.xxhash64(F.col("query_id")), F.lit(n_chunks))
-    cand_parts = []
-    for ci in range(n_chunks):
-        qc = q_sel if n_chunks == 1 else q_sel.filter(chunk_expr == ci)
-        rows = q_head if n_chunks == 1 else qc.collect()
-        if not rows:
-            continue
-        rows.sort(key=lambda r: r["query_id"])
-        qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
-        qmat = np.array([r["qv"] for r in rows], dtype=np.float64)
-        qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-        # per-query ADC tables against the unit-space codebooks:
-        # tab[q, s, c] = dot(q_s, books[s, c]) — elementwise-mul + sum,
-        # the exact op the golden mirror uses
-        qsub = qmat.reshape(qmat.shape[0], S, ds)
-        tables = (books[None, :, :, :] * qsub[:, :, None, :]).sum(-1)
-        qidx = {int(q): i for i, q in enumerate(qids)}
-        qa = qassign if n_chunks == 1 else qassign.filter(chunk_expr == ci)
-        probes: dict[int, list[int]] = {}
-        for r in qa.collect():
-            probes.setdefault(int(r["cell"]), []).append(qidx[int(r["query_id"])])
-
-        def make_worker(probes=probes, qids=qids, tables=tables):
-            def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-                cell = int(pdf["shard"].iloc[0])
-                probing = sorted(probes.get(cell, []))
-                if not probing:
-                    return pd.DataFrame(
-                        {
-                            "query_id": pd.Series([], dtype="int64"),
-                            "neighbor_id": pd.Series([], dtype="int64"),
-                        }
-                    )
-                pdf = pdf.sort_values("pos").reset_index(drop=True)
-                ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                codes = np.array(
-                    [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-                )
-                nbrs = [list(map(int, x)) for x in pdf["nbrs"]]
-                out_q, out_n = [], []
-                for qi in probing:
-                    for _, p in nsw_beam_search_adc(
-                        codes, nbrs, tables[qi], ef_search
-                    ):
-                        out_q.append(int(qids[qi]))
-                        out_n.append(int(ids[p]))
-                return pd.DataFrame(
-                    {
-                        "query_id": pd.Series(out_q, dtype="int64"),
-                        "neighbor_id": pd.Series(out_n, dtype="int64"),
-                    }
-                )
-
-            return worker
-
-        cand_parts.append(
-            graph_df.groupBy("shard").applyInPandas(
-                make_worker(), "query_id long, neighbor_id long"
-            )
-        )
-    if not cand_parts:
-        from ..session import local_rows_df as _ldf
-
-        return _ldf(
-            queries.sparkSession,
-            [],
-            "query_id long, neighbor_id long, rank int, cosine double",
-        )
-    cand = cand_parts[0]
-    for extra in cand_parts[1:]:
-        cand = cand.unionByName(extra)
-    if spilled:
-        cand = cand.distinct()
-    return _exact_rerank(cand, q_sel, c_sel, k)
-
-
-def save_nsw_index(
-    corpus: DataFrame,
-    path: str,
-    n_shards: int = 4,
-    m: int = 8,
-    ef_build: int = 24,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def _continue_shards(
+    add: DataFrame, graph: DataFrame, path: str, m: int, ef_build: int, books=None
 ) -> None:
-    """Build + persist the sharded NSW graph (parquet partitioned by
-    shard, parameters alongside) — the mkdb-offline frame every other
-    index family here has: the build is paid once, probes pay only the
-    beam search. Rebuilding one shard after a lost ingest batch rewrites
-    one partition, never the index."""
-    idx = build_nsw_index(corpus, n_shards, m, ef_build, id_col, vec_col)
-    idx.write.mode("overwrite").partitionBy("shard").parquet(path + "/graph")
-    spark = corpus.sparkSession
-    from ..session import local_rows_df as _ldf
-
-    _ldf(
-        spark,
-        [(int(n_shards), int(m), int(ef_build))],
-        "n_shards int, m int, ef_build int",
-    ).write.mode("overwrite").parquet(path + "/meta")
-
-
-def load_nsw_index(spark, path: str) -> tuple[DataFrame, dict]:
-    """→ (graph DataFrame, params) for ``nsw_ann_topk(index=…)``. The
-    params collect is memoized per (session, path, meta mtime) — meta is
-    frozen post-save; the graph read stays fresh (see _frozen_memo)."""
-
-    def _load_frozen():
-        meta = spark.read.parquet(path + "/meta").collect()[0]
-        return (
-            {
-                "n_shards": int(meta["n_shards"]),
-                "m": int(meta["m"]),
-                "ef_build": int(meta["ef_build"]),
-            },
-        )
-
-    (params,) = _frozen_memo(spark, path, _load_frozen)
-    return (spark.read.parquet(path + "/graph"), params)
-
-
-def upsert_nsw_index(
-    new: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Append new vectors to a saved NSW index by CONTINUING each
-    shard's deterministic insertion sequence (new nodes take positions
-    after the existing ones, ascending id; the degree-cap prune may
-    rewire existing nodes, so touched shard partitions are rewritten).
-
-    Append-only id discipline ⇒ exact rebuild equivalence: if every new
-    id is greater than every indexed id, the continued insertion order
-    IS the full rebuild's order, so the upserted graph is bit-identical
-    to ``save_nsw_index`` over the union (tested). Interleaved ids still
-    yield a valid NSW graph — insertion order is part of the graph's
-    identity, as in every incremental HNSW deployment — but not the
-    rebuild's; keep ingest batches id-monotone if you need replayable
-    parity."""
-    spark = new.sparkSession
-    graph, params = load_nsw_index(spark, path)
-    n_shards, m, ef_build = params["n_shards"], params["m"], params["ef_build"]
-    add = new.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("shard", F.col("vec_id") % F.lit(n_shards))
+    """The upsert family's tail: every shard that the (shard, vec_id, cv)
+    rows of ``add`` touch continues its insertion sequence from its saved
+    ``graph`` rows (which must carry cv), and only those shard partitions
+    are rewritten. ``books`` re-encodes every node of a touched shard."""
     touched = [r["shard"] for r in add.select("shard").distinct().collect()]
     if not touched:
         return
@@ -1094,38 +1034,29 @@ def upsert_nsw_index(
     )
 
     def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, _U, cvs, nbrs = _continue_insertion(pdf, m, ef_build)
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(ids), int(pdf["shard"].iloc[0]), dtype=np.int64),
-                "pos": np.arange(len(ids), dtype=np.int64),
-                "vec_id": ids,
-                "cv": cvs,
-                "nbrs": nbrs,
-            }
+        # an indexed row without cv can only come from a corpus recovery
+        # (the routed-PQ upsert's left join); stored graphs always carry cv
+        missing = sorted(
+            int(v)
+            for v in pdf.loc[pdf["pos"].notna() & pdf["cv"].isna(), "vec_id"].head(5)
         )
+        if missing:
+            raise ValueError(
+                f"corpus is missing raw vectors for indexed vec_ids "
+                f"{missing} (touched shards must recover EVERY indexed "
+                "node's full-precision vector to continue insertion; "
+                "pass the same lake table the index was built from)"
+            )
+        ids, U, cvs, nbrs = _continue_insertion(pdf, m, ef_build)
+        return _graph_rows(int(pdf["shard"].iloc[0]), ids, U, cvs, nbrs, books)
 
-    rebuilt = merged.groupBy("shard").applyInPandas(
-        worker,
-        "shard long, pos long, vec_id long, cv array<double>, nbrs array<long>",
-    )
-    _overwrite_touched_shards(spark, rebuilt, path + "/graph")
-
-
-def _overwrite_touched_shards(spark, df: DataFrame, graph_path: str) -> None:
-    """The upsert family's write protocol: materialize (the plan reads
-    the same path it overwrites), then dynamic-partition-overwrite ONLY
-    the touched shard partitions, restoring the caller's prior conf."""
-    df = df.localCheckpoint(eager=True)
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy("shard").parquet(graph_path)
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+    # materialize first (the plan reads the path it overwrites), then
+    # overwrite ONLY the touched shard partitions: dynamic overwrite is a
+    # per-write option, so the session conf is never touched
+    rebuilt = merged.groupBy("shard").applyInPandas(worker, _graph_schema(books))
+    rebuilt.localCheckpoint(eager=True).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("shard").parquet(path + "/graph")
 
 
 def _continue_insertion(pdf: pd.DataFrame, m: int, ef_build: int):
@@ -1157,346 +1088,3 @@ def _continue_insertion(pdf: pd.DataFrame, m: int, ef_build: int):
         nbrs[i].sort()
     ids = ordered["vec_id"].to_numpy(dtype=np.int64)
     return ids, U, list(ordered["cv"]), nbrs
-
-
-def upsert_nsw_routed_index(
-    new: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Append new vectors to a saved ROUTED index: assignment against the
-    PERSISTED centroids (spill-aware — the index's own spill_eps rides
-    its meta), then each touched cell CONTINUES its deterministic
-    insertion sequence; only touched cell partitions rewrite.
-
-    Rebuild equivalence: ``ivf_centroids`` is the deterministic
-    lowest-id rule, so if every new id is GREATER than every indexed id a
-    full ``save_nsw_routed_index`` over the union picks the SAME
-    centroids, the same cell membership, and the same per-cell insertion
-    order — the upserted index is bit-identical to the rebuild (tested).
-    Interleaved ids still yield a valid index against the frozen
-    centroids; keep ingest id-monotone for replayable parity.
-
-    REPLAY-IDEMPOTENT: (shard, vec_id) pairs already present are dropped
-    before insertion, so retrying the same upsert (a crashed streaming
-    batch, a double-scheduled job) converges to the once-applied index
-    instead of duplicating nodes — the contract the streaming
-    index-maintenance loop relies on."""
-    from .similarity import ivf_assign, ivf_assign_spill
-
-    spark = new.sparkSession
-    cent, graph, params = load_nsw_routed_index(spark, path)
-    m, ef_build = params["m"], params["ef_build"]
-    eps = params.get("spill_eps", 0.0)
-    n_sel = new.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    assign = (
-        ivf_assign_spill(n_sel, cent, eps, "vec_id", "cv")
-        if eps > 0.0
-        else ivf_assign(n_sel, cent, 1, "vec_id", "cv")
-    )
-    add = n_sel.join(assign.select("vec_id", "cell"), "vec_id").withColumnRenamed(
-        "cell", "shard"
-    )
-    # REPLAY-IDEMPOTENT: drop (shard, vec_id) pairs the graph already
-    # holds — assignment is deterministic against frozen centroids, so a
-    # retried upsert (a crashed streaming batch, a double-scheduled job)
-    # re-derives the same pairs and every already-written shard drops out
-    # of `touched` instead of receiving duplicate nodes; a second full
-    # replay is a no-op. Fresh ingest is unaffected (nothing matches).
-    # Persisted: feeds both the touched-shard collect and the rebuild
-    # plan — one assignment-UDF pass instead of one per action.
-    add = add.join(
-        graph.select("shard", "vec_id"), ["shard", "vec_id"], "left_anti"
-    ).persist()
-    try:
-        touched = [r["shard"] for r in add.select("shard").distinct().collect()]
-        if not touched:
-            return
-        old = graph.filter(F.col("shard").isin(touched)).select(
-            "shard", "pos", "vec_id", "cv", "nbrs"
-        )
-        merged = old.unionByName(
-            add.select(
-                "shard",
-                F.lit(None).cast("long").alias("pos"),
-                "vec_id",
-                "cv",
-                F.lit(None).cast("array<long>").alias("nbrs"),
-            )
-        )
-
-        def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids, _U, cvs, nbrs = _continue_insertion(pdf, m, ef_build)
-            return pd.DataFrame(
-                {
-                    "shard": np.full(
-                        len(ids), int(pdf["shard"].iloc[0]), dtype=np.int64
-                    ),
-                    "pos": np.arange(len(ids), dtype=np.int64),
-                    "vec_id": ids,
-                    "cv": cvs,
-                    "nbrs": nbrs,
-                }
-            )
-
-        rebuilt = merged.groupBy("shard").applyInPandas(
-            worker,
-            "shard long, pos long, vec_id long, cv array<double>, nbrs array<long>",
-        )
-        _overwrite_touched_shards(spark, rebuilt, path + "/graph")
-    finally:
-        add.unpersist()
-
-
-def upsert_nsw_routed_pq_index(
-    new: DataFrame,
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Append new vectors to a saved routed-PQ index — DiskANN-style
-    maintenance: the shards hold only codes + adjacency, so the touched
-    cells' RAW vectors are recovered from ``corpus`` (the lake-resident
-    table the exact re-rank already reads; it must contain the indexed
-    vectors), insertion continues at FULL precision, and every node
-    re-encodes against the FROZEN persisted codebooks (deterministic
-    encode ⇒ old nodes' codes are reproduced bit-for-bit; new codes use
-    the frozen books — the add-vs-retrain contract of ``upsert_pq_index``:
-    codes stay cell-independent and valid, retraining is an explicit
-    rebuild). With id-monotone ingest above the codebook train-sample
-    window the upserted index equals a full rebuild over the union
-    bit-for-bit (same centroids, same train slice, same insertion order —
-    tested); below it, rebuild would retrain the books, which is exactly
-    the retrain decision this function refuses to make silently.
-    Replay-idempotent like :func:`upsert_nsw_routed_index` — retried
-    upserts drop their already-indexed (shard, vec_id) pairs."""
-    from .similarity import ivf_assign, ivf_assign_spill
-
-    spark = new.sparkSession
-    cent, graph, books, params = load_nsw_routed_pq_index(spark, path)
-    m, ef_build = params["m"], params["ef_build"]
-    eps = params.get("spill_eps", 0.0)
-    S, C, ds = books.shape
-    n_sel = new.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    assign = (
-        ivf_assign_spill(n_sel, cent, eps, "vec_id", "cv")
-        if eps > 0.0
-        else ivf_assign(n_sel, cent, 1, "vec_id", "cv")
-    )
-    add = n_sel.join(assign.select("vec_id", "cell"), "vec_id").withColumnRenamed(
-        "cell", "shard"
-    )
-    # replay-idempotent, same argument as upsert_nsw_routed_index: a
-    # retried batch's already-written (shard, vec_id) pairs drop out.
-    # Persisted: the anti-joined assignment feeds BOTH the bounded
-    # touched-shard collect and the rebuild plan — without the pin the
-    # per-row assignment UDF pass runs once per action (r11 verdict
-    # item: batch the shard-touch discovery instead of re-deriving it).
-    add = add.join(
-        graph.select("shard", "vec_id"), ["shard", "vec_id"], "left_anti"
-    ).persist()
-    try:
-        touched = [r["shard"] for r in add.select("shard").distinct().collect()]
-        if not touched:
-            return
-        raw = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-        old_g = graph.filter(F.col("shard").isin(touched)).select(
-            "shard", "pos", "vec_id", "nbrs"
-        )
-        # fail LOUDLY if the corpus is missing any indexed vector: an
-        # inner join would silently drop those nodes, _continue_insertion
-        # would renumber positions, and surviving nbrs arrays would point
-        # at the old positions — a quietly corrupted graph (r9 ADVICE).
-        # The check rides the rebuild pass itself (LEFT join; a null cv on
-        # an indexed row raises inside the worker, before any shard
-        # write) instead of paying a separate per-batch anti-join job.
-        old = old_g.join(raw, "vec_id", "left").select(
-            "shard", "pos", "vec_id", "cv", "nbrs"
-        )
-        merged = old.unionByName(
-            add.select(
-                "shard",
-                F.lit(None).cast("long").alias("pos"),
-                "vec_id",
-                "cv",
-                F.lit(None).cast("array<long>").alias("nbrs"),
-            )
-        )
-
-        def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-            missing = sorted(
-                int(v)
-                for v in pdf.loc[
-                    pdf["pos"].notna() & pdf["cv"].isna(), "vec_id"
-                ].head(5)
-            )
-            if missing:
-                raise ValueError(
-                    f"corpus is missing raw vectors for indexed vec_ids "
-                    f"{missing} (touched shards must recover EVERY indexed "
-                    "node's full-precision vector to continue insertion; "
-                    "pass the same lake table the index was built from)"
-                )
-            ids, U, _cvs, nbrs = _continue_insertion(pdf, m, ef_build)
-            sub = U.reshape(U.shape[0], S, ds)
-            d2 = ((sub[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1)
-            codes = d2.argmin(-1)
-            return pd.DataFrame(
-                {
-                    "shard": np.full(
-                        len(ids), int(pdf["shard"].iloc[0]), dtype=np.int64
-                    ),
-                    "pos": np.arange(len(ids), dtype=np.int64),
-                    "vec_id": ids,
-                    "codes": [list(map(int, c)) for c in codes],
-                    "nbrs": nbrs,
-                }
-            )
-
-        rebuilt = merged.groupBy("shard").applyInPandas(
-            worker,
-            "shard long, pos long, vec_id long, codes array<int>, nbrs array<long>",
-        )
-        try:
-            _overwrite_touched_shards(spark, rebuilt, path + "/graph")
-        except Exception as exc:
-            # surface the worker-side guard as the API's documented
-            # ValueError (the raise happens during the pre-write
-            # materialization, so no shard partition was rewritten)
-            msg = str(exc)
-            tag = "corpus is missing raw vectors"
-            if tag in msg:
-                raise ValueError(msg[msg.index(tag):].split("\n")[0]) from exc
-            raise
-    finally:
-        add.unpersist()
-
-
-def _shard_index_search(qids: np.ndarray, qmat: np.ndarray, ef_search: int):
-    """Search worker over PREBUILT graph rows (pos/cv/nbrs) — identical
-    beam to the inline path; the graph build was paid at save time."""
-
-    def worker(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos").reset_index(drop=True)
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-        if len(V) == 0:
-            return pd.DataFrame({"query_id": [], "neighbor_id": []})
-        V = V / np.linalg.norm(V, axis=1, keepdims=True)
-        nbrs = [list(map(int, x)) for x in pdf["nbrs"]]
-        out_q, out_n = [], []
-        for qi in range(len(qids)):
-            res = nsw_beam_search(V, nbrs, qmat[qi], ef_search)
-            for _, p in res:
-                out_q.append(int(qids[qi]))
-                out_n.append(int(ids[p]))
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(out_q, dtype="int64"),
-                "neighbor_id": pd.Series(out_n, dtype="int64"),
-            }
-        )
-
-    return worker
-
-
-def nsw_ann_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_shards: int = 4,
-    m: int = 8,
-    ef_build: int = 24,
-    ef_search: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    index: tuple[DataFrame, dict] | None = None,
-) -> DataFrame:
-    """Sharded-NSW graph ANN top-k (see module docstring for the spec
-    and the 100 TB sharding story).
-
-    The Python graph only NOMINATES candidates (≤ n_shards·ef_search
-    per query); the returned ranking is exact JVM-side cosine over the
-    nomination union with the family's rounded-cosine + id tiebreaks —
-    so recall is the only approximation, never the scores. Query
-    batches above QUERY_BATCH_LIMIT run in hash-chunked waves.
-    ``index=(graph_df, params)`` from :func:`load_nsw_index` skips the
-    per-call graph build (the mkdb-offline frame) — probing a saved
-    index is bit-identical to the inline path over the same corpus.
-    """
-    q_sel = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    c_sel = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("shard", F.col("neighbor_id") % F.lit(n_shards))
-
-    # limit-probe instead of a count job: the common queries ≪ corpus
-    # call collects its single wave directly (one driver job instead of
-    # count + collect — measured ~0.2 s per declared-query call)
-    q_head = q_sel.limit(QUERY_BATCH_LIMIT + 1).collect()
-    if len(q_head) <= QUERY_BATCH_LIMIT:
-        n_chunks = 1
-    else:
-        n_q = q_sel.count()
-        n_chunks = max(1, -(-n_q // QUERY_BATCH_LIMIT))
-    chunk_expr = F.pmod(F.xxhash64(F.col("query_id")), F.lit(n_chunks))
-    cand_parts = []
-    for ci in range(n_chunks):
-        qc = q_sel if n_chunks == 1 else q_sel.filter(chunk_expr == ci)
-        rows = q_head if n_chunks == 1 else qc.collect()
-        if not rows:
-            continue
-        rows.sort(key=lambda r: r["query_id"])
-        qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
-        qmat = np.array([r["qv"] for r in rows], dtype=np.float64)
-        qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-        if index is not None:
-            graph_df, _params = index
-            cand_parts.append(
-                graph_df.groupBy("shard").applyInPandas(
-                    _shard_index_search(qids, qmat, ef_search),
-                    "query_id long, neighbor_id long",
-                )
-            )
-        else:
-            cand_parts.append(
-                c_sel.groupBy("shard").applyInPandas(
-                    _shard_candidates(qids, qmat, m, ef_build, ef_search),
-                    "query_id long, neighbor_id long",
-                )
-            )
-    cand = cand_parts[0]
-    for extra in cand_parts[1:]:
-        cand = cand.unionByName(extra)
-
-    cos = F.round(
-        _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))), 6
-    )
-    scored = (
-        cand.filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(F.broadcast(q_sel), "query_id")
-        .join(c_sel.select("neighbor_id", "cv"), "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from ..session import local_rows_df
+
 ANN_SEED = 77
 
 #: above this many queries per batch, driver-side collects of the query
@@ -323,9 +325,7 @@ def ivf_centroids_trained(
     rows = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    from ..session import local_rows_df as _ldf
-
-    return _ldf(spark, rows, "cell long, centroid array<double>")
+    return local_rows_df(spark, rows, "cell long, centroid array<double>")
 
 
 def pq_codebooks_trained(
@@ -1301,9 +1301,7 @@ def ivfpq_ann_topk(
             .select("query_id", "neighbor_id", adist.alias("adist"))
         )
     if not parts:  # zero queries: empty result, correct schema
-        from ..session import local_rows_df as _ldf
-
-        return _ldf(
+        return local_rows_df(
             queries.sparkSession,
             [],
             "query_id long, neighbor_id long, rank int, cosine double",
@@ -1911,6 +1909,32 @@ def banded_hamming_pairs(
 # ---------------------------------------------------------------------------
 
 
+_BOOK_COLS = ("subspace", "centroid", "features")
+
+
+def _save_codebooks(spark, books: np.ndarray, path: str, cols=_BOOK_COLS) -> None:
+    """Persist (S, C, ds) codebooks as S·C (subspace, centroid, vector)
+    rows; ``cols`` names the three columns."""
+    S, C, _ds = books.shape
+    local_rows_df(
+        spark,
+        [(s, c, books[s, c].tolist()) for s in range(S) for c in range(C)],
+        "{} int, {} int, {} array<double>".format(*cols),
+    ).write.mode("overwrite").parquet(path)
+
+
+def _load_codebooks(spark, path: str, cols=_BOOK_COLS) -> np.ndarray:
+    """Inverse of :func:`_save_codebooks` — a bounded S·C-row driver fetch."""
+    s, c, vec = cols
+    rows = spark.read.parquet(path).collect()
+    S = max(r[s] for r in rows) + 1
+    C = max(r[c] for r in rows) + 1
+    books = np.zeros((S, C, len(rows[0][vec])), dtype=np.float64)
+    for r in rows:
+        books[r[s], r[c]] = r[vec]
+    return books
+
+
 def save_pq_index(
     corpus: DataFrame,
     path: str,
@@ -1929,17 +1953,7 @@ def save_pq_index(
     spark = corpus.sparkSession
     build = pq_codebooks_trained if trained else pq_codebooks
     books = build(corpus, n_subspaces, n_centroids, id_col, vec_col)
-    S, C, _ds = books.shape
-    rows = [
-        (int(s), int(c), [float(x) for x in books[s, c]])
-        for s in range(S)
-        for c in range(C)
-    ]
-    from ..session import local_rows_df as _ldf
-
-    _ldf(
-        spark, rows, "subspace int, centroid int, features array<double>"
-    ).write.mode("overwrite").parquet(path + "/codebooks")
+    _save_codebooks(spark, books, path + "/codebooks")
     pq_encode(corpus, books, id_col, vec_col).write.mode("overwrite").parquet(
         path + "/codes"
     )
@@ -1948,13 +1962,7 @@ def save_pq_index(
 def load_pq_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
     """→ (codebooks ndarray, codes DataFrame) for ``pq_ann_topk(index=…)``.
     The codebook table is S·C rows — a bounded driver fetch by design."""
-    rows = spark.read.parquet(path + "/codebooks").collect()
-    S = max(r["subspace"] for r in rows) + 1
-    C = max(r["centroid"] for r in rows) + 1
-    ds = len(rows[0]["features"])
-    books = np.zeros((S, C, ds), dtype=np.float64)
-    for r in rows:
-        books[r["subspace"], r["centroid"]] = r["features"]
+    books = _load_codebooks(spark, path + "/codebooks")
     return books, spark.read.parquet(path + "/codes")
 
 
@@ -2062,18 +2070,8 @@ def save_ivfpq_index(
         )
     else:
         books = pq_codebooks(corpus, n_subspaces, n_centroids, id_col, vec_col)
-    S, C, _ds = books.shape
-    rows = [
-        (int(s), int(c), [float(x) for x in books[s, c]])
-        for s in range(S)
-        for c in range(C)
-    ]
     spark = corpus.sparkSession
-    from ..session import local_rows_df as _ldf
-
-    _ldf(
-        spark, rows, "subspace int, centroid int, features array<double>"
-    ).write.mode("overwrite").parquet(path + "/codebooks")
+    _save_codebooks(spark, books, path + "/codebooks")
     cassign = ivf_assign(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
         cent,
@@ -2083,7 +2081,7 @@ def save_ivfpq_index(
     ).select("neighbor_id", "cell")
     coded = _ivfpq_encode(corpus, cent, cassign, books, id_col, vec_col, residual)
     coded.write.mode("overwrite").parquet(path + "/coded")
-    _ldf(spark, [(bool(residual),)], "residual boolean").write.mode(
+    local_rows_df(spark, [(bool(residual),)], "residual boolean").write.mode(
         "overwrite"
     ).parquet(path + "/meta")
 
@@ -2129,13 +2127,7 @@ def load_ivfpq_index(
     ``ivfpq_ann_topk(index=…)``. ``meta['residual']`` is the persisted
     encoding convention (False for indexes written before the meta file
     existed — those were always raw-coded)."""
-    rows = spark.read.parquet(path + "/codebooks").collect()
-    S = max(r["subspace"] for r in rows) + 1
-    C = max(r["centroid"] for r in rows) + 1
-    ds = len(rows[0]["features"])
-    books = np.zeros((S, C, ds), dtype=np.float64)
-    for r in rows:
-        books[r["subspace"], r["centroid"]] = r["features"]
+    books = _load_codebooks(spark, path + "/codebooks")
     try:
         meta_rows = spark.read.parquet(path + "/meta").collect()
         meta = {"residual": bool(meta_rows[0]["residual"])}
@@ -2291,9 +2283,7 @@ def kcenter_sample(
         .collect()
     )
     if not rows:
-        from ..session import local_rows_df as _ldf
-
-        return _ldf(
+        return local_rows_df(
             corpus.sparkSession, [], "sel_order int, vec_id long, d2_far double"
         )
     sel_ids = [int(rows[0][0])]
@@ -2332,9 +2322,7 @@ def kcenter_sample(
         centers.append(np.asarray(pick["cv"], dtype=np.float64))
         out.append((order, int(-pick["nid"]), float(pick["d2"])))
     spark = corpus.sparkSession
-    from ..session import local_rows_df as _ldf
-
-    return _ldf(
+    return local_rows_df(
         spark,
         [(o, i, float(np.round(d, 6))) for o, i, d in out],
         "sel_order int, vec_id long, d2_far double",
@@ -2412,9 +2400,7 @@ def kcenter_sample_cells(
     rows = reps.collect()  # bounded: <= n_cells * k coreset rows
     spark = corpus.sparkSession
     if not rows:
-        from ..session import local_rows_df as _ldf
-
-        return _ldf(
+        return local_rows_df(
             spark, [], "sel_order int, vec_id long, d2_far double"
         )
     rows.sort(key=lambda r: r["vec_id"])
@@ -2434,9 +2420,7 @@ def kcenter_sample_cells(
             d = v[:, i] - v[j, i]
             nd2 += d * d
         d2 = np.minimum(d2, nd2)
-    from ..session import local_rows_df as _ldf
-
-    return _ldf(spark, out, "sel_order int, vec_id long, d2_far double")
+    return local_rows_df(spark, out, "sel_order int, vec_id long, d2_far double")
 
 
 def semantic_dedup(
