@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
+from ..session import ensure_worker_imports
+
 FILES_SCHEMA = StructType(
     [StructField("file_id", LongType()), StructField("content", BinaryType())]
 )
@@ -46,9 +48,7 @@ def docs_from_documents(spark: SparkSession, sf_dir: str, target_bytes: int = 16
     cached = _FIXTURE_CACHE.get(key)
     if cached is not None:
         return cached
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(spark)
+    ensure_worker_imports(spark)
     from ..tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -95,9 +95,7 @@ def synthetic_docs(
 ) -> DataFrame:
     """Distributed generation: pool built once per executor (cached),
     per-file RNG seeded by (seed, file_id) — pure function of its args."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(spark)
+    ensure_worker_imports(spark)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pool = _block_pool(seed, pool_size, block_min, block_max)
@@ -182,9 +180,7 @@ def class_files(
     d_files, d_bytes = INPUT_SIZE_CLASSES[size_cls]
     n_files = d_files if n_files is None else n_files
     file_bytes = d_bytes if file_bytes is None else file_bytes
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(spark)
+    ensure_worker_imports(spark)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         charset = np.frombuffer(_LINE_CHARSET, dtype=np.uint8)

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import ensure_worker_imports
 from .rabin import chunk_offsets
 
 # Archive record types (reference: apps/dedup/src/dedupdef.h:257-259).
@@ -80,9 +81,7 @@ def chunk_files(files: DataFrame) -> DataFrame:
     (coarse ANCHOR_JUMP pass then fine refine pass, both from one
     vectorized match scan — see rabin.py).
     """
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(files.sparkSession)
+    ensure_worker_imports(files.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -130,9 +129,7 @@ def chunk_hash_compress(
     leave Python, and the sha1 exchange shuffles mostly metadata.
     ~4× wall-clock over the staged plan at 256 MB / 32 cores.
     """
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(files.sparkSession)
+    ensure_worker_imports(files.sparkSession)
     import hashlib
     import zlib
     import bz2 as _bz2
@@ -312,9 +309,7 @@ def decode(ddp: DataFrame, compress_type: str = "gzip") -> DataFrame:
     The regroup is an explicit fixed-width repartition: AQE sizes shuffles
     by their (compressed, tiny) byte count and would otherwise coalesce the
     decompression stage down to a couple of tasks."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(ddp.sparkSession)
+    ensure_worker_imports(ddp.sparkSession)
     ctype = compress_type
 
     uniques = (

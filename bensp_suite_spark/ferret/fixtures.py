@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import ensure_worker_imports
+
 VEC_DIM = 14  # reference db config: float dim 14 (benchmark/mkdb:20)
 
 CORPUS_SCHEMA = StructType(
@@ -68,9 +70,7 @@ def _centers(n_clusters: int, seed: int) -> np.ndarray:
 def synthetic_corpus(
     spark: SparkSession, m: int = 200, n_clusters: int = 64, seed: int = 4242
 ) -> DataFrame:
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(spark)
+    ensure_worker_imports(spark)
     centers = _centers(n_clusters, seed)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -95,9 +95,7 @@ def synthetic_queries(
 ) -> DataFrame:
     """Queries = jittered copies of corpus images 0..q-1 (query_id = source
     image_id) — the engine's top-1 should be the source image."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(corpus.sparkSession)
+    ensure_worker_imports(corpus.sparkSession)
     src = corpus.filter(F.col("image_id") < q)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import ensure_worker_imports
 from .emd import emd, pairwise_l2
 
 # E2LSH defaults mirroring the reference index recipe
@@ -223,9 +224,7 @@ def build_lsh_index(
     result and pass it to ``candidates_lsh``/``ferret_topk`` so query
     batches pay probe cost only — at scale this is the parquet-backed index
     table you bucket by ``key``."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(corpus_regions.sparkSession)
+    ensure_worker_imports(corpus_regions.sparkSession)
     return corpus_regions.select(
         "c_image_id",
         F.col("region_idx").alias("c_region_idx"),
@@ -260,9 +259,7 @@ def candidates_lsh(
     ``per_region_k`` per query region survive. Without it every bucket
     collision reaches the O(r³) EMD — at bench scale that was 87% of the
     corpus per query."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(query_regions.sparkSession)
+    ensure_worker_imports(query_regions.sparkSession)
     # key rows stay slim — (ids, key) only. Each region explodes to
     # tables×(1+T) keys; carrying the 14-double feature array through that
     # explode and the collision-dedup shuffle costs more than every EMD it
@@ -352,9 +349,7 @@ def emd_rerank(candidates: DataFrame, queries: DataFrame, corpus: DataFrame) -> 
     candidate rows ever reach Python, with per-partition memoized struct→
     ndarray parsing (each corpus image scores against many queries — parsing
     its region structs per pair tripled EMD stage time)."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(candidates.sparkSession)
+    ensure_worker_imports(candidates.sparkSession)
     c = corpus.select(
         F.col("image_id").alias("c_image_id"), F.col("regions").alias("c_regions")
     )
@@ -430,9 +425,7 @@ def emd_rerank_topk(
     pays off when candidates are NOT pre-filtered by similarity (e.g.
     exhaustive mode with a small top_k, or web-scale corpora where the
     candidate list has a long irrelevant tail)."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(candidates.sparkSession)
+    ensure_worker_imports(candidates.sparkSession)
     c = corpus.select(
         F.col("image_id").alias("c_image_id"), F.col("regions").alias("c_regions")
     )

@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import ensure_worker_imports
+
 FRAME = 512
 HOP = 256
 PEAK_DT = 3
@@ -121,9 +123,7 @@ def extract_landmarks(
     """(media_id, lm_hash, t) — one narrow Arrow pass over the audio
     blobs (decode + landmark kernel), no shuffle. This table IS the
     inverted index; persist it bucketed by lm_hash at scale."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(audio.sparkSession)
+    ensure_worker_imports(audio.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .audio_video import decode_audio

@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import ensure_worker_imports
+
 AUDIO_TABLE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -364,9 +366,7 @@ def audio_frame_features(samples: np.ndarray, frame: int = 1024) -> tuple[np.nda
 
 
 def extract_audio_features(audio: DataFrame, frame: int = 1024) -> DataFrame:
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(audio.sparkSession)
+    ensure_worker_imports(audio.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -389,9 +389,7 @@ def extract_audio_features(audio: DataFrame, frame: int = 1024) -> DataFrame:
 def sample_video_frames(video: DataFrame, every_n: int = 5) -> DataFrame:
     """Frame-sample + per-frame feature extraction: keep every Nth frame
     with its mean color — the 1→N UDTF shape (explode inside mapInPandas)."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(video.sparkSession)
+    ensure_worker_imports(video.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -439,9 +437,7 @@ def audio_fingerprint_kernel(samples: np.ndarray, nbits: int = 64) -> int:
 
 def audio_fingerprints(audio: DataFrame) -> DataFrame:
     """(media_id, fingerprint) — narrow mapInPandas, no shuffle."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(audio.sparkSession)
+    ensure_worker_imports(audio.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -470,9 +466,7 @@ def video_frame_dhashes(video: DataFrame, every_n: int = 5) -> DataFrame:
     """(media_id, frame_idx, dhash) — dHash of every Nth frame, one
     narrow mapInPandas pass (decode + sample + hash fused, frames never
     leave the task)."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(video.sparkSession)
+    ensure_worker_imports(video.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .images import dhash_kernel

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import ensure_worker_imports
+
 # reference constants
 NUM_GRAY = 256  # srm.c:107
 Q_VALUE = 125.0  # srm.c:532 default precision knob (parsec_stream:274-280)
@@ -575,9 +577,7 @@ def images_to_vecsets(images: DataFrame, q_value: float = Q_VALUE, size_factor: 
     """mapInPandas: decode → HSV → segment → extract, one fused Python stage
     (no shuffle; the reference's load/seg/extract thread stages collapse
     into one narrow map, SURVEY §3.3)."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(images.sparkSession)
+    ensure_worker_imports(images.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -616,9 +616,7 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     image) → same schema at (out_w, out_h). A narrow mapInPandas stage —
     rows are independent, no shuffle; at 100 TB this is scan-bound exactly
     like decode/extract (SURVEY §3.3 one-fused-map design)."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(images.sparkSession)
+    ensure_worker_imports(images.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -668,9 +666,7 @@ def dhash_kernel(rgb: np.ndarray) -> int:
 
 def image_dhash(images: DataFrame) -> DataFrame:
     """(image_id, name, dhash) — narrow mapInPandas stage, no shuffle."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(images.sparkSession)
+    ensure_worker_imports(images.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -847,9 +843,7 @@ def phash_kernel(rgb: np.ndarray) -> int:
 
 def image_phash(images: DataFrame) -> DataFrame:
     """(image_id, name, phash) — narrow mapInPandas stage, no shuffle."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(images.sparkSession)
+    ensure_worker_imports(images.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

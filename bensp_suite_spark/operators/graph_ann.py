@@ -62,21 +62,21 @@ lock-step; change one, change both):
 from __future__ import annotations
 
 import heapq
-from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_rows_df
 from .similarity import (
-    QUERY_BATCH_LIMIT,
-    _dot,
+    _CAND_SCHEMA,
     _load_codebooks,
-    _norm,
     _pq_lloyd,
+    _rerank,
     _save_codebooks,
+    _vectors,
+    _waves,
     ivf_assign,
     ivf_assign_spill,
     ivf_centroids,
@@ -222,20 +222,10 @@ def nsw_build(V: np.ndarray, m: int = 8, ef_build: int = 24) -> list[list[int]]:
 # whichever transport carries them.
 # ---------------------------------------------------------------------------
 
-_CAND_SCHEMA = "query_id long, neighbor_id long"
-
-
 def _graph_schema(books: np.ndarray | None) -> str:
     """Saved graph rows: raw vectors, or PQ codes when ``books`` is set."""
     vec = "cv array<double>" if books is None else "codes array<int>"
     return f"shard long, pos long, vec_id long, {vec}, nbrs array<long>"
-
-
-def _vectors(df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: str) -> DataFrame:
-    """(id_as, vec_as) rows of ``df``, the vector cast to array<double>."""
-    return df.select(
-        F.col(id_col).alias(id_as), F.col(vec_col).cast("array<double>").alias(vec_as)
-    )
 
 
 def _unit_rows(vecs) -> np.ndarray:
@@ -341,54 +331,14 @@ def _cogroup_worker(ef_search: int, build=None, books=None):
     return worker
 
 
-def _waves(q_sel: DataFrame, probe) -> DataFrame:
-    """The family's driver-staged query transport: queries are collected
-    in waves of at most QUERY_BATCH_LIMIT (hash chunks of query_id), each
-    sorted by id and unit-normalized; ``probe(qids, qmat, chunk)`` turns
-    one wave into its candidate DataFrame (``chunk`` is the wave's
-    query_id filter, None for a single wave). → the union of the waves,
-    an empty candidate frame when there are no queries."""
-    # limit-probe instead of a count job: the common queries ≪ corpus
-    # call collects its single wave directly (one driver job instead of
-    # count + collect — measured ~0.2 s per declared-query call)
-    q_head = q_sel.limit(QUERY_BATCH_LIMIT + 1).collect()
-    n_chunks = 1
-    if len(q_head) > QUERY_BATCH_LIMIT:
-        n_chunks = -(-q_sel.count() // QUERY_BATCH_LIMIT)
-    chunk_expr = F.pmod(F.xxhash64(F.col("query_id")), F.lit(n_chunks))
-    parts = []
-    for ci in range(n_chunks):
-        chunk = None if n_chunks == 1 else chunk_expr == ci
-        rows = q_head if chunk is None else q_sel.filter(chunk).collect()
-        if not rows:
-            continue
-        rows.sort(key=lambda r: r["query_id"])
-        qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
-        parts.append(probe(qids, _unit_rows([r["qv"] for r in rows]), chunk))
-    if not parts:
-        return local_rows_df(q_sel.sparkSession, [], _CAND_SCHEMA)
-    return reduce(DataFrame.unionByName, parts)
-
-
 def _exact_rerank(cand: DataFrame, q_sel: DataFrame, c_sel: DataFrame, k: int) -> DataFrame:
     """The family tail: exact JVM rounded-cosine over the nomination
     union, top-k by (cos desc, id) — Python nominates, Catalyst scores."""
-    cos = F.round(
-        _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))), 6
-    )
-    scored = (
+    return _rerank(
         cand.filter(F.col("query_id") != F.col("neighbor_id"))
         .join(F.broadcast(q_sel), "query_id")
-        .join(c_sel.select("neighbor_id", "cv"), "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+        .join(c_sel.select("neighbor_id", "cv"), "neighbor_id"),
+        k,
     )
 
 
@@ -441,12 +391,14 @@ def _routed_topk(
             qa = qassign if chunk is None else qassign.filter(chunk)
             for r in qa.collect():
                 probes.setdefault(int(r["cell"]), []).append(qidx[int(r["query_id"])])
-            Q = qmat if books is None else _adc_tables(qmat, books)
+            Q = _unit_rows(qmat)
+            if books is not None:
+                Q = _adc_tables(Q, books)
             return src.groupBy("shard").applyInPandas(
                 _wave_worker(qids, Q, ef_search, build, probes), _CAND_SCHEMA
             )
 
-        cand = _waves(q_sel, probe)
+        cand, _ = _waves(q_sel, probe)
     if spilled:
         # closure assignment puts boundary vectors in several probed
         # cells — collapse duplicate nominations before the rank window
@@ -553,10 +505,10 @@ def nsw_ann_topk(
 
     def probe(qids, qmat, _chunk):
         return src.groupBy("shard").applyInPandas(
-            _wave_worker(qids, qmat, ef_search, build), _CAND_SCHEMA
+            _wave_worker(qids, _unit_rows(qmat), ef_search, build), _CAND_SCHEMA
         )
 
-    return _exact_rerank(_waves(q_sel, probe), q_sel, c_sel, k)
+    return _exact_rerank(_waves(q_sel, probe)[0], q_sel, c_sel, k)
 
 
 def build_nsw_index(

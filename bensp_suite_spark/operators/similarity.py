@@ -20,14 +20,16 @@ a rank window on the (tiny) candidate set.
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints via fn globals
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, DoubleType, LongType
 
-from ..session import local_rows_df
+from ..session import ensure_worker_imports, local_rows_df
 
 ANN_SEED = 77
 
@@ -36,6 +38,31 @@ ANN_SEED = 77
 #: the scan falls back to hash-chunked query batches with a bounded
 #: closure each, and re-rank joins drop the forced query broadcast
 QUERY_BATCH_LIMIT = 100_000
+
+#: the candidate frame every probe nominates into
+_CAND_SCHEMA = "query_id long, neighbor_id long"
+#: ... and the PQ families' candidates, scored by asymmetric distance
+_ADC_SCHEMA = "query_id long, neighbor_id long, adist double"
+
+#: DuckDB mirrors of :func:`_dot` and of :func:`_sq_l2`: sequential left
+#: folds from 0.0 in index order, so both engines round alike
+_SQL_DOT = (
+    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+    "list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
+)
+_SQL_D2 = (
+    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+    "list_transform(range(1, len({a}) + 1), i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))), "
+    "(x, y) -> x + y)"
+)
+
+
+def _sql_cos(a: str, b: str) -> str:
+    """DuckDB mirror of :func:`_cosine`."""
+    return (
+        f"ROUND({_SQL_DOT.format(a=a, b=b)} / "
+        f"(SQRT({_SQL_DOT.format(a=a, b=a)}) * SQRT({_SQL_DOT.format(a=b, b=b)})), 6)"
+    )
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -48,20 +75,15 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-def cosine_topk_bruteforce(
-    queries: DataFrame, corpus: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Exact top-k cosine neighbors per query vector (broadcast queries ×
-    corpus, rank window on the rounded cosine with id tiebreak)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    )
-    pairs = c.crossJoin(F.broadcast(q)).filter(F.col("query_id") != F.col("neighbor_id"))
-    cos = F.round(_dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))), 6)
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cosine"))
+def _cosine(a: Column | str, b: Column | str) -> Column:
+    """The family's score: cosine rounded to 6 places, engine-exact
+    against :func:`_sql_cos`."""
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine) rows → the ``k`` best per query by
+    (cosine desc, neighbor_id), ranked from 1."""
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -70,21 +92,100 @@ def cosine_topk_bruteforce(
     )
 
 
-def cosine_topk_oracle_sql(k: int = 5, max_query_id: int = 8) -> str:
-    dot = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
+def _rerank(pairs: DataFrame, k: int) -> DataFrame:
+    """The exact re-rank: (query_id, neighbor_id, qv, cv) pairs → the
+    :func:`_topk` of their :func:`_cosine`."""
+    return _topk(pairs.select("query_id", "neighbor_id", _cosine("qv", "cv").alias("cosine")), k)
+
+
+def _shortlist(cand: DataFrame, order: Column, m: int) -> DataFrame:
+    """The coarse cut ahead of an exact re-rank: the first ``m``
+    candidates per query by (``order``, neighbor_id)."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return cand.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= m)
+
+
+def _sq_l2(v: np.ndarray, cmat: np.ndarray) -> np.ndarray:
+    """(N, K) squared L2 from each row of ``v`` to each row of ``cmat``,
+    accumulated dimension-at-a-time in index order — the IEEE op sequence
+    of the oracle's sequential fold (:data:`_SQL_D2`)."""
+    acc = np.zeros((v.shape[0], cmat.shape[0]), dtype=np.float64)
+    for i in range(cmat.shape[1]):
+        d = v[:, i, None] - cmat[None, :, i]
+        acc += d * d
+    return acc
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: str) -> DataFrame:
+    """(id_as, vec_as) rows of ``df``, the vector cast to array<double>."""
+    return df.select(
+        F.col(id_col).alias(id_as), F.col(vec_col).cast("array<double>").alias(vec_as)
     )
-    dqc = dot.format(a="qv", b="cv")
-    dqq = dot.format(a="qv", b="qv")
-    dcc = dot.format(a="cv", b="cv")
+
+
+def _waves(
+    q_sel: DataFrame, probe, pin: tuple[DataFrame, ...] = (), schema: str = _CAND_SCHEMA
+) -> tuple[DataFrame, int]:
+    """The driver-staged query transport: (query_id, qv) rows are
+    collected in waves of at most QUERY_BATCH_LIMIT (hash chunks of
+    query_id), each sorted by id; ``probe(qids, qmat, chunk)`` turns one
+    wave (its raw float64 query matrix) into a candidate DataFrame, and
+    ``chunk`` is the wave's query_id filter, None for a single wave.
+
+    Above one wave the ``pin`` frames, which every wave's probe scans, are
+    persisted for the loop, and the union is materialized before they are
+    released (the returned frame is lazy; an unreleased pin would hold its
+    table in executor memory for the life of the session).
+
+    → (the union of the waves, or an empty ``schema`` frame when there
+    are no queries; the number of waves)."""
+    # limit-probe instead of a count job: the common queries ≪ corpus
+    # call collects its single wave directly (one driver job instead of
+    # count + collect — measured ~0.2 s per declared-query call)
+    q_head = q_sel.limit(QUERY_BATCH_LIMIT + 1).collect()
+    n_chunks = 1
+    if len(q_head) > QUERY_BATCH_LIMIT:
+        n_chunks = -(-q_sel.count() // QUERY_BATCH_LIMIT)
+        for df in pin:
+            df.persist()
+    chunk_expr = F.pmod(F.xxhash64(F.col("query_id")), F.lit(n_chunks))
+    parts = []
+    for ci in range(n_chunks):
+        chunk = None if n_chunks == 1 else chunk_expr == ci
+        rows = q_head if chunk is None else q_sel.filter(chunk).collect()
+        if not rows:
+            continue
+        rows.sort(key=lambda r: r["query_id"])
+        qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+        parts.append(probe(qids, np.array([r["qv"] for r in rows], dtype=np.float64), chunk))
+    if not parts:
+        return local_rows_df(q_sel.sparkSession, [], schema), n_chunks
+    cand = reduce(DataFrame.unionByName, parts)
+    if n_chunks > 1 and pin:
+        cand = cand.localCheckpoint(eager=True)
+        for df in pin:
+            df.unpersist()
+    return cand, n_chunks
+
+
+def cosine_topk_bruteforce(
+    queries: DataFrame, corpus: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """Exact top-k cosine neighbors per query vector (broadcast queries ×
+    corpus, rank window on the rounded cosine with id tiebreak)."""
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+    return _rerank(c.crossJoin(F.broadcast(q)).filter(F.col("query_id") != F.col("neighbor_id")), k)
+
+
+def cosine_topk_oracle_sql(k: int = 5, max_query_id: int = 8) -> str:
     return f"""
     WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
                FROM embeddings WHERE vec_id < {max_query_id}),
     c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
     scored AS (
       SELECT query_id, neighbor_id,
-             ROUND({dqc} / (SQRT({dqq}) * SQRT({dcc})), 6) AS cosine
+             {_sql_cos("qv", "cv")} AS cosine
       FROM c CROSS JOIN q WHERE query_id <> neighbor_id
     )
     SELECT query_id, neighbor_id, rank, cosine FROM (
@@ -129,12 +230,23 @@ def lsh_index(
 ) -> DataFrame:
     """Corpus index: one (table, bucket) row per vector per table — the
     DataFrame analog of the reference's L LSH tables (LSH.c:751-770, S8)."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(df.sparkSession)
+    ensure_worker_imports(df.sparkSession)
     buckets = _bucket_udf(dim, n_planes, n_tables)
     tb = F.posexplode(buckets(F.col(vec_col).cast("array<double>")))
     return df.select(*df.columns, tb.alias("table", "bucket"))
+
+
+def _lsh_table(
+    df: DataFrame, id_col: str, vec_col: str, dim: int, n_planes: int, n_tables: int
+) -> DataFrame:
+    """The LSH table of ``df``: its (neighbor_id, cv) rows per (table, bucket)."""
+    return lsh_index(
+        df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
+        "cv",
+        dim,
+        n_planes,
+        n_tables,
+    )
 
 
 def _probe_entries(bucket_arr: Column, n_planes: int, n_tables: int, n_probes: int) -> Column:
@@ -170,19 +282,11 @@ def lsh_ann_topk(
     EMD rerank, ferret-pthreads.c:261,580-596). Pass ``index`` (from
     save_lsh_index/load_lsh_index) to probe a persisted signature table
     instead of re-hashing the corpus."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(queries.sparkSession)
+    ensure_worker_imports(queries.sparkSession)
     if index is not None:
         c = index
     else:
-        c = lsh_index(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-            "cv",
-            dim,
-            n_planes,
-            n_tables,
-        )
+        c = _lsh_table(corpus, id_col, vec_col, dim, n_planes, n_tables)
     buckets = _bucket_udf(dim, n_planes, n_tables)
     q = (
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
@@ -199,16 +303,8 @@ def lsh_ann_topk(
     # dedup (query, neighbor) BEFORE the fold-cosine: a pair found by p
     # probes would otherwise pay the 64-dim interpreted fold p times
     cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    qv = F.col("qv").cast("array<double>")
-    cv = F.col("cv").cast("array<double>")
-    cos = F.round(_dot(qv, cv) / (_norm(qv) * _norm(cv)), 6)
-    scored = cand.select("query_id", "neighbor_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    cos = _cosine(F.col("qv").cast("array<double>"), F.col("cv").cast("array<double>"))
+    return _topk(cand.select("query_id", "neighbor_id", cos.alias("cosine")), k)
 
 
 # ---------------------------------------------------------------------------
@@ -408,32 +504,12 @@ def ivf_assign(
     IEEE op sequence of the oracle's sequential list_reduce fold — so cell
     choice (and the DuckDB parity check) is bit-stable.
     n_keep=1 assigns corpus vectors; n_keep=n_probe picks query probe cells."""
-    from ..session import ensure_worker_imports as _ewi
 
-    _ewi(df.sparkSession)
-    cents = centroids.select("cell", "centroid").collect()
-    order = np.argsort([row["cell"] for row in cents], kind="stable")
-    cells = np.array([cents[i]["cell"] for i in order], dtype=np.int64)
-    cmat = np.array([cents[i]["centroid"] for i in order], dtype=np.float64)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def nearest(vecs: pd.Series) -> pd.Series:
-        if vecs.empty:
-            return pd.Series([], dtype=object)
-        v = np.array(vecs.tolist(), dtype=np.float64)  # (N, D)
-        acc = np.zeros((v.shape[0], cmat.shape[0]), dtype=np.float64)
-        for i in range(cmat.shape[1]):  # dim order = the oracle's fold order
-            d = v[:, i, None] - cmat[None, :, i]
-            acc += d * d
+    def nearest(cells: np.ndarray, acc: np.ndarray) -> list:
         # cells ascending + stable sort ⇒ (d2, cell) tiebreak
-        idx = np.argsort(acc, axis=1, kind="stable")[:, :n_keep]
-        return pd.Series(list(cells[idx]))
+        return list(cells[np.argsort(acc, axis=1, kind="stable")[:, :n_keep]])
 
-    return df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.explode(nearest(F.col(vec_col).cast("array<double>"))).alias("cell"),
-    )
+    return _assign_cells(df, centroids, nearest, id_col, vec_col)
 
 
 def ivf_assign_spill(
@@ -452,31 +528,54 @@ def ivf_assign_spill(
     degenerates to the plain nearest-cell assignment. Same vectorized
     pass and dimension-at-a-time fold order as :func:`ivf_assign`
     (deterministic, oracle-mirrored); cells emit ascending."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(df.sparkSession)
-    cents = centroids.select("cell", "centroid").collect()
-    order = np.argsort([row["cell"] for row in cents], kind="stable")
-    cells = np.array([cents[i]["cell"] for i in order], dtype=np.int64)
-    cmat = np.array([cents[i]["centroid"] for i in order], dtype=np.float64)
     thresh = (1.0 + float(eps)) ** 2
 
+    def closure(cells: np.ndarray, acc: np.ndarray) -> list:
+        return [cells[row] for row in acc <= thresh * acc.min(axis=1, keepdims=True)]
+
+    return _assign_cells(df, centroids, closure, id_col, vec_col)
+
+
+def _assign(
+    df: DataFrame,
+    cent: DataFrame,
+    n_keep: int,
+    id_col: str,
+    vec_col: str,
+    id_as: str = "neighbor_id",
+    vec_as: str = "cv",
+) -> DataFrame:
+    """:func:`ivf_assign` of ``df``'s (id_as, vec_as) rows; the vector
+    keeps its stored type (the saved ``cells/`` layout)."""
+    return ivf_assign(
+        df.select(F.col(id_col).alias(id_as), F.col(vec_col).alias(vec_as)),
+        cent,
+        n_keep,
+        id_as,
+        vec_as,
+    )
+
+
+def _assign_cells(
+    df: DataFrame, centroids: DataFrame, pick, id_col: str, vec_col: str
+) -> DataFrame:
+    """The assignments' shared pass: one row per (vector, cell) that
+    ``pick(cells, acc)`` chooses from the vector's :func:`_sq_l2` row to
+    every centroid (cells ascending), computed in one Arrow-batched UDF
+    with the centroid table in its closure."""
+    ensure_worker_imports(df.sparkSession)
+    cells, cmat = _collect_centroids(centroids)
+
     @F.pandas_udf(ArrayType(LongType()))
-    def closure(vecs: pd.Series) -> pd.Series:
+    def assign(vecs: pd.Series) -> pd.Series:
         if vecs.empty:
             return pd.Series([], dtype=object)
-        v = np.array(vecs.tolist(), dtype=np.float64)  # (N, D)
-        acc = np.zeros((v.shape[0], cmat.shape[0]), dtype=np.float64)
-        for i in range(cmat.shape[1]):  # dim order = the oracle's fold order
-            d = v[:, i, None] - cmat[None, :, i]
-            acc += d * d
-        keep = acc <= thresh * acc.min(axis=1, keepdims=True)
-        return pd.Series([cells[row] for row in keep])
+        return pd.Series(pick(cells, _sq_l2(np.array(vecs.tolist(), dtype=np.float64), cmat)))
 
     return df.select(
         F.col(id_col),
         F.col(vec_col),
-        F.explode(closure(F.col(vec_col).cast("array<double>"))).alias("cell"),
+        F.explode(assign(F.col(vec_col).cast("array<double>"))).alias("cell"),
     )
 
 
@@ -522,34 +621,14 @@ def ivf_ann_topk(
             # probe rule tied to the cell count, clamped like ivf_defaults
             n_probe = min(n_cells, max(8, n_cells // 16))
         cent = ivf_centroids(corpus, n_cells, id_col, vec_col)
-        c = ivf_assign(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-            cent,
-            1,
-            "neighbor_id",
-            "cv",
-        )
-    q = ivf_assign(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        cent,
-        n_probe,
-        "query_id",
-        "qv",
-    )
+        c = _assign(corpus, cent, 1, id_col, vec_col)
+    q = _assign(queries, cent, n_probe, id_col, vec_col, "query_id", "qv")
     # probed queries ≪ corpus: broadcast them so the corpus side never
     # shuffles on `cell` (16 distinct cells = 16-way max parallelism if
     # sort-merged — a skew cliff at scale)
     cand = F.broadcast(q).join(c, on="cell").filter(F.col("query_id") != F.col("neighbor_id"))
-    qv = F.col("qv").cast("array<double>")
-    cv = F.col("cv").cast("array<double>")
-    cos = F.round(_dot(qv, cv) / (_norm(qv) * _norm(cv)), 6)
-    scored = cand.select("query_id", "neighbor_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    cos = _cosine(F.col("qv").cast("array<double>"), F.col("cv").cast("array<double>"))
+    return _topk(cand.select("query_id", "neighbor_id", cos.alias("cosine")), k)
 
 
 def ivf_topk_oracle_sql(
@@ -562,19 +641,6 @@ def ivf_topk_oracle_sql(
     """``corpus_sql`` overrides the searched corpus (centroids and queries
     always come from the base embeddings table — the history side); the
     daily-increment pipeline passes history ∪ upserted-survivor vectors."""
-    dot = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
-    )
-    d2 = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(range(1, len({a}) + 1), i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))), "
-        "(x, y) -> x + y)"
-    )
-    cos = (
-        f"ROUND({dot.format(a='qv', b='cv')} / "
-        f"(SQRT({dot.format(a='qv', b='qv')}) * SQRT({dot.format(a='cv', b='cv')})), 6)"
-    )
     return f"""
     WITH cent AS (SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS centroid
                   FROM embeddings WHERE vec_id < {n_cells}),
@@ -583,7 +649,7 @@ def ivf_topk_oracle_sql(
       SELECT neighbor_id, cv, cell FROM (
         SELECT neighbor_id, cv, cell,
                ROW_NUMBER() OVER (PARTITION BY neighbor_id
-                                  ORDER BY {d2.format(a='cv', b='centroid')}, cell) AS rn
+                                  ORDER BY {_SQL_D2.format(a='cv', b='centroid')}, cell) AS rn
         FROM c CROSS JOIN cent) WHERE rn = 1
     ),
     q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
@@ -592,11 +658,11 @@ def ivf_topk_oracle_sql(
       SELECT query_id, qv, cell FROM (
         SELECT query_id, qv, cell,
                ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY {d2.format(a='qv', b='centroid')}, cell) AS rn
+                                  ORDER BY {_SQL_D2.format(a='qv', b='centroid')}, cell) AS rn
         FROM q CROSS JOIN cent) WHERE rn <= {n_probe}
     ),
     scored AS (
-      SELECT query_id, neighbor_id, {cos} AS cosine
+      SELECT query_id, neighbor_id, {_sql_cos('qv', 'cv')} AS cosine
       FROM qprobe JOIN cassign USING (cell)
       WHERE query_id <> neighbor_id
     )
@@ -647,23 +713,15 @@ def embedding_near_dup_pairs(emb_aug: DataFrame, threshold: float = 0.99) -> Dat
     a = sided.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"), "blk")
     b = sided.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"), "blk")
     pairs = a.join(b, on="blk").filter(F.col("vec_a") < F.col("vec_b"))
-    cos = F.round(
-        _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb"))), 6
-    )
-    return pairs.select("vec_a", "vec_b", cos.alias("cosine")).filter(
+    return pairs.select("vec_a", "vec_b", _cosine("va", "vb").alias("cosine")).filter(
         F.col("cosine") >= threshold
     )
 
 
 def embedding_near_dup_oracle_sql(threshold: float = 0.99) -> str:
-    dot = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
-    )
     blk = " + ".join(
         f"CASE WHEN embedding[{i + 1}] > 0 THEN {1 << i} ELSE 0 END" for i in range(SIGN_BITS)
     )
-    cos = f"ROUND({dot.format(a='va', b='vb')} / (SQRT({dot.format(a='va', b='va')}) * SQRT({dot.format(a='vb', b='vb')})), 6)"
     return f"""
     WITH aug AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings
@@ -674,7 +732,7 @@ def embedding_near_dup_oracle_sql(threshold: float = 0.99) -> str:
     ),
     sided AS (SELECT vec_id, embedding, CAST({blk} AS BIGINT) AS blk FROM aug)
     SELECT vec_a, vec_b, cosine FROM (
-      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {cos.replace('va', 'a.embedding').replace('vb', 'b.embedding')} AS cosine
+      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {_sql_cos('a.embedding', 'b.embedding')} AS cosine
       FROM sided a JOIN sided b ON a.blk = b.blk AND a.vec_id < b.vec_id
     ) WHERE cosine >= {threshold}
     """
@@ -840,9 +898,7 @@ def pq_encode(
     Codebooks ride in the UDF closure (broadcast); the encode is a narrow
     vectorized Arrow pass, zero shuffle — the corpus compresses in place
     exactly like the IVF cell assignment."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(corpus.sparkSession)
+    ensure_worker_imports(corpus.sparkSession)
     S, C, ds = books.shape
 
     @F.pandas_udf(ArrayType(LongType()))
@@ -888,9 +944,7 @@ def pq_ann_topk(
     partition max, and the exact re-rank touches only candidates. The
     scan emits nothing for partitions whose best approx distance can't
     beat the candidate cut."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(queries.sparkSession)
+    ensure_worker_imports(queries.sparkSession)
     if index is not None:
         # prebuilt index (save_pq_index/load_pq_index): the Lloyd training
         # and the encode scan were paid at build time
@@ -903,21 +957,17 @@ def pq_ann_topk(
     S, C, ds = books.shape
     m = refine * k
 
-    from pyspark.sql.types import LongType as _L
-    from pyspark.sql.types import DoubleType as _D
-    from pyspark.sql.types import StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("query_id", _L()),
-            StructField("neighbor_id", _L()),
-            StructField("adist", _D()),
-        ]
-    )
-
-    def _make_scan(qids: np.ndarray, qtab: np.ndarray):
-        """Compressed-domain ADC scan over corpus codes for ONE bounded
-        query batch (qids/qtab ride the closure)."""
+    def probe(qids: np.ndarray, qmat: np.ndarray, _chunk) -> DataFrame:
+        """Compressed-domain ADC scan over the corpus codes for one wave
+        (qids and its ADC tables ride the closure)."""
+        if rotation is not None:
+            # OPQ: queries meet the codes in the ROTATED space (the exact
+            # re-rank stays in the raw space — scores never rotate)
+            qmat = _rotate_rows(qmat, rotation)
+        qsub = qmat.reshape(qmat.shape[0], S, ds)
+        # ADC tables: (Q, S, C) squared-L2 from each query subvector to
+        # every centroid
+        qtab = ((qsub[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1)
 
         def scan(batches):
             srange = np.arange(S)
@@ -944,85 +994,35 @@ def pq_ann_topk(
                     }
                 )
 
-        return scan
+        return codes.mapInPandas(scan, _ADC_SCHEMA)
 
-    def _adc_tables(rows) -> tuple[np.ndarray, np.ndarray]:
-        qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
-        qmat = np.array([r["qv"] for r in rows], dtype=np.float64)
-        if rotation is not None:
-            # OPQ: queries meet the codes in the ROTATED space (the exact
-            # re-rank below stays in the raw space — scores never rotate)
-            qmat = _rotate_rows(qmat, rotation)
-        qsub = qmat.reshape(qmat.shape[0], S, ds)
-        # ADC tables: (Q, S, C) squared-L2 from each query subvector to
-        # every centroid
-        qtab = ((qsub[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1)
-        return qids, qtab
+    # The ADC closure holds one wave of queries: above QUERY_BATCH_LIMIT
+    # the corpus codes are computed once (pinned) and scanned once per
+    # wave, and candidates union into ONE re-rank. Parity with the
+    # single-wave path is exact (the per-query scan never looks across
+    # queries); tested above the limit in tests/test_llm_ops.py.
+    return _adc_topk(
+        _vectors(queries, id_col, vec_col, "query_id", "qv"),
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv"),
+        probe, (codes,), m, k,
+    )
 
-    q_sel = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    # Driver-side-collect guard: the ADC closure holds the whole query
-    # batch, so above QUERY_BATCH_LIMIT fall back to hash-chunked batches —
-    # each chunk's collect and closure stay bounded, the corpus codes are
-    # computed once (persisted) and scanned once per chunk, and candidates
-    # union into ONE re-rank. Parity with the single-closure path is exact
-    # (the per-query scan never looks across queries); tested above the
-    # limit in tests/test_llm_ops.py.
-    q_head = q_sel.limit(QUERY_BATCH_LIMIT + 1).collect()
-    if len(q_head) <= QUERY_BATCH_LIMIT:
-        big_batch = False
-        qids, qtab = _adc_tables(sorted(q_head, key=lambda r: r["query_id"]))
-        cand = codes.mapInPandas(_make_scan(qids, qtab), out_schema)
-    else:
-        big_batch = True
-        n_q = q_sel.count()
-        n_chunks = -(-n_q // QUERY_BATCH_LIMIT)
-        codes = codes.persist()
-        chunk_key = F.pmod(F.xxhash64(F.col("query_id")), F.lit(n_chunks))
-        parts = []
-        for i in range(n_chunks):
-            rows = q_sel.filter(chunk_key == i).collect()
-            if not rows:
-                continue
-            qids, qtab = _adc_tables(sorted(rows, key=lambda r: r["query_id"]))
-            parts.append(codes.mapInPandas(_make_scan(qids, qtab), out_schema))
-        cand = parts[0]
-        for p in parts[1:]:
-            cand = cand.unionByName(p)
-        # Materialize the bounded candidate set (≤ n_q × m rows) NOW so the
-        # cached corpus codes can be released before returning — otherwise
-        # the persist would pin the full code table in executor memory for
-        # the life of the session (the returned DataFrame is lazy).
-        cand = cand.localCheckpoint(eager=True)
-        codes.unpersist()
 
-    wa = Window.partitionBy("query_id").orderBy(F.col("adist"), F.col("neighbor_id"))
-    cand = (
-        cand.withColumn("arn", F.row_number().over(wa))
-        .filter(F.col("arn") <= m)
-        .select("query_id", "neighbor_id")
-    )
-    # exact cosine re-rank of candidates only (same rounded formula and
-    # tiebreaks as the brute-force oracle); query side broadcast only when
-    # it is provably the small side
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    cos = F.round(_dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))), 6)
-    scored = (
-        cand.join(c, "neighbor_id")
-        .join(q if big_batch else F.broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+def _adc_topk(
+    q_sel: DataFrame, c_sel: DataFrame, probe, pin: tuple[DataFrame, ...], m: int, k: int
+) -> DataFrame:
+    """The PQ families' tail: ``probe``'s ADC candidates over the query
+    waves, the ``m`` nearest by adist per query, and the exact re-rank of
+    those (same rounded formula and tiebreaks as the brute-force oracle).
+    The query side is broadcast only when one wave held every query —
+    then it is provably the small side."""
+    cand, n_waves = _waves(q_sel, probe, pin, _ADC_SCHEMA)
+    survivors = _shortlist(cand, F.col("adist"), m).select("query_id", "neighbor_id")
+    return _rerank(
+        survivors.join(c_sel, "neighbor_id").join(
+            q_sel if n_waves > 1 else F.broadcast(q_sel), "query_id"
+        ),
+        k,
     )
 
 
@@ -1052,11 +1052,7 @@ def pq_codebooks_residual(
     )
     mat = np.array([r["v"] for r in rows], dtype=np.float64)
     cells, cmat = _collect_centroids(cent)
-    acc = np.zeros((mat.shape[0], cmat.shape[0]), dtype=np.float64)
-    for i in range(cmat.shape[1]):
-        d = mat[:, i, None] - cmat[None, :, i]
-        acc += d * d
-    nearest = np.argsort(acc, axis=1, kind="stable")[:, 0]
+    nearest = np.argsort(_sq_l2(mat, cmat), axis=1, kind="stable")[:, 0]
     resid = mat - cmat[nearest]
     return _pq_lloyd(resid, n_subspaces, n_centroids, train_iters)
 
@@ -1132,9 +1128,7 @@ def ivfpq_ann_topk(
     key (candidates ∝ probed-cell sizes, never O(n²)), ADC via one
     Arrow-batched numpy gather, candidate top-(refine·k) rank window,
     exact re-rank only on survivors."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(queries.sparkSession)
+    ensure_worker_imports(queries.sparkSession)
     if index is not None:
         # prebuilt (save_ivfpq_index/load_ivfpq_index): centroids, codebooks
         # and the coded corpus were all paid at build time — bit-identical
@@ -1163,13 +1157,7 @@ def ivfpq_ann_topk(
         if n_probe is None:
             n_probe = min(n_cells, max(8, n_cells // 16))
         cent = ivf_centroids(corpus, n_cells, id_col, vec_col)
-        cassign = ivf_assign(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-            cent,
-            1,
-            "neighbor_id",
-            "cv",
-        )
+        cassign = _assign(corpus, cent, 1, id_col, vec_col)
         if residual:
             books = pq_codebooks_residual(
                 corpus, cent, n_subspaces, n_centroids, id_col, vec_col
@@ -1195,59 +1183,22 @@ def ivfpq_ann_topk(
     if refine is None:
         refine = max(8, 2 * n_probe)
     S, C, ds = books.shape
-    q_sel = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+    qassign = _assign(queries, cent, n_probe, id_col, vec_col, "query_id", "qv").select(
+        "query_id", "cell"
     )
-
-    from pyspark.sql.types import DoubleType as _D
-
-    qassign = ivf_assign(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        cent,
-        n_probe,
-        "query_id",
-        "qv",
-    ).select("query_id", "cell")
-
-    # limit-probe instead of a count job (see graph_ann wave paths)
-    q_head = q_sel.limit(QUERY_BATCH_LIMIT + 1).collect()
-    if len(q_head) <= QUERY_BATCH_LIMIT:
-        n_chunks = 1
-    else:
-        n_q = q_sel.count()
-        n_chunks = max(1, -(-n_q // QUERY_BATCH_LIMIT))
-    big_batch = n_chunks > 1
-    if big_batch:
-        # wave probing: the coded corpus and the probe assignment are
-        # paid once and cached across waves; only the per-wave ADC
-        # tables (≤ LIMIT·S·C doubles, resp. ≤ LIMIT·n_probe tables on
-        # the residual path) live on the driver at a time
-        coded = coded.persist()
-        qassign = qassign.persist()
     if residual:
         cells_arr, cmat = _collect_centroids(cent)
         cell_pos = {int(c): i for i, c in enumerate(cells_arr)}
         key_mod = int(cells_arr.max()) + 1
-    chunk_expr = F.pmod(F.xxhash64(F.col("query_id")), F.lit(n_chunks))
-    parts = []
-    for ci in range(n_chunks):
-        qc = q_sel if n_chunks == 1 else q_sel.filter(chunk_expr == ci)
-        rows = q_head if n_chunks == 1 else qc.collect()
-        if not rows:
-            continue
-        rows.sort(key=lambda r: r["query_id"])
-        qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
-        qmat = np.array([r["qv"] for r in rows], dtype=np.float64)
-        qidx = {int(q): i for i, q in enumerate(qids)}
-        qa = qassign if n_chunks == 1 else qassign.filter(chunk_expr == ci)
 
+    def probe(qids: np.ndarray, qmat: np.ndarray, chunk) -> DataFrame:
+        qidx = {int(q): i for i, q in enumerate(qids)}
+        qa = qassign if chunk is None else qassign.filter(chunk)
         if residual:
             # per-(query, probed cell) ADC tables: the query residual
             # differs per cell. Bounded driver build per wave.
-            pair_rows = qa.collect()
             keys, tabs = [], []
-            for r in pair_rows:
+            for r in qa.collect():
                 qres = qmat[qidx[int(r["query_id"])]] - cmat[cell_pos[int(r["cell"])]]
                 qs = qres.reshape(S, ds)
                 tabs.append(((qs[:, None, :] - books) ** 2).sum(-1))  # (S, C)
@@ -1256,89 +1207,46 @@ def ivfpq_ann_topk(
             keys_sorted = np.array(keys, dtype=np.int64)[order]
             tab_stack = np.stack([tabs[i] for i in order])  # (P, S, C)
 
-            def _make_res(keys_sorted, tab_stack):
-                @F.pandas_udf(_D())
-                def _adist_res(
-                    qid: pd.Series, cell: pd.Series, code: pd.Series
-                ) -> pd.Series:
-                    if qid.empty:
-                        return pd.Series([], dtype=float)
-                    c = np.array(code.tolist(), dtype=np.int64)  # (N, S)
-                    key = qid.to_numpy(dtype=np.int64) * key_mod + cell.to_numpy(
-                        dtype=np.int64
-                    )
-                    pi = np.searchsorted(keys_sorted, key)
-                    srange = np.arange(S)
-                    return pd.Series(
-                        tab_stack[pi[:, None], srange[None, :], c].sum(1)
-                    )
+            @F.pandas_udf(DoubleType())
+            def _adist_res(qid: pd.Series, cell: pd.Series, code: pd.Series) -> pd.Series:
+                if qid.empty:
+                    return pd.Series([], dtype=float)
+                c = np.array(code.tolist(), dtype=np.int64)  # (N, S)
+                key = qid.to_numpy(dtype=np.int64) * key_mod + cell.to_numpy(dtype=np.int64)
+                pi = np.searchsorted(keys_sorted, key)
+                srange = np.arange(S)
+                return pd.Series(tab_stack[pi[:, None], srange[None, :], c].sum(1))
 
-                return _adist_res
-
-            adist = _make_res(keys_sorted, tab_stack)("query_id", "cell", "codes")
+            adist = _adist_res("query_id", "cell", "codes")
         else:
             qsub = qmat.reshape(qmat.shape[0], S, ds)
             qtab = ((qsub[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1)
 
-            def _make_raw(qidx, qtab):
-                @F.pandas_udf(_D())
-                def _adist(qid: pd.Series, code: pd.Series) -> pd.Series:
-                    if qid.empty:
-                        return pd.Series([], dtype=float)
-                    c = np.array(code.tolist(), dtype=np.int64)  # (N, S)
-                    qi = qid.map(qidx).to_numpy(dtype=np.int64)
-                    srange = np.arange(S)
-                    return pd.Series(qtab[qi[:, None], srange[None, :], c].sum(1))
+            @F.pandas_udf(DoubleType())
+            def _adist(qid: pd.Series, code: pd.Series) -> pd.Series:
+                if qid.empty:
+                    return pd.Series([], dtype=float)
+                c = np.array(code.tolist(), dtype=np.int64)  # (N, S)
+                qi = qid.map(qidx).to_numpy(dtype=np.int64)
+                srange = np.arange(S)
+                return pd.Series(qtab[qi[:, None], srange[None, :], c].sum(1))
 
-                return _adist
-
-            adist = _make_raw(qidx, qtab)("query_id", "codes")
-
-        parts.append(
+            adist = _adist("query_id", "codes")
+        return (
             F.broadcast(qa)
             .join(coded, "cell")
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .select("query_id", "neighbor_id", adist.alias("adist"))
         )
-    if not parts:  # zero queries: empty result, correct schema
-        return local_rows_df(
-            queries.sparkSession,
-            [],
-            "query_id long, neighbor_id long, rank int, cosine double",
-        )
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
-    if big_batch:
-        # materialize the bounded candidate set (≤ n_q × refine·k-ish
-        # rows per wave's top) so the cached corpus codes can be
-        # released before returning (the pq_ann_topk protocol)
-        cand = cand.localCheckpoint(eager=True)
-        coded.unpersist()
-        qassign.unpersist()
-    m = refine * k
-    wa = Window.partitionBy("query_id").orderBy(F.col("adist"), F.col("neighbor_id"))
-    survivors = (
-        cand.withColumn("arn", F.row_number().over(wa))
-        .filter(F.col("arn") <= m)
-        .select("query_id", "neighbor_id")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    )
-    cos = F.round(
-        _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))), 6
-    )
-    scored = (
-        survivors.join(c, "neighbor_id")
-        .join(q_sel if big_batch else F.broadcast(q_sel), "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+
+    # above one wave the coded corpus and the probe assignment are paid
+    # once and pinned across waves; only the per-wave ADC tables (≤
+    # LIMIT·S·C doubles, resp. ≤ LIMIT·n_probe tables on the residual
+    # path) live on the driver at a time
+    return _adc_topk(
+        _vectors(queries, id_col, vec_col, "query_id", "qv"),
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv"),
+        probe, (coded, qassign), refine * k, k,
     )
 
 
@@ -1362,35 +1270,13 @@ def matryoshka_ann_topk(
     Composable with the index families (probe cells with truncated
     vectors, rerank full) — this operator is the dimension cut alone,
     which keeps the whole thing SQL-expressible for the oracle."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    )
-    tq, tc = F.slice(F.col("qv"), 1, dims), F.slice(F.col("cv"), 1, dims)
-    coarse = F.round(_dot(tq, tc) / (_norm(tq) * _norm(tc)), 6)
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+    coarse = _cosine(F.slice(F.col("qv"), 1, dims), F.slice(F.col("cv"), 1, dims))
     cand = F.broadcast(q).join(c, F.col("query_id") != F.col("neighbor_id")).select(
         "query_id", "neighbor_id", "qv", "cv", coarse.alias("coarse")
     )
-    m = refine * k
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("coarse").desc(), F.col("neighbor_id")
-    )
-    fine = F.round(
-        _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))), 6
-    )
-    survivors = (
-        cand.withColumn("crn", F.row_number().over(wc))
-        .filter(F.col("crn") <= m)
-        .select("query_id", "neighbor_id", fine.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rerank(_shortlist(cand, F.col("coarse").desc(), refine * k), k)
 
 
 def pca_components(
@@ -1445,57 +1331,27 @@ def pca_ann_topk(
     family's JVM column math with rounded-cosine + id tiebreaks, so the
     Python stage only produces the projected VECTORS, never scores."""
     comps = pca_components(corpus, dims, id_col, vec_col)
+    ensure_worker_imports(corpus.sparkSession)
 
-    from pyspark.sql.types import ArrayType as _AT
-    from pyspark.sql.types import DoubleType as _DT
-
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(corpus.sparkSession)
-
-    @F.pandas_udf(_AT(_DT()))
+    @F.pandas_udf(ArrayType(DoubleType()))
     def project(vecs: pd.Series) -> pd.Series:
         if vecs.empty:
             return pd.Series([], dtype=object)
         v = np.array(vecs.tolist(), dtype=np.float64)
         return pd.Series(list(_rotate_rows(v, comps)))
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("pq", project(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("pv", project(F.col("cv")))
-    coarse = F.round(
-        _dot(F.col("pq"), F.col("pv")) / (_norm(F.col("pq")) * _norm(F.col("pv"))), 6
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv").withColumn(
+        "pq", project(F.col("qv"))
+    )
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv").withColumn(
+        "pv", project(F.col("cv"))
     )
     cand = (
         F.broadcast(q)
         .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qv", "cv", coarse.alias("coarse"))
+        .select("query_id", "neighbor_id", "qv", "cv", _cosine("pq", "pv").alias("coarse"))
     )
-    m = refine * k
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("coarse").desc(), F.col("neighbor_id")
-    )
-    fine = F.round(
-        _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))), 6
-    )
-    survivors = (
-        cand.withColumn("crn", F.row_number().over(wc))
-        .filter(F.col("crn") <= m)
-        .select("query_id", "neighbor_id", fine.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rerank(_shortlist(cand, F.col("coarse").desc(), refine * k), k)
 
 
 def matryoshka_topk_oracle_sql(
@@ -1503,16 +1359,6 @@ def matryoshka_topk_oracle_sql(
 ) -> str:
     """DuckDB mirror of :func:`matryoshka_ann_topk` (identical folds,
     slices, rounding and tiebreaks)."""
-    dot = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
-    )
-
-    def cos(a: str, b: str) -> str:
-        return (
-            f"ROUND({dot.format(a=a, b=b)} / "
-            f"(SQRT({dot.format(a=a, b=a)}) * SQRT({dot.format(a=b, b=b)})), 6)"
-        )
 
     m = refine * k
     return f"""
@@ -1521,13 +1367,13 @@ def matryoshka_topk_oracle_sql(
     c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
     cand AS (
       SELECT query_id, neighbor_id, qv, cv,
-             {cos('tq', 'tc')} AS coarse
+             {_sql_cos('tq', 'tc')} AS coarse
       FROM (SELECT query_id, neighbor_id, qv, cv,
                    qv[1:{dims}] AS tq, cv[1:{dims}] AS tc
             FROM q, c WHERE query_id <> neighbor_id)
     ),
     surv AS (
-      SELECT query_id, neighbor_id, {cos('qv', 'cv')} AS cosine
+      SELECT query_id, neighbor_id, {_sql_cos('qv', 'cv')} AS cosine
       FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                         ORDER BY coarse DESC, neighbor_id) AS crn
             FROM cand) WHERE crn <= {m}
@@ -1582,14 +1428,8 @@ def binary_quant_ann_topk(
     the family's rounded-cosine + id tiebreaks, so results are
     engine-exact against the DuckDB mirror
     (:func:`binary_quant_topk_oracle_sql`)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
 
     def sig(col: str):
         # bit 63 lands on the long's sign bit — fine: XOR/bit_count are
@@ -1609,26 +1449,7 @@ def binary_quant_ann_topk(
         .join(cs, F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "qv", "cv", ham.alias("ham"))
     )
-    m = refine * k
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("ham"), F.col("neighbor_id")
-    )
-    fine = F.round(
-        _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))), 6
-    )
-    survivors = (
-        cand.withColumn("hrn", F.row_number().over(wc))
-        .filter(F.col("hrn") <= m)
-        .select("query_id", "neighbor_id", fine.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rerank(_shortlist(cand, F.col("ham"), refine * k), k)
 
 
 def binary_quant_topk_oracle_sql(
@@ -1638,16 +1459,6 @@ def binary_quant_topk_oracle_sql(
     per-element (no 64-bit packing, sidestepping BIGINT bit-63 overflow
     in SQL) from the identical ``v[i] > 0`` sign predicate, identical
     tiebreaks and rounded-cosine re-rank."""
-    dot = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
-    )
-
-    def cos(a: str, b: str) -> str:
-        return (
-            f"ROUND({dot.format(a=a, b=b)} / "
-            f"(SQRT({dot.format(a=a, b=a)}) * SQRT({dot.format(a=b, b=b)})), 6)"
-        )
 
     ham = (
         f"list_reduce(list_prepend(0, list_transform(range(1, {dims} + 1), "
@@ -1664,7 +1475,7 @@ def binary_quant_topk_oracle_sql(
       FROM q, c WHERE query_id <> neighbor_id
     ),
     surv AS (
-      SELECT query_id, neighbor_id, {cos('qv', 'cv')} AS cosine
+      SELECT query_id, neighbor_id, {_sql_cos('qv', 'cv')} AS cosine
       FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                         ORDER BY ham, neighbor_id) AS hrn
             FROM cand) WHERE hrn <= {m}
@@ -1717,14 +1528,8 @@ def sq8_ann_topk(
     corpus scale. At 10¹¹ vectors the stats row is 2·dims doubles
     (broadcast, trivially), and the scan reads uint8-width data instead
     of float32 — the 4× I/O cut is the win the mode exists for."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
     # per-dimension min/max: one aggregate pass over the corpus (the whole
     # "codebook" is 2·dims doubles — mergeable across shards by min/max)
     stats = c.agg(
@@ -1750,34 +1555,12 @@ def sq8_ann_topk(
     cq = c.crossJoin(F.broadcast(stats)).select(
         "neighbor_id", "cv", _dq(F.col("cv"), F.col("mn"), F.col("mx")).alias("dq")
     )
-    coarse = F.round(
-        _dot(F.col("qv"), F.col("dq")) / (_norm(F.col("qv")) * _norm(F.col("dq"))), 6
-    )
     cand = (
         F.broadcast(q)
         .join(cq, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qv", "cv", coarse.alias("approx"))
+        .select("query_id", "neighbor_id", "qv", "cv", _cosine("qv", "dq").alias("approx"))
     )
-    m = refine * k
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("neighbor_id")
-    )
-    fine = F.round(
-        _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))), 6
-    )
-    survivors = (
-        cand.withColumn("qrn", F.row_number().over(wc))
-        .filter(F.col("qrn") <= m)
-        .select("query_id", "neighbor_id", fine.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rerank(_shortlist(cand, F.col("approx").desc(), refine * k), k)
 
 
 def sq8_topk_oracle_sql(
@@ -1788,16 +1571,6 @@ def sq8_topk_oracle_sql(
     the identical float-op order (ROUND half-away-from-zero matches
     Spark HALF_UP on the non-negative argument), same rounded-cosine
     coarse/fine ranks and id tiebreaks."""
-    dot = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
-    )
-
-    def cos(a: str, b: str) -> str:
-        return (
-            f"ROUND({dot.format(a=a, b=b)} / "
-            f"(SQRT({dot.format(a=a, b=a)}) * SQRT({dot.format(a=b, b=b)})), 6)"
-        )
 
     mn_list = ", ".join(f"MIN(cv[{i + 1}])" for i in range(dims))
     mx_list = ", ".join(f"MAX(cv[{i + 1}])" for i in range(dims))
@@ -1814,11 +1587,11 @@ def sq8_topk_oracle_sql(
     stats AS (SELECT list_value({mn_list}) AS mn, list_value({mx_list}) AS mx FROM c),
     cq AS (SELECT neighbor_id, cv, {dq} AS dq FROM c, stats),
     cand AS (
-      SELECT query_id, neighbor_id, qv, cv, {cos('qv', 'dq')} AS approx
+      SELECT query_id, neighbor_id, qv, cv, {_sql_cos('qv', 'dq')} AS approx
       FROM q, cq WHERE query_id <> neighbor_id
     ),
     surv AS (
-      SELECT query_id, neighbor_id, {cos('qv', 'cv')} AS cosine
+      SELECT query_id, neighbor_id, {_sql_cos('qv', 'cv')} AS cosine
       FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                         ORDER BY approx DESC, neighbor_id) AS qrn
             FROM cand) WHERE qrn <= {m}
@@ -1987,13 +1760,7 @@ def save_ivf_index(
     build = ivf_centroids_trained if trained else ivf_centroids
     cent = build(corpus, n_cells, id_col, vec_col)
     cent.coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
-    c = ivf_assign(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        cent,
-        1,
-        "neighbor_id",
-        "cv",
-    )
+    c = _assign(corpus, cent, 1, id_col, vec_col)
     c.write.mode("overwrite").parquet(path + "/cells")
 
 
@@ -2025,15 +1792,7 @@ def upsert_ivf_index(
     knob: retrain (save_ivf_index) when cell-size skew degrades probe
     recall — same contract as FAISS's add() vs retrain."""
     cent = spark.read.parquet(path + "/centroids")
-    add = ivf_assign(
-        new_vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        ),
-        cent,
-        1,
-        "neighbor_id",
-        "cv",
-    )
+    add = _assign(new_vectors, cent, 1, id_col, vec_col)
     add.write.mode("append").parquet(path + "/cells")
 
 
@@ -2072,13 +1831,7 @@ def save_ivfpq_index(
         books = pq_codebooks(corpus, n_subspaces, n_centroids, id_col, vec_col)
     spark = corpus.sparkSession
     _save_codebooks(spark, books, path + "/codebooks")
-    cassign = ivf_assign(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        cent,
-        1,
-        "neighbor_id",
-        "cv",
-    ).select("neighbor_id", "cell")
+    cassign = _assign(corpus, cent, 1, id_col, vec_col).select("neighbor_id", "cell")
     coded = _ivfpq_encode(corpus, cent, cassign, books, id_col, vec_col, residual)
     coded.write.mode("overwrite").parquet(path + "/coded")
     local_rows_df(spark, [(bool(residual),)], "residual boolean").write.mode(
@@ -2126,13 +1879,17 @@ def load_ivfpq_index(
     """→ (centroids, codebooks ndarray, coded corpus, meta) for
     ``ivfpq_ann_topk(index=…)``. ``meta['residual']`` is the persisted
     encoding convention (False for indexes written before the meta file
-    existed — those were always raw-coded)."""
+    existed — those were always raw-coded). Any other failure to read the
+    meta (a damaged ``meta/``) raises: guessing raw would run raw ADC
+    tables against residual codes with no error."""
     books = _load_codebooks(spark, path + "/codebooks")
     try:
         meta_rows = spark.read.parquet(path + "/meta").collect()
         meta = {"residual": bool(meta_rows[0]["residual"])}
-    except Exception:  # pre-meta index layout: raw by construction
-        meta = {"residual": False}
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        meta = {"residual": False}  # pre-meta index layout: raw by construction
     return (
         spark.read.parquet(path + "/centroids"),
         books,
@@ -2159,15 +1916,7 @@ def upsert_ivfpq_index(
     (save_ivfpq_index) when cell skew or quantization drift degrades
     recall."""
     cent, books, _coded, meta = load_ivfpq_index(spark, path)
-    cassign = ivf_assign(
-        new_vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        ),
-        cent,
-        1,
-        "neighbor_id",
-        "cv",
-    ).select("neighbor_id", "cell")
+    cassign = _assign(new_vectors, cent, 1, id_col, vec_col).select("neighbor_id", "cell")
     add = _ivfpq_encode(
         new_vectors, cent, cassign, books, id_col, vec_col, meta["residual"]
     )
@@ -2188,13 +1937,7 @@ def save_lsh_index(
     fixed seed, so only the signatures need storing; at 100 TB bucket
     the written table by (table, bucket) to make every probe join
     co-located."""
-    c = lsh_index(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        "cv",
-        dim,
-        n_planes,
-        n_tables,
-    )
+    c = _lsh_table(corpus, id_col, vec_col, dim, n_planes, n_tables)
     c.write.mode("overwrite").parquet(path)
 
 
@@ -2219,15 +1962,7 @@ def upsert_lsh_index(
     Same contract as ``upsert_ivf_index``; the ``dim/n_planes/n_tables``
     parameters must match the original build (they parameterize the
     seeded hyperplane draw)."""
-    add = lsh_index(
-        new_vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        ),
-        "cv",
-        dim,
-        n_planes,
-        n_tables,
-    )
+    add = _lsh_table(new_vectors, id_col, vec_col, dim, n_planes, n_tables)
     add.write.mode("append").parquet(path)
 
 
@@ -2289,28 +2024,16 @@ def kcenter_sample(
     sel_ids = [int(rows[0][0])]
     centers = [np.asarray(rows[0][1], dtype=np.float64)]
     out = [(0, sel_ids[0], 0.0)]
-    c_sel = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    from pyspark.sql.types import DoubleType as _D
-
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(corpus.sparkSession)
+    c_sel = _vectors(corpus, id_col, vec_col, "vec_id", "cv")
+    ensure_worker_imports(corpus.sparkSession)
     for order in range(1, k):
         cmat = np.stack(centers)
 
-        @F.pandas_udf(_D())
+        @F.pandas_udf(DoubleType())
         def d2min(vecs: pd.Series) -> pd.Series:
             if vecs.empty:
                 return pd.Series([], dtype=float)
-            v = np.array(vecs.tolist(), dtype=np.float64)
-            acc = np.zeros((v.shape[0], cmat.shape[0]), dtype=np.float64)
-            for i in range(cmat.shape[1]):  # the oracle's fold order
-                d = v[:, i, None] - cmat[None, :, i]
-                acc += d * d
-            return pd.Series(acc.min(axis=1))
+            return pd.Series(_sq_l2(np.array(vecs.tolist(), dtype=np.float64), cmat).min(axis=1))
 
         far = c_sel.select("vec_id", "cv", d2min(F.col("cv")).alias("d2"))
         # struct max: farthest first, ties → lowest id (-id max = min id)
@@ -2357,17 +2080,9 @@ def kcenter_sample_cells(
     and golden-pinnable. → (sel_order, vec_id, d2_far) with d2_far the
     squared L2 distance to the nearest PRIOR selected center within
     stage 3's representative set (0.0 for the seed), rounded 6dp."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(corpus.sparkSession)
+    ensure_worker_imports(corpus.sparkSession)
     cents = ivf_centroids(corpus, n_cells, id_col, vec_col)
-    assigned = ivf_assign(
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")),
-        cents,
-        1,
-        "vec_id",
-        "cv",
-    )
+    assigned = _assign(corpus, cents, 1, id_col, vec_col, "vec_id")
 
     def _cell_greedy(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
@@ -2377,20 +2092,13 @@ def kcenter_sample_cells(
         take = min(k, n)
         sel = [0]  # lowest id seeds, same rule as the exact form
         # distance-to-nearest-selected, dimension-at-a-time fold order
-        d2 = np.zeros(n, dtype=np.float64)
-        for i in range(v.shape[1]):
-            d = v[:, i] - v[0, i]
-            d2 += d * d
+        d2 = _sq_l2(v, v[:1])[:, 0]
         for _ in range(1, take):
             # farthest first; ties -> lowest id (argmax returns first max
             # on the id-sorted frame)
             j = int(np.argmax(d2))
             sel.append(j)
-            nd2 = np.zeros(n, dtype=np.float64)
-            for i in range(v.shape[1]):
-                d = v[:, i] - v[j, i]
-                nd2 += d * d
-            d2 = np.minimum(d2, nd2)
+            d2 = np.minimum(d2, _sq_l2(v, v[j : j + 1])[:, 0])
         out = pdf.iloc[sel]
         return out[["vec_id", "cv"]]
 
@@ -2408,18 +2116,11 @@ def kcenter_sample_cells(
     v = np.array([r["cv"] for r in rows], dtype=np.float64)
     take = min(k, len(ids))
     out = [(0, int(ids[0]), 0.0)]
-    d2 = np.zeros(len(ids), dtype=np.float64)
-    for i in range(v.shape[1]):
-        d = v[:, i] - v[0, i]
-        d2 += d * d
+    d2 = _sq_l2(v, v[:1])[:, 0]
     for order in range(1, take):
         j = int(np.argmax(d2))
         out.append((order, int(ids[j]), float(np.round(d2[j], 6))))
-        nd2 = np.zeros(len(ids), dtype=np.float64)
-        for i in range(v.shape[1]):
-            d = v[:, i] - v[j, i]
-            nd2 += d * d
-        d2 = np.minimum(d2, nd2)
+        d2 = np.minimum(d2, _sq_l2(v, v[j : j + 1])[:, 0])
     return local_rows_df(spark, out, "sel_order int, vec_id long, d2_far double")
 
 
@@ -2455,13 +2156,7 @@ def semantic_dedup(
     if n_cells is None:
         n_cells, _ = ivf_defaults(emb.count())
     cent = ivf_centroids(emb, n_cells, id_col, vec_col)
-    assigned = ivf_assign(
-        emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")),
-        cent,
-        1,
-        "vid",
-        "v",
-    )
+    assigned = _assign(emb, cent, 1, id_col, vec_col, "vid", "v")
     a = assigned.select(
         F.col("vid"), F.col("cell"), F.col("v").cast("array<double>").alias("va")
     )
@@ -2470,15 +2165,12 @@ def semantic_dedup(
         F.col("cell"),
         F.col("v").cast("array<double>").alias("vb"),
     )
-    cos = F.round(
-        _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb"))), 6
-    )
     dropped = a.join(
         b,
         on=[
             a.cell == b.cell,
             F.col("b_vid") < F.col("vid"),
-            cos >= threshold,
+            _cosine("va", "vb") >= threshold,
         ],
         how="left_semi",
     ).select(F.col("vid"))
@@ -2493,19 +2185,6 @@ def semantic_dedup(
 
 
 def semantic_dedup_oracle_sql(n_cells: int = 16, threshold: float = 0.99) -> str:
-    d2 = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(range(1, len({a}) + 1), i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))), "
-        "(x, y) -> x + y)"
-    )
-    dot = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
-    )
-    cos = (
-        f"ROUND({dot.format(a='a.va', b='b.va')} / "
-        f"(SQRT({dot.format(a='a.va', b='a.va')}) * SQRT({dot.format(a='b.va', b='b.va')})), 6)"
-    )
     return f"""
     WITH aug AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings
@@ -2521,13 +2200,13 @@ def semantic_dedup_oracle_sql(n_cells: int = 16, threshold: float = 0.99) -> str
       SELECT vec_id, va, cell FROM (
         SELECT vec_id, va, cell,
                ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY {d2.format(a='va', b='centroid')}, cell) AS rn
+                                  ORDER BY {_SQL_D2.format(a='va', b='centroid')}, cell) AS rn
         FROM src CROSS JOIN cent) WHERE rn = 1
     )
     SELECT a.vec_id, a.cell,
            NOT EXISTS (SELECT 1 FROM assigned b
                        WHERE b.cell = a.cell AND b.vec_id < a.vec_id
-                         AND {cos} >= {threshold}) AS is_kept
+                         AND {_sql_cos('a.va', 'b.va')} >= {threshold}) AS is_kept
     FROM assigned a
     """
 

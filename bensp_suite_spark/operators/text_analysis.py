@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import ensure_worker_imports
+
 # Tiny per-language stopword sets for the stopword-hit language heuristic.
 # Order = tie-break priority (first wins).
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -380,9 +382,7 @@ def bpe_tokenize_stats(
     budget actually pays for."""
     import pandas as pd
 
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(corpus.sparkSession)
+    ensure_worker_imports(corpus.sparkSession)
     ranks = {p: i for i, p in enumerate(merges)}
 
     def gen(batches):

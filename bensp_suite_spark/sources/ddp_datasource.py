@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import ensure_worker_imports
+
 DDP_SCHEMA = StructType(
     [
         StructField("path", StringType()),
@@ -106,8 +108,6 @@ class DdpDataSource(DataSource):
 
 def register_ddp_source(spark) -> None:
     """Idempotently register the ``ddp`` format on this session."""
-    from ..session import ensure_worker_imports
-
     ensure_worker_imports(spark)
     spark.dataSource.register(DdpDataSource)
 
@@ -120,8 +120,6 @@ def stream_ddp_records(spark, path: str, max_files_per_trigger: int | None = Non
     (exactly-once per file, T1 backpressure via ``maxFilesPerTrigger``)
     plus the shared record parser in a narrow Arrow stage. The archive is
     again the parallel unit; no shuffle is introduced by the source."""
-    from ..session import ensure_worker_imports
-
     ensure_worker_imports(spark)
     reader = spark.readStream.format("binaryFile").schema(
         "path string, modificationTime timestamp, length long, content binary"

@@ -45,6 +45,7 @@ from pyspark.sql.types import (
 )
 
 from ..dedup.pipeline import chunk_files
+from ..session import ensure_worker_imports
 
 DEDUP_STATE_SCHEMA = StructType(
     [
@@ -113,9 +114,7 @@ def _dedup_state_fn(
 
 def streaming_deduplicate(chunks: DataFrame) -> DataFrame:
     """Apply cross-batch first-wins dedup state to a streaming chunk frame."""
-    from ..session import ensure_worker_imports as _ewi
-
-    _ewi(chunks.sparkSession)
+    ensure_worker_imports(chunks.sparkSession)
     hashed = chunks.withColumn("sha1", F.sha1(F.col("data")))
     return hashed.groupBy("sha1").applyInPandasWithState(
         _dedup_state_fn,

@@ -479,6 +479,22 @@ def test_quality_checks_counts_planted_violations(spark):
     assert rep["unique(id)"] == (1, 6, False)
 
 
+def _count_waves(monkeypatch, module) -> list:
+    """Spy on ``module._waves``: the query count of each wave it probes."""
+    real = SIM._waves
+    waves: list = []
+
+    def spy(q_sel, probe, *args):
+        def counted(qids, qmat, chunk):
+            waves.append(len(qids))
+            return probe(qids, qmat, chunk)
+
+        return real(q_sel, counted, *args)
+
+    monkeypatch.setattr(module, "_waves", spy)
+    return waves
+
+
 def test_pq_ann_chunked_fallback_parity(spark, monkeypatch):
     """Above QUERY_BATCH_LIMIT pq_ann_topk hash-chunks the query batch so
     no driver collect/closure ever exceeds the limit; the chunked path
@@ -490,8 +506,10 @@ def test_pq_ann_chunked_fallback_parity(spark, monkeypatch):
     q = emb.filter(F.col("vec_id") < 8)
     base = sorted(map(tuple, SIM.pq_ann_topk(q, emb, k=5, refine=10).collect()))
     monkeypatch.setattr(SIM, "QUERY_BATCH_LIMIT", 3)
+    waves = _count_waves(monkeypatch, SIM)
     chunked = sorted(map(tuple, SIM.pq_ann_topk(q, emb, k=5, refine=10).collect()))
     assert chunked == base
+    assert len(waves) >= 2 and sum(waves) == 8
 
 
 def test_prebuilt_ann_indexes_match_inline(spark, tmp_path):
@@ -961,9 +979,11 @@ def test_ivfpq_wave_probing_parity(spark, monkeypatch):
                   residual=residual)
         base = sorted(map(tuple, SIM.ivfpq_ann_topk(q, emb, **kw).collect()))
         monkeypatch.setattr(SIM, "QUERY_BATCH_LIMIT", 3)
+        waves = _count_waves(monkeypatch, SIM)
         waved = sorted(map(tuple, SIM.ivfpq_ann_topk(q, emb, **kw).collect()))
         monkeypatch.undo()
         assert waved == base
+        assert len(waves) >= 2 and sum(waves) == 8
 
 
 def test_ivfpq_residual_index_roundtrip_and_convention_guard(spark, tmp_path):
@@ -1077,10 +1097,12 @@ def test_nsw_wave_probing_parity(spark, monkeypatch):
     q = emb.filter(F.col("vec_id") < 10)
     kw = dict(k=3, n_shards=3, m=6, ef_build=16, ef_search=12)
     base = sorted(map(tuple, GA.nsw_ann_topk(q, emb, **kw).collect()))
-    monkeypatch.setattr(GA, "QUERY_BATCH_LIMIT", 3)
+    monkeypatch.setattr(SIM, "QUERY_BATCH_LIMIT", 3)
+    waves = _count_waves(monkeypatch, GA)
     waved = sorted(map(tuple, GA.nsw_ann_topk(q, emb, **kw).collect()))
     monkeypatch.undo()
     assert waved == base
+    assert len(waves) >= 2 and sum(waves) == 10
 
 
 def test_nsw_build_determinism_and_degree_cap(spark):
