@@ -75,6 +75,7 @@ from .similarity import (
     _pq_lloyd,
     _rerank,
     _save_codebooks,
+    _train_sample,
     _vectors,
     _waves,
     ivf_assign,
@@ -758,13 +759,7 @@ def _unit_pq_codebooks(
     the per-cell encode and the independent golden mirror share one IEEE
     op sequence end to end. Bounded driver sample, same contract as
     ``similarity.pq_codebooks``."""
-    rows = (
-        corpus.filter(F.col(id_col) < train_sample)
-        .orderBy(id_col)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)
+    mat = _train_sample(corpus, id_col, vec_col, train_sample)
     mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     return _pq_lloyd(mat, n_subspaces, n_centroids, 8)
 

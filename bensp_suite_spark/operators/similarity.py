@@ -123,6 +123,18 @@ def _vectors(df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: str) 
     )
 
 
+def _train_sample(corpus: DataFrame, id_col: str, vec_col: str, n: int) -> np.ndarray:
+    """The bounded driver-side training sample: the vectors of the rows
+    with id < ``n`` in ascending id order, as a float64 (N, D) matrix."""
+    rows = (
+        corpus.filter(F.col(id_col) < n)
+        .orderBy(id_col)
+        .select(F.col(vec_col).cast("array<double>").alias("v"))
+        .collect()
+    )
+    return np.array([r["v"] for r in rows], dtype=np.float64)
+
+
 def _waves(
     q_sel: DataFrame, probe, pin: tuple[DataFrame, ...] = (), schema: str = _CAND_SCHEMA
 ) -> tuple[DataFrame, int]:
@@ -788,13 +800,7 @@ def opq_rotation(
     on (sum, subspace id), and ``np.linalg.eigh``/``svd`` of the same
     float64 matrix are reproducible on a given host. Driver cost is the
     bounded sample only — the full corpus never leaves the executors."""
-    rows = (
-        corpus.filter(F.col(id_col) < train_sample)
-        .orderBy(id_col)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )
-    X = np.array([r["v"] for r in rows], dtype=np.float64)  # (N, D)
+    X = _train_sample(corpus, id_col, vec_col, train_sample)  # (N, D)
     d = X.shape[1]
     if d % n_subspaces:
         raise ValueError(f"dim {d} not divisible by n_subspaces {n_subspaces}")
@@ -850,13 +856,7 @@ def pq_codebooks(
     index order, so the codebooks are bit-stable across runs (what the
     golden oracle needs). At 100 TB the sample cap IS the design: k-means
     on a bounded driver-side sample, codebooks broadcast."""
-    rows = (
-        corpus.filter(F.col(id_col) < train_sample)
-        .orderBy(id_col)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)  # (N, D)
+    mat = _train_sample(corpus, id_col, vec_col, train_sample)  # (N, D)
     if rotation is not None:
         mat = _rotate_rows(mat, rotation)
     return _pq_lloyd(mat, n_subspaces, n_centroids, train_iters)
@@ -1044,13 +1044,7 @@ def pq_codebooks_residual(
     sample as :func:`pq_codebooks`; the nearest-cell choice accumulates
     dimension-at-a-time in index order (the :func:`ivf_assign` parity
     contract)."""
-    rows = (
-        corpus.filter(F.col(id_col) < train_sample)
-        .orderBy(id_col)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)
+    mat = _train_sample(corpus, id_col, vec_col, train_sample)
     cells, cmat = _collect_centroids(cent)
     nearest = np.argsort(_sq_l2(mat, cmat), axis=1, kind="stable")[:, 0]
     resid = mat - cmat[nearest]
@@ -1291,13 +1285,7 @@ def pca_components(
     lowest-id sample (same contract as pq_codebooks/opq_rotation).
     Returns (D, dims) float64. Deterministic: ``np.linalg.eigh`` of the
     same matrix, descending eigenvalue order with a stable sort."""
-    rows = (
-        corpus.filter(F.col(id_col) < train_sample)
-        .orderBy(id_col)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )
-    X = np.array([r["v"] for r in rows], dtype=np.float64)
+    X = _train_sample(corpus, id_col, vec_col, train_sample)
     cov = X.T @ X / len(X)
     lam, E = np.linalg.eigh(cov)
     order = np.argsort(-lam, kind="stable")

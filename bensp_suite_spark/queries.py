@@ -1735,7 +1735,8 @@ def stream_windowed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 3 files → 3 micro-batches: enough to prove cross-batch state/watermark
         # behavior; each extra availableNow micro-batch costs ~0.7 s of fixed
         # micro-batch overhead on local mode
-        ev.repartition(3).write.mode("overwrite").parquet(src)
+        with _fixture_build("stream_windowed_metrics"):
+            ev.repartition(3).write.mode("overwrite").parquet(src)
         stream = _replay(spark, "ts timestamp, event_type string, value double", src)
         agg = DS.windowed_event_metrics(stream, window="1 day", watermark="2 days")
         qname = f"winq_{uuid.uuid4().hex[:8]}"
@@ -4468,7 +4469,8 @@ def stream_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = f"{base}/src"
         out = f"{base}/out"
         ckpt = f"{base}/ckpt"
-        docs.repartition(3).write.mode("overwrite").parquet(src)
+        with _fixture_build("stream_passage_dedup"):
+            docs.repartition(3).write.mode("overwrite").parquet(src)
         stream = _replay(spark, "doc_id long, text string", src)
         with _stateful_stream_parts(spark, src):
             TDS.stream_passage_dedup(spark, stream, out, ckpt)
@@ -4497,7 +4499,8 @@ def stream_exact_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     with _scratch("bensp_stream_exact_") as base:
-        docs.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
+        with _fixture_build("stream_exact_doc_dedup"):
+            docs.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
         stream = _replay(spark, "doc_id long, text string", f"{base}/src")
         with _stateful_stream_parts(spark, f"{base}/src"):
             TDS.stream_exact_dedup(spark, stream, f"{base}/out", f"{base}/ckpt")
@@ -4521,7 +4524,8 @@ def stream_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding")
     with _scratch("bensp_stream_ann_") as base:
-        queries_df.repartition(2).write.mode("overwrite").parquet(f"{base}/src")
+        with _fixture_build("stream_ann_brute_topk"):
+            queries_df.repartition(2).write.mode("overwrite").parquet(f"{base}/src")
         stream = _replay(spark, "vec_id long, embedding array<float>", f"{base}/src")
         ANS.stream_ann_topk(
             spark, stream, emb, f"{base}/out", f"{base}/ckpt", k=5, mode="bruteforce"
@@ -5011,7 +5015,8 @@ def stream_topk_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
     with _scratch("bensp_stream_topk_") as base:
-        ev.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
+        with _fixture_build("stream_topk_per_key"):
+            ev.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
         stream = _replay(
             spark, "event_id long, event_type string, value double", f"{base}/src"
         )
@@ -5072,7 +5077,8 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0).alias("value"),
     )
     with _scratch("bensp_stream_sess_") as base:
-        ev.unionByName(sentinel).repartition(5).write.parquet(f"{base}/src")
+        with _fixture_build("stream_session_windows"):
+            ev.unionByName(sentinel).repartition(5).write.parquet(f"{base}/src")
         stream = spark.readStream.schema(_EVENT_STREAM_SCHEMA).parquet(f"{base}/src")
         with _stateful_stream_parts(spark, f"{base}/src"):
             ES.run_to_parquet(ES.session_counts(stream), f"{base}/out", f"{base}/ckpt")
@@ -5105,7 +5111,8 @@ def stream_per_key_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
     with _scratch("bensp_stream_quota_") as base:
-        docs.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
+        with _fixture_build("stream_per_key_quota"):
+            docs.repartition(3).write.mode("overwrite").parquet(f"{base}/src")
         stream = _replay(spark, "doc_id long, source string", f"{base}/src")
         with _stateful_stream_parts(spark, f"{base}/src"):
             QS.stream_per_key_quota(

@@ -13,22 +13,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _write_batch(df: DataFrame, out_dir: str, batch_id: int) -> None:
-    """Idempotent micro-batch sink: each batch owns the partition
-    directory ``out_dir/batch_id=<id>`` and OVERWRITES it, so a
-    micro-batch retried after a sink-side failure replaces its own
-    half-written output instead of appending duplicates (plain
-    mode("append") would double rows on retry and break the
-    "drained result equals the batch golden verbatim" contract).
-    Readers see batch_id as a discovered partition column — drop it."""
-    df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+from ..multimodal.audio_landmarks import snippet_match
+from ..operators import similarity as SIM
+from ..operators.graph_ann import nsw_ann_topk, nsw_routed_pq_ann_topk
+from ._sink import foreach_batch
+from ._sink import read_batches as read_sink  # noqa: F401  (callers import it from here)
 
 
-def read_sink(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read a `_write_batch` sink back without the batch_id partition
-    column (arrival batching is an execution detail, not a result)."""
-    return spark.read.parquet(out_dir).drop("batch_id")
+def _probe(stream: DataFrame, out_dir: str, checkpoint_dir: str, topk, wait: bool):
+    """Drain ``stream`` with ``topk(batch_df)`` per non-empty micro-batch,
+    each batch's result in its own ``out_dir/batch_id=<id>`` directory."""
+    return foreach_batch(
+        stream,
+        out_dir,
+        checkpoint_dir,
+        lambda batch_df, _batch_id: None if batch_df.isEmpty() else topk(batch_df),
+        wait,
+    )
 
 
 def stream_ann_topk(
@@ -41,27 +42,16 @@ def stream_ann_topk(
     mode: str = "bruteforce",
     await_termination: bool = True,
 ):
-    """Rank each arriving query vector against ``corpus``; append
-    (query_id, neighbor_id, rank, cosine) to a parquet sink. ``mode``:
+    """Rank each arriving query vector against ``corpus``; each batch's
+    (query_id, neighbor_id, rank, cosine) rows overwrite its own
+    ``out_dir/batch_id=<id>`` directory. ``mode``:
     "bruteforce" (exact) or "lsh" (bucketed candidates)."""
-    from ..operators import similarity as SIM
-
     fn = SIM.cosine_topk_bruteforce if mode == "bruteforce" else SIM.lsh_ann_topk
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _write_batch(fn(batch_df, corpus, k=k), out_dir, batch_id)
-
-    q = (
-        query_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _probe(
+        query_stream, out_dir, checkpoint_dir,
+        lambda b: fn(b, corpus, k=k), await_termination,
     )
-    if await_termination:
-        q.awaitTermination()
-    return q
 
 
 def stream_snippet_match(
@@ -79,28 +69,14 @@ def stream_snippet_match(
     micro-batch — the live "what is playing" service shape): landmark
     extraction is stateless per snippet, the hash join + offset vote +
     top-k need only that snippet's landmarks, so per-batch results are
-    exact regardless of trigger sizing. Appends
-    (query_id, media_id, offset_frames, votes, rank) to a parquet sink."""
-    from ..multimodal.audio_landmarks import snippet_match
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _write_batch(
-            snippet_match(batch_df, corpus_landmarks, k=k, min_votes=min_votes),
-            out_dir,
-            batch_id,
-        )
-
-    q = (
-        snippet_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    exact regardless of trigger sizing. Each batch's
+    (query_id, media_id, offset_frames, votes, rank) rows overwrite its
+    own ``out_dir/batch_id=<id>`` directory."""
+    return _probe(
+        snippet_stream, out_dir, checkpoint_dir,
+        lambda b: snippet_match(b, corpus_landmarks, k=k, min_votes=min_votes),
+        await_termination,
     )
-    if await_termination:
-        q.awaitTermination()
-    return q
 
 
 def stream_routed_pq_topk(
@@ -121,29 +97,13 @@ def stream_routed_pq_topk(
     cells, ADC-beams the code-only shards, and exact-reranks from the
     static raw corpus; per-batch results are exact regardless of trigger
     sizing, so the drained set equals the batch probe."""
-    from ..operators.graph_ann import nsw_routed_pq_ann_topk
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _write_batch(
-            nsw_routed_pq_ann_topk(
-                batch_df, corpus, index, k=k, n_probe=n_probe,
-                ef_search=ef_search,
-            ),
-            out_dir,
-            batch_id,
-        )
-
-    q = (
-        query_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _probe(
+        query_stream, out_dir, checkpoint_dir,
+        lambda b: nsw_routed_pq_ann_topk(
+            b, corpus, index, k=k, n_probe=n_probe, ef_search=ef_search
+        ),
+        await_termination,
     )
-    if await_termination:
-        q.awaitTermination()
-    return q
 
 
 def stream_nsw_topk(
@@ -162,23 +122,8 @@ def stream_nsw_topk(
     per micro-batch — the build was paid offline, each batch pays only
     the beams + the exact re-rank, so the drained result set equals the
     batch probe regardless of trigger sizing."""
-    from ..operators.graph_ann import nsw_ann_topk
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _write_batch(
-            nsw_ann_topk(batch_df, corpus, k=k, ef_search=ef_search, index=index),
-            out_dir,
-            batch_id,
-        )
-
-    q = (
-        query_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _probe(
+        query_stream, out_dir, checkpoint_dir,
+        lambda b: nsw_ann_topk(b, corpus, k=k, ef_search=ef_search, index=index),
+        await_termination,
     )
-    if await_termination:
-        q.awaitTermination()
-    return q

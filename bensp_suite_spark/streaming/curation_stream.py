@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipelines.curation import MAX_TOP_TOKEN_FRAC, MIN_UNIQUE_RATIO, MIN_WORDS
+from ._sink import run_to_parquet
 
 
 def quality_expr_columns(docs: DataFrame) -> DataFrame:
@@ -75,12 +76,4 @@ def stream_curate(
     checkpoint_dir: str,
 ) -> None:
     """Drain the curated stream to parquet (availableNow, T5)."""
-    (
-        curated_stream(docs_stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_to_parquet(curated_stream(docs_stream), out_dir, checkpoint_dir)

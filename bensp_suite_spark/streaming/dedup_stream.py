@@ -13,7 +13,7 @@ Reference semantics → Spark Structured Streaming:
   three batches later still resolves its reference — the hard part flagged
   in SURVEY §7;
 - ordered emission (T6/O1): ``foreachBatch`` sorts each batch by
-  (file_id, l1, l2) before appending; batch ids are monotonic so the
+  (file_id, l1, l2) before writing it; batch ids are monotonic so the
   (batch_id, l1, l2) order is total for a file-ordered source;
 - termination (T5, queue_terminate) → ``Trigger.AvailableNow``.
 
@@ -32,7 +32,7 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -46,6 +46,7 @@ from pyspark.sql.types import (
 
 from ..dedup.pipeline import chunk_files
 from ..session import ensure_worker_imports
+from ._sink import Markers, foreach_batch, write_batch
 
 DEDUP_STATE_SCHEMA = StructType(
     [
@@ -163,7 +164,8 @@ def stream_encode(
     await_termination: bool = True,
     chunk_parallelism: int | None = None,
 ):
-    """Run the streaming encode: chunk → stateful dedup → ordered append.
+    """Run the streaming encode: chunk → stateful dedup → ordered
+    per-batch write (each batch overwrites ``out_dir/batch_id=<id>``).
 
     ``files_stream`` is a streaming DataFrame with (file_id, content) — e.g.
     a parquet readStream with maxFilesPerTrigger, or binaryFile readStream
@@ -191,26 +193,16 @@ def stream_encode(
         F.sum("size").alias("bytes"),
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # T6/O1: intra-batch total order restore before the sink, with the
-        # micro-batch id carried so (batch_id, file_id, l1, l2) is a total
-        # order across the run.
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .orderBy("file_id", "l1", "l2")
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
-    q = (
-        flagged.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    # T6/O1: intra-batch total order restore before the sink; the batch's
+    # directory carries its micro-batch id, so (batch_id, file_id, l1, l2)
+    # is a total order across the run.
+    return foreach_batch(
+        flagged,
+        out_dir,
+        checkpoint_dir,
+        lambda batch_df, _id: batch_df.orderBy("file_id", "l1", "l2"),
+        await_termination,
     )
-    if await_termination:
-        q.awaitTermination()
-    return q
 
 
 def windowed_event_metrics(
@@ -371,30 +363,18 @@ def stream_encode_merge(
     from ..dedup.pipeline import chunk_hash_compress, chunk_hash_compress_jvm
     from ..session import has_jvm_kernel
 
-    # All checkpoint probes/markers go through the Hadoop FileSystem API so
-    # the sink honors the checkpoint dir's actual scheme (file://, hdfs://,
-    # s3a://...) — an os.path probe on an HDFS checkpoint would silently
-    # report "no prior winners" every batch and re-elect canonical winners,
-    # the exact first-wins breakage the have_prev comment below guards.
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-
-    def _hpath(p: str):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    def _fs(p: str):
-        return _hpath(p).getFileSystem(hconf)
-
+    # Probes and markers go through Markers (the Hadoop FileSystem), so an
+    # HDFS checkpoint never reports "no prior winners" and re-elects
+    # canonical winners — the first-wins breakage have_prev below guards.
     winners_dir = _pp.join(checkpoint_dir, "winners")
-    commits_dir = _pp.join(checkpoint_dir, "merge_commits")
-    _fs(commits_dir).mkdirs(_hpath(commits_dir))
+    winners = Markers(spark, winners_dir, prefix="batch_id=")
+    commits = Markers(spark, _pp.join(checkpoint_dir, "merge_commits"))
     use_jvm = compress_type in ("gzip", "none", "bzip2", "zstd") and has_jvm_kernel(spark)
     if chunk_parallelism is None:
         chunk_parallelism = spark.sparkContext.defaultParallelism
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        marker = _pp.join(commits_dir, str(batch_id))
-        if _fs(marker).exists(_hpath(marker)):
+    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if commits.done(batch_id):
             return
         # Same fix as stream_encode's chunk_parallelism: a micro-batch's
         # task count equals its SOURCE FILE count, so a 2-file trigger
@@ -424,12 +404,7 @@ def stream_encode_merge(
         # silently re-elect canonical winners and re-emit payloads for
         # digests already deduplicated (first-wins would be broken with
         # no error surfaced).
-        wfs = _fs(winners_dir)
-        wpath = _hpath(winners_dir)
-        have_prev = wfs.exists(wpath) and any(
-            st.getPath().getName().startswith("batch_id=")
-            for st in wfs.listStatus(wpath)
-        )
+        have_prev = bool(winners.ids())
         if have_prev:
             prev = (
                 spark.read.parquet(winners_dir)
@@ -481,9 +456,8 @@ def stream_encode_merge(
             F.coalesce("c_l2", F.col("__w.l2")).alias("canonical_l2"),
             F.lit(batch_id).alias("batch_id"),
         )
-        out_batch_dir = _pp.join(out_dir, f"batch_id={batch_id}")
-        out.orderBy("file_id", "l1", "l2").write.mode("overwrite").parquet(
-            out_batch_dir
+        out_batch_dir = write_batch(
+            out.orderBy("file_id", "l1", "l2"), out_dir, batch_id
         )
         # Newly-won digests are exactly the output's non-dup rows (a batch
         # winner already in the history is flagged dup), so the winners
@@ -502,20 +476,9 @@ def stream_encode_merge(
                 F.lit(batch_id).alias("batch_id"),
             )
         )
-        new_winners.write.mode("overwrite").parquet(
-            _pp.join(winners_dir, f"batch_id={batch_id}")
-        )
+        write_batch(new_winners, winners_dir, batch_id)
         fused.unpersist()
-        mout = _fs(marker).create(_hpath(marker), True)
-        try:
-            mout.write(bytearray(b"committed"))
-        finally:
-            mout.close()
+        commits.mark(batch_id)
 
-    q = (
-        files_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # per_batch writes its own directories and returns None
+    foreach_batch(files_stream, out_dir, checkpoint_dir, per_batch)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._sink import run_to_parquet  # noqa: F401  (callers import it from here)
+
 
 def interval_join(
     clicks: DataFrame,
@@ -83,19 +85,4 @@ def session_counts(
         .groupBy(F.session_window(F.col("ts"), gap).alias("w"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id", F.col("w.start").alias("session_start"), "n_events")
-    )
-
-
-def run_to_parquet(joined: DataFrame, out_dir: str, checkpoint_dir: str) -> None:
-    """Drain an append-mode streaming DataFrame to parquet (availableNow,
-    T5 termination semantics — same driver shape as the dedup/ANN
-    streams)."""
-    (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )

@@ -12,9 +12,11 @@ a stream".
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from ..ferret.pipeline import ferret_topk
+from ._sink import foreach_batch
 
 
 def stream_similarity_search(
@@ -30,28 +32,19 @@ def stream_similarity_search(
 ):
     """query_stream: streaming DataFrame of vecsets (image_id, name,
     regions) — e.g. images_to_vecsets over a binaryFile readStream.
-    Results append to ``out_dir`` parquet with the micro-batch id."""
-    from pyspark.sql import functions as F
-
+    Each batch's ranked results overwrite its own
+    ``out_dir/batch_id=<id>`` directory. A corpus that was not cached on
+    entry is cached for the drain and released after an awaited one."""
+    cached_before = corpus.storageLevel != StorageLevel.NONE
     corpus = corpus.cache()  # static side: scan once, reuse per trigger
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def per_batch(batch_df: DataFrame, batch_id: int) -> DataFrame | None:
         if batch_df.isEmpty():
-            return
+            return None
         result = ferret_topk(batch_df, corpus, top_k=top_k, dim=dim, mode=mode)
-        (
-            result.withColumn("batch_id", F.lit(batch_id))
-            .orderBy("q_image_id", "rank")  # T6 ordered emission
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        return result.orderBy("q_image_id", "rank")  # T6 ordered emission
 
-    q = (
-        query_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
+    q = foreach_batch(query_stream, out_dir, checkpoint_dir, per_batch, await_termination)
+    if await_termination and not cached_before:
+        corpus.unpersist()
     return q

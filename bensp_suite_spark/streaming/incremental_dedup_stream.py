@@ -68,6 +68,7 @@ import json as _json
 import os as _os
 import posixpath as _pp
 import shutil as _shutil
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,6 +84,7 @@ from ..operators.dedup_text import (
     matched_history_pairs,
     sized_bloom_m,
 )
+from ._sink import Markers, foreach_batch, write_batch
 
 #: partition value for the caller-seeded day-0 signatures
 SEED_BATCH_ID = -1
@@ -109,11 +111,8 @@ def seed_signatures(
     h, s = history_signatures(history)
     h = h.withColumn("last_seen", F.lit(SEED_BATCH_ID).cast("long"))
     s = s.withColumn("last_seen", F.lit(SEED_BATCH_ID).cast("long"))
-    seed_h = _pp.join(sig_dir, "hashes", f"batch_id={SEED_BATCH_ID}")
-    h.write.mode("overwrite").parquet(seed_h)
-    s.write.mode("overwrite").parquet(
-        _pp.join(sig_dir, "sims", f"batch_id={SEED_BATCH_ID}")
-    )
+    seed_h = write_batch(h, _pp.join(sig_dir, "hashes"), SEED_BATCH_ID)
+    seed_s = write_batch(s, _pp.join(sig_dir, "sims"), SEED_BATCH_ID)
     if use_bloom:
         spark = history.sparkSession
         seed_hashes = spark.read.parquet(seed_h)
@@ -125,9 +124,7 @@ def seed_signatures(
             BLOOM_K,
             floor_m=bloom_floor_m,
         )
-        seed_sims = spark.read.parquet(
-            _pp.join(sig_dir, "sims", f"batch_id={SEED_BATCH_ID}")
-        )
+        seed_sims = spark.read.parquet(seed_s)
         m_b = sized_bloom_m(
             seed_sims.count() * (max_hamming + 1), BLOOM_K, floor=bloom_floor_m
         )
@@ -140,6 +137,16 @@ def seed_signatures(
             max_hamming=max_hamming,
             floor_m=bloom_floor_m,
         )
+
+
+def _concurrently(*fns) -> list:
+    """Run independent callables on their own driver threads (guide §2.6:
+    pay one latency, not one per call); → their results, in order."""
+    if len(fns) < 2:
+        return [fn() for fn in fns]
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futs = [pool.submit(fn) for fn in fns]
+        return [f.result() for f in futs]
 
 
 def _write_packed_bloom(
@@ -232,15 +239,7 @@ def _rebuild_blooms_after_expiry(
 
     # independent bitsets over independent tables — overlap the rebuilds
     # (guide §2.6), same reasoning as the compaction roll-ups
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(_rebuild_hash_bloom),
-            pool.submit(_rebuild_band_bloom),
-        ]
-        for f in futs:
-            f.result()
+    _concurrently(_rebuild_hash_bloom, _rebuild_band_bloom)
 
 
 def compact_signature_state(
@@ -313,14 +312,12 @@ def compact_signature_state(
     # the two tables' roll-ups are independent (separate directories,
     # separate swap protocols) — overlap them so the maintenance pause
     # costs one roll-up latency, not two (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(_compact_one, table, col)
-            for table, col in (("hashes", "content_hash"), ("sims", "hist_sim"))
-        ]
-        return max(f.result() for f in futs)
+    return max(
+        _concurrently(
+            lambda: _compact_one("hashes", "content_hash"),
+            lambda: _compact_one("sims", "hist_sim"),
+        )
+    )
 
 
 def stream_incremental_dedup(
@@ -361,32 +358,14 @@ def stream_incremental_dedup(
             "retention_window requires compact_every — the expiry filter "
             "lives inside the compaction roll-up (daily_cli's protocol)"
         )
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-
-    def _hpath(p: str):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    def _fs(p: str):
-        return _hpath(p).getFileSystem(hconf)
-
     hashes_dir = _pp.join(sig_dir, "hashes")
     sims_dir = _pp.join(sig_dir, "sims")
-    commits_dir = _pp.join(checkpoint_dir, "incr_commits")
-    _fs(commits_dir).mkdirs(_hpath(commits_dir))
-    seed = _pp.join(hashes_dir, f"batch_id={SEED_BATCH_ID}")
-    if not _fs(seed).exists(_hpath(seed)):
+    commits = Markers(spark, _pp.join(checkpoint_dir, "incr_commits"))
+    if not Markers(spark, hashes_dir, prefix="batch_id=").done(SEED_BATCH_ID):
         raise ValueError(
             f"no seeded signature state at {sig_dir} — call seed_signatures "
             "first (an unseeded stream would silently keep historical dups)"
         )
-
-    def _committed_ids() -> set[int]:
-        return {
-            int(_os.path.basename(p))
-            for p in _glob.glob(_os.path.join(commits_dir, "*"))
-            if _os.path.basename(p).lstrip("-").isdigit()
-        }
 
     # bloom state is read from disk ONCE per run and carried in memory
     # across batches — this sink is the only writer, so the in-memory
@@ -396,9 +375,8 @@ def stream_incremental_dedup(
     # drift item; the per-batch WRITE stays (durability for restart).
     _blooms: dict = {"loaded": False, "bloom": None, "band": None}
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        marker = _pp.join(commits_dir, str(batch_id))
-        if _fs(marker).exists(_hpath(marker)):
+    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if commits.done(batch_id):
             return
         if compact_every is not None:
             n_parts = len(_glob.glob(_os.path.join(hashes_dir, "batch_id=*")))
@@ -409,7 +387,7 @@ def stream_incremental_dedup(
                     else None
                 )
                 compact_signature_state(
-                    spark, sig_dir, _committed_ids(), expire_before=expire
+                    spark, sig_dir, commits.ids(), expire_before=expire
                 )
                 if expire is not None:
                     _rebuild_blooms_after_expiry(
@@ -483,9 +461,7 @@ def stream_incremental_dedup(
                 near_pairs=pairs,
             ).persist()
             try:
-                flags.write.mode("overwrite").parquet(
-                    _pp.join(out_dir, f"batch_id={batch_id}")
-                )
+                write_batch(flags, out_dir, batch_id)
                 survivors = batch_df.join(
                     flags.filter(F.col("is_kept")).select("doc_id"),
                     "doc_id",
@@ -530,27 +506,15 @@ def stream_incremental_dedup(
                         .withColumn("last_seen", F.lit(batch_id).cast("long"))
                     )
                     day_s = day_s.unionByName(resight_s)
-                batch_h_dir = _pp.join(hashes_dir, f"batch_id={batch_id}")
                 # the two state appends are independent single-directory
                 # writes over already-cached inputs — overlap them so the
                 # batch pays one write latency, not two (guide §2.6);
                 # exactly-once is untouched (both precede the marker, and
                 # a replay overwrites both)
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fh = pool.submit(
-                        lambda: day_h.write.mode("overwrite").parquet(
-                            batch_h_dir
-                        )
-                    )
-                    fs = pool.submit(
-                        lambda: day_s.write.mode("overwrite").parquet(
-                            _pp.join(sims_dir, f"batch_id={batch_id}")
-                        )
-                    )
-                    fh.result()
-                    fs.result()
+                batch_h_dir, batch_s_dir = _concurrently(
+                    lambda: write_batch(day_h, hashes_dir, batch_id),
+                    lambda: write_batch(day_s, sims_dir, batch_id),
+                )
                 # the two sidecar advances are INDEPENDENT (different
                 # input dirs, different output files, different _blooms
                 # keys) — overlap them in the same 2-thread pattern as
@@ -580,9 +544,7 @@ def stream_incremental_dedup(
                     from ..operators.sketches import bloom_merge_packed
 
                     add_b = history_band_bloom(
-                        spark.read.parquet(
-                            _pp.join(sims_dir, f"batch_id={batch_id}")
-                        ),
+                        spark.read.parquet(batch_s_dir),
                         max_hamming=max_hamming,
                         m=band_bloom[1],
                         k=band_bloom[2],
@@ -604,21 +566,10 @@ def stream_incremental_dedup(
                     )
                     _blooms["band"] = (merged_bb, band_bloom[1], band_bloom[2])
 
-                _advances = [
-                    fn
-                    for fn, enabled in (
-                        (_advance_hash_bloom, bloom is not None),
-                        (_advance_band_bloom, band_bloom is not None),
-                    )
-                    if enabled
-                ]
-                if len(_advances) == 2:
-                    with ThreadPoolExecutor(max_workers=2) as pool:
-                        futs = [pool.submit(fn) for fn in _advances]
-                        for f in futs:
-                            f.result()
-                elif _advances:
-                    _advances[0]()
+                _concurrently(
+                    *([_advance_hash_bloom] if bloom is not None else []),
+                    *([_advance_band_bloom] if band_bloom is not None else []),
+                )
                 if on_survivors is not None:
                     # downstream maintenance (e.g. ANN index upsert) runs
                     # pre-marker: a crash here replays the batch against
@@ -632,16 +583,7 @@ def stream_incremental_dedup(
             if retention_window is not None:
                 pairs.unpersist()
             batch_df.unpersist()
-        mout = _fs(marker).create(_hpath(marker), True)
-        try:
-            mout.write(bytearray(b"committed"))
-        finally:
-            mout.close()
+        commits.mark(batch_id)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # per_batch writes its own directories and returns None
+    foreach_batch(docs_stream, out_dir, checkpoint_dir, per_batch)

@@ -3,7 +3,7 @@
 analog for streams.
 
 Each trigger evaluates every row-level check in one pass over the batch
-(same single-aggregation compilation as batch mode) and appends one report
+(same single-aggregation compilation as batch mode) and writes one report
 row per check, stamped with the batch id and evaluated at ingestion time —
 the quality time series a corpus build monitors/alerts on. Uniqueness is
 deliberately absent here: per-key uniqueness across an unbounded stream is
@@ -13,9 +13,9 @@ the dedup problem (stream_exact_dedup's state), not a per-batch assertion.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.quality_checks import Check, run_checks
+from ._sink import foreach_batch
 
 
 def stream_quality_reports(
@@ -25,21 +25,9 @@ def stream_quality_reports(
     out_dir: str,
     checkpoint_dir: str,
 ) -> None:
-    """Drain the stream (availableNow), appending per-batch check reports:
-    (batch_id, check, violations, total, passed)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            run_checks(batch_df, checks)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
-    (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    """Drain the stream, each batch's check reports
+    (check, violations, total, passed, batch_id) overwriting its own
+    ``out_dir/batch_id=<id>`` directory."""
+    foreach_batch(
+        stream, out_dir, checkpoint_dir, lambda batch_df, _id: run_checks(batch_df, checks)
     )

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ._sink import run_to_parquet
+
 
 def _quota_fn(quota: int):
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
@@ -142,11 +144,4 @@ def stream_per_key_quota(
     """Drain the quota-limited stream to parquet (availableNow, T5)."""
     cols = [f.strip().split(" ")[0] for f in output_schema.split(",")]
     limited = per_key_quota(docs_stream.select(*cols), key, quota, output_schema)
-    (
-        limited.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_to_parquet(limited, out_dir, checkpoint_dir)

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._sink import run_to_parquet
+
 
 def hashed_docs(docs: DataFrame, normalized: bool = True) -> DataFrame:
     """(doc_id, content_hash) with the same normalization as the batch
@@ -34,14 +36,7 @@ def stream_exact_dedup(
     """Run the streaming first-wins document dedup to a parquet sink
     (availableNow: drains whatever is in the source, T5)."""
     winners = hashed_docs(docs_stream).dropDuplicates(["content_hash"])
-    (
-        winners.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_to_parquet(winners, out_dir, checkpoint_dir)
 
 
 def stream_exact_dedup_ttl(
@@ -78,14 +73,7 @@ def stream_exact_dedup_ttl(
     winners = hashed.withWatermark("event_ts", horizon).dropDuplicatesWithinWatermark(
         ["content_hash"]
     )
-    (
-        winners.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_to_parquet(winners, out_dir, checkpoint_dir)
 
 
 def stream_passage_dedup(
@@ -114,11 +102,4 @@ def stream_passage_dedup(
     winners = passages(docs_stream, words_per_passage).dropDuplicates(
         ["passage_md5"]
     )
-    (
-        winners.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_to_parquet(winners, out_dir, checkpoint_dir)

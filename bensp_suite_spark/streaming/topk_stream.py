@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ._sink import foreach_batch
+
 
 def _topk_fn(k: int):
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
@@ -81,21 +83,12 @@ def stream_topk_per_key(
     order_col: str,
     k: int = 5,
 ) -> None:
-    """Drain (availableNow) appending each trigger's refreshed top-K with
-    its batch id; rows at max(batch_id) per key are the current top-K."""
-    from pyspark.sql import functions as F
-
-    ranked = topk_per_key(stream, key, item_col, order_col, k)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            out_dir
-        )
-
-    (
-        ranked.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    """Drain, each trigger's refreshed top-K overwriting its own
+    ``out_dir/batch_id=<id>`` directory; rows at max(batch_id) per key are
+    the current top-K."""
+    foreach_batch(
+        topk_per_key(stream, key, item_col, order_col, k),
+        out_dir,
+        checkpoint_dir,
+        lambda batch_df, _id: batch_df,
     )

@@ -1,20 +1,25 @@
 """Streaming pipeline tests: cross-batch dedup state equals the batch
 pipeline; windowed event-time metrics equal the batch aggregation; ordered
-emission per batch (SURVEY §2.8 T1/T5/T6/T7/T8)."""
+emission per batch (SURVEY §2.8 T1/T5/T6/T7/T8); every sink writes a
+replayed micro-batch once."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
+import pathlib
 import shutil
 import tempfile
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from bensp_suite_spark.dedup import fixtures, pipeline
-from bensp_suite_spark.streaming import dedup_stream
+from bensp_suite_spark.ferret import fixtures as FF
+from bensp_suite_spark.streaming import _sink, dedup_stream
 
 from .conftest import SF_CORRECT
 
@@ -382,13 +387,13 @@ def test_stream_ann_sink_idempotent_on_retry(spark, tmpdir):
     own prior (possibly partial) output, not append a second copy — each
     batch owns its batch_id partition directory (ADVICE r8)."""
     from bensp_suite_spark.operators import similarity as SIM
-    from bensp_suite_spark.streaming import ann_stream
+    from bensp_suite_spark.streaming import _sink, ann_stream
 
     emb = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet")
     res = SIM.cosine_topk_bruteforce(emb.filter("vec_id < 4"), emb, k=5)
     out = os.path.join(tmpdir, "out")
-    ann_stream._write_batch(res, out, 3)
-    ann_stream._write_batch(res, out, 3)  # simulated micro-batch retry
+    _sink.write_batch(res, out, 3)
+    _sink.write_batch(res, out, 3)  # simulated micro-batch retry
     got = ann_stream.read_sink(spark, out)
     assert "batch_id" not in got.columns
     assert got.count() == res.count()
@@ -705,8 +710,8 @@ def test_streaming_curation_matches_batch_front_half(spark, tmpdir):
 def test_stream_encode_merge_matches_batch_and_is_idempotent(spark, tmpdir):
     """The throughput-oriented merge sink (all-JVM, parquet winners table)
     produces the same digest multiset + dup counts as the batch pipeline,
-    resolves every dup to a live canonical chunk, and replaying a
-    committed batch directory is a no-op (commit markers)."""
+    resolves every dup to a live canonical chunk, and writes a commit
+    marker per batch."""
     import os as _os
 
     files = fixtures.synthetic_docs(spark, n_files=24, file_bytes=16384, seed=31)
@@ -743,19 +748,8 @@ def test_stream_encode_merge_matches_batch_and_is_idempotent(spark, tmpdir):
         "left_semi",
     )
     assert resolved.count() == dups.count()
-
-    # idempotency: a replayed committed batch leaves output untouched
-    before = got.count()
-    markers = sorted(_os.listdir(os.path.join(ckpt, "merge_commits")))
-    assert markers, "no commit markers written"
-    # re-running the whole stream from the same checkpoint is a no-op
-    stream2 = (
-        spark.readStream.schema("file_id long, content binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    dedup_stream.stream_encode_merge(spark, stream2, out, ckpt)
-    assert spark.read.parquet(out).count() == before
+    # test_sink_replay_after_a_lost_commit_writes_the_batch_once replays a batch
+    assert _os.listdir(os.path.join(ckpt, "merge_commits")), "no commit markers written"
 
 
 def test_files_source_default_and_resume_on_append(spark, tmpdir):
@@ -1760,3 +1754,121 @@ def test_compact_signature_state_self_heals_interrupted_swap(spark, tmp_path):
         [p for p in os.listdir(hashes_root) if p.startswith("batch_id=")]
     )
     assert n_parts == 1
+
+
+# ---------------------------------------------------------------------------
+# The shared sink layer (streaming/_sink.py)
+# ---------------------------------------------------------------------------
+
+
+def _replay_case(spark, case, src):
+    """Writes a two-file source at ``src``; → (schema, run(stream, out, ckpt))."""
+    from bensp_suite_spark.operators import quality_checks as QC
+    from bensp_suite_spark.streaming import ann_stream, ferret_stream
+    from bensp_suite_spark.streaming import quality_stream, topk_stream
+
+    if case.startswith("stream_encode"):
+        df, key = fixtures.synthetic_docs(spark, n_files=2, file_bytes=4096, seed=5), "file_id"
+        run = lambda s, o, c: getattr(dedup_stream, case)(spark, s, o, c)
+    elif case == "ferret":
+        corpus = FF.synthetic_corpus(spark, m=8, n_clusters=2)
+        df, key = FF.synthetic_queries(spark, corpus, q=2), "image_id"
+        run = lambda s, o, c: ferret_stream.stream_similarity_search(
+            spark, s, corpus, o, c, top_k=2
+        )
+    elif case == "topk":
+        df = spark.read.parquet(f"{SF_CORRECT}/events.parquet")
+        df, key = df.select("event_type", "event_id", "value"), "event_id"
+        run = lambda s, o, c: topk_stream.stream_topk_per_key(
+            spark, s, o, c, key="event_type", item_col="event_id", order_col="value", k=3
+        )
+    elif case == "quality":
+        df, key = spark.range(6).selectExpr("id", "CAST(id - 1 AS double) AS score"), "id"
+        checks = [QC.not_null("score"), QC.in_range("score", 0, 10)]
+        run = lambda s, o, c: quality_stream.stream_quality_reports(
+            spark, s, checks, o, c
+        )
+    else:
+        emb = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet")
+        df, key = emb.filter("vec_id < 4"), "vec_id"
+        run = lambda s, o, c: ann_stream.stream_ann_topk(spark, s, emb, o, c, k=3)
+    df.repartitionByRange(2, key).write.parquet(src)
+    return df.schema, run
+
+
+@pytest.mark.parametrize(
+    "case", ["stream_encode", "ferret", "topk", "quality", "ann_bruteforce", "stream_encode_merge"]
+)
+def test_sink_replay_after_a_lost_commit_writes_the_batch_once(spark, tmpdir, case):
+    """A crash after the sink wrote its last batch but before Spark logged
+    that batch's commit: deleting ``commits/N`` makes the rerun replay
+    batch N with the same id, and the sink must end with the same rows."""
+    from bensp_suite_spark.queries import _stateful_stream_parts
+
+    src, out, ckpt = (os.path.join(tmpdir, d) for d in ("src", "out", "ckpt"))
+    schema, run = _replay_case(spark, case, src)
+
+    def drain():
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+        with _stateful_stream_parts(spark, src):  # 2 shuffle partitions for a tiny source
+            run(stream, out, ckpt)
+        return sorted(tuple(map(repr, r)) for r in spark.read.parquet(out).collect())
+
+    first = drain()
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    assert first and last >= 1, "the source should drain in two triggers"
+    for name in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(commits, name))
+    assert drain() == first
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_markers_list_what_they_mark(spark, tmpdir, scheme):
+    commits = _sink.Markers(spark, scheme + os.path.join(tmpdir, "commits"))
+    assert commits.ids() == set() and not commits.done(0)
+    for batch_id in (2, 0, -1):
+        commits.mark(batch_id)
+    assert commits.ids() == {-1, 0, 2} and commits.done(2) and not commits.done(1)
+    # the checksum side files Hadoop's local FS writes are not markers
+    assert any(n.endswith(".crc") for n in os.listdir(os.path.join(tmpdir, "commits")))
+    parts = _sink.Markers(spark, scheme + os.path.join(tmpdir, "t"), prefix="batch_id=")
+    _sink.write_batch(spark.range(1), parts.dir, 3)
+    assert parts.ids() == {3} and parts.done(3)
+
+
+def test_stream_ferret_releases_only_the_corpus_cache_it_made(spark, tmpdir):
+    """The corpus cache belongs to the call, not to its batches: an empty
+    source drains in no trigger and still shows it."""
+    from bensp_suite_spark.streaming import ferret_stream
+
+    corpus = FF.synthetic_corpus(spark, m=4, n_clusters=2)
+    os.makedirs(os.path.join(tmpdir, "src"))
+
+    def search(run):
+        stream = spark.readStream.schema(corpus.schema).parquet(os.path.join(tmpdir, "src"))
+        out, ckpt = (os.path.join(tmpdir, f"{d}{run}") for d in ("out", "ckpt"))
+        ferret_stream.stream_similarity_search(spark, stream, corpus, out, ckpt)
+
+    search(1)
+    assert corpus.storageLevel == StorageLevel.NONE
+    corpus.cache()
+    try:
+        search(2)
+        assert corpus.storageLevel != StorageLevel.NONE
+    finally:
+        corpus.unpersist()
+
+
+def test_streams_sink_only_through_the_sink_module():
+    """foreachBatch, availableNow triggers, mode("append") writes and
+    Hadoop fs.Path constructions appear in streaming/ only in _sink.py."""
+    banned = ("foreachBatch(", "availableNow=", ".mode('append')", "fs.Path(")
+    found = [
+        f"{path.name}:{node.lineno}"
+        for path in pathlib.Path(_sink.__file__).parent.glob("*.py")
+        if path.name != "_sink.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call) and any(b in ast.unparse(node) for b in banned)
+    ]
+    assert found == []
