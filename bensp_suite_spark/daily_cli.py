@@ -37,10 +37,7 @@ expiry (OR can't unset bits).
 SIG_DIR holds the signature state:
   hashes/step=<id>/   distinct normalized content md5s (``content_hash``)
                       + ``last_seen`` (day of newest sighting; 0 when
-                      ``--day`` is not used), written WITH a parquet bloom
-                      filter on the column — point lookups against the
-                      winners table skip row groups
-                      (operators/layout.write_with_bloom)
+                      ``--day`` is not used)
   sims/step=<id>/     per-doc SimHash fingerprints (``hist_sim``)
   bloom.bin+.json     packed Bloom bitset over the hashes — the probe-
                       before-join prefilter (dedup_text.history_bloom),
@@ -49,7 +46,7 @@ SIG_DIR holds the signature state:
                       history's SimHash band values (history_band_bloom)
                       pre-filters the banded join; dropped automatically
                       if --max-hamming differs from the build's
-  _steps/<id>         commit markers, written LAST
+  _steps/<id>         commit markers (streaming/_sink.Markers), written LAST
 
 Each ``step`` is IDEMPOTENT: state appends go to the step's OWN
 ``step=<id>`` partitions (self-overwriting on retry), flags are computed
@@ -59,52 +56,32 @@ a bitwise OR (replay-idempotent by algebra), and the marker is written
 last — a scheduler retry of a committed step is a no-op instead of the
 silent double-append ADVICE.md flagged. Growth proof unchanged: state row
 counts track survivors, not history size. Inputs need (doc_id, text).
+
+The state protocol (seed, step, bloom sidecars, roll-up and its
+directory swap, expiry rebuild) lives in ``signature_state.py``, shared
+with the streaming form (``streaming/incremental_dedup_stream``); this
+CLI keys it by string step ids. ``compact`` folds the partitions whose
+``_steps`` marker exists and swaps each table through
+``operators/layout.swap_dir``, which first heals a swap a crash
+interrupted.
 """
 
 from __future__ import annotations
 
 import argparse
-import glob
-import json
 import os
 import re
-import shutil
 import sys
 import time
 
+from .signature_state import Layout
 
-def _read_bloom(sig_dir: str, name: str = "bloom") -> tuple[bytes, int, int] | None:
-    meta_p = os.path.join(sig_dir, f"{name}.json")
-    bin_p = os.path.join(sig_dir, f"{name}.bin")
-    if not (os.path.exists(meta_p) and os.path.exists(bin_p)):
-        return None
-    with open(meta_p) as fh:
-        meta = json.load(fh)
-    with open(bin_p, "rb") as fh:
-        return fh.read(), int(meta["m"]), int(meta["k"])
-
-
-def _write_bloom(sig_dir: str, packed: bytes, m: int, k: int, name: str = "bloom",
-                 **meta) -> None:
-    # tmp + rename so a torn write can never corrupt the bitset
-    tmp = os.path.join(sig_dir, f"{name}.bin.tmp")
-    with open(tmp, "wb") as fh:
-        fh.write(packed)
-    os.replace(tmp, os.path.join(sig_dir, f"{name}.bin"))
-    with open(os.path.join(sig_dir, f"{name}.json"), "w") as fh:
-        json.dump({"m": m, "k": k, **meta}, fh)
-
-
-def _bloom_floor(sig_dir: str, name: str = "bloom") -> int:
-    """Configured floor geometry from the sidecar meta (legacy metas
-    without it fall back to the module default)."""
-    from .operators.dedup_text import BLOOM_M
-
-    meta_p = os.path.join(sig_dir, f"{name}.json")
-    if os.path.exists(meta_p):
-        with open(meta_p) as fh:
-            return int(json.load(fh).get("floor_m", BLOOM_M))
-    return BLOOM_M
+#: step ids are unordered names: a step sees every partition but its own,
+#: so a replay never sees its own half-written rows; the seed is ``init``,
+#: stamped day 0
+LAYOUT = Layout(
+    col="step", col_type="string", seed_key="init", seed_stamp=0, ordered=False,
+)
 
 
 def _step_id_from(batch_path: str) -> str:
@@ -181,188 +158,37 @@ def main(argv: list[str] | None = None) -> int:
             print(f"error: input not found: {p}", file=sys.stderr)
             return 2
 
-    from pyspark.sql import functions as F
-
-    from .operators.dedup_text import (
-        BLOOM_K,
-        BLOOM_M,
-        batch_signatures,
-        history_band_bloom,
-        history_bloom,
-        history_signatures,
-        incremental_dedup,
-        matched_history_pairs,
-        sized_bloom_m,
-    )
-    from .operators.layout import write_with_bloom
+    from . import signature_state as S
+    from .operators.dedup_text import BLOOM_M
     from .session import get_spark
+    from .streaming._sink import Markers
 
     spark = get_spark("bensp-daily-cli", shuffle_partitions=args.threads)
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.perf_counter()
-
-    hashes_dir = os.path.join(args.sig_dir, "hashes")
-    sims_dir = os.path.join(args.sig_dir, "sims")
-    steps_dir = os.path.join(args.sig_dir, "_steps")
-
-    def _part(root: str, step: str) -> str:
-        return os.path.join(root, f"step={step}")
+    markers = Markers(spark, os.path.join(args.sig_dir, "_steps"))
 
     if args.cmd == "init":
-        hist = spark.read.parquet(args.history)
-        h, s = history_signatures(hist)
-        # day-0 sighting stamp — the retention clock starts here
-        h = h.withColumn("last_seen", F.lit(0).cast("long"))
-        s = s.withColumn("last_seen", F.lit(0).cast("long"))
-        write_with_bloom(h, _part(hashes_dir, "init"), ["content_hash"])
-        s.write.mode("overwrite").parquet(_part(sims_dir, "init"))
-        # cardinality-scaled geometry (sized_bloom_m): a fixed m would
-        # saturate under a large day-0 corpus; the chosen m rides the
-        # sidecar meta so step advances OR into the same bitset
-        init_h = spark.read.parquet(_part(hashes_dir, "init"))
-        m_h = sized_bloom_m(init_h.count())
-        _write_bloom(
-            args.sig_dir,
-            history_bloom(init_h, m=m_h, k=BLOOM_K),
-            m_h,
-            BLOOM_K,
-            floor_m=BLOOM_M,
+        S.seed(
+            spark.read.parquet(args.history), args.sig_dir, LAYOUT,
+            use_bloom=True, max_hamming=3, floor_m=BLOOM_M,
         )
-        init_s = spark.read.parquet(_part(sims_dir, "init"))
-        m_b = sized_bloom_m(init_s.count() * 4)  # bands = max_hamming+1
-        _write_bloom(
-            args.sig_dir,
-            history_band_bloom(init_s, m=m_b, k=BLOOM_K),
-            m_b,
-            BLOOM_K,
-            name="band_bloom",
-            max_hamming=3,
-            floor_m=BLOOM_M,
-        )
-        os.makedirs(steps_dir, exist_ok=True)
-        open(os.path.join(steps_dir, "init"), "w").close()
+        markers.mark(LAYOUT.seed_key)
         if args.verbose:
             print(
-                f"init: {spark.read.parquet(hashes_dir).count()} hashes, "
-                f"{spark.read.parquet(sims_dir).count()} fingerprints "
-                f"in {time.perf_counter() - t0:.2f}s -> {args.sig_dir}"
+                f"init: {spark.read.parquet(os.path.join(args.sig_dir, 'hashes')).count()} "
+                f"hashes, {spark.read.parquet(os.path.join(args.sig_dir, 'sims')).count()} "
+                f"fingerprints in {time.perf_counter() - t0:.2f}s -> {args.sig_dir}"
             )
-        spark.stop()
-        return 0
-
-    if args.cmd == "compact":
-        # Merge every COMMITTED step partition into step=init; uncommitted
-        # partials (a crashed step that will replay) are left in place —
-        # its replay overwrites them. Old markers stay, so replays of
-        # already-committed steps remain no-ops after compaction. The swap
-        # goes rename-old → rename-new (compact_small_files' protocol);
-        # the exact check is a semi join, so even a crash that briefly
-        # leaves a hash visible twice cannot fan out flag rows.
-        committed = set(os.listdir(steps_dir)) if os.path.isdir(steps_dir) else set()
-        files_before = len(
-            glob.glob(os.path.join(args.sig_dir, "*", "**", "*.parquet"), recursive=True)
-        )
-        for root, col, blooms in (
-            (hashes_dir, "content_hash", True),
-            (sims_dir, "hist_sim", False),
-        ):
-            parts = [
-                p for p in glob.glob(os.path.join(root, "step=*"))
-                if p.split("step=")[-1] in committed
-            ]
-            if len(parts) <= 1:
-                continue
-            tmp, bak = root + "._compact_tmp", root + "._compact_old"
-            if os.path.exists(bak) and not os.path.exists(root):
-                # crash between the two swap renames left the root
-                # missing — restore it; the merge below just re-runs
-                os.rename(bak, root)
-            for stale in (tmp, bak):
-                if os.path.exists(stale):
-                    shutil.rmtree(stale)
-            raw = spark.read.option("mergeSchema", "true").parquet(*parts)
-            # collapse sightings to the NEWEST per value (legacy rows
-            # without the column count as day 0), then apply the
-            # retention cutoff — the expiry filter lives exactly in the
-            # compaction swap so it shares its crash protocol. Both
-            # tables expire: hashes by exact re-sightings, fingerprints
-            # by near-match re-sightings (step --day writes both), so a
-            # re-crawled EXPIRED doc is new end to end.
-            ls = (
-                F.coalesce(F.col("last_seen"), F.lit(0))
-                if "last_seen" in raw.columns
-                else F.lit(0)
-            )
-            merged = raw.groupBy(col).agg(
-                F.max(ls).cast("long").alias("last_seen")
-            )
-            if args.expire_before is not None:
-                merged = merged.filter(F.col("last_seen") >= args.expire_before)
-            # hash-bucketed multi-file seed — the groupBy above already
-            # partitioned by value, so writing it directly parallelizes
-            # the roll-up instead of funnelling 10⁸-10⁹ rows of window-
-            # bounded state through one task (r9 verdict #1); readers
-            # glob the directory, the swap renames it atomically
-            out_part = os.path.join(tmp, "step=init")
-            if blooms:
-                write_with_bloom(merged, out_part, [col])
-            else:
-                merged.write.mode("overwrite").parquet(out_part)
-            uncommitted = [
-                p for p in glob.glob(os.path.join(root, "step=*")) if p not in parts
-            ]
-            for p in uncommitted:  # carry crashed partials across the swap
-                shutil.move(p, os.path.join(tmp, os.path.basename(p)))
-            os.rename(root, bak)
-            os.rename(tmp, root)
-            shutil.rmtree(bak)
-        if args.expire_before is not None and _read_bloom(args.sig_dir):
-            # expired bits can't be unset by OR — rebuild the bitsets from
-            # the surviving state so the prefilters track it (a stale
-            # over-full bloom would stay CORRECT — false positives
-            # resolve in the joins — just progressively useless). Each
-            # rebuild RE-SIZES from the surviving cardinality
-            # (sized_bloom_m): the bitset grows with a swelling window
-            # and shrinks back to the floor when it drains
-            with open(os.path.join(args.sig_dir, "bloom.json")) as fh:
-                floor_h = int(json.load(fh).get("floor_m", BLOOM_M))
-            surviving_h = spark.read.parquet(hashes_dir)
-            m_h = sized_bloom_m(surviving_h.count(), floor=floor_h)
-            _write_bloom(
-                args.sig_dir,
-                history_bloom(surviving_h, m=m_h, k=BLOOM_K),
-                m_h,
-                BLOOM_K,
-                floor_m=floor_h,
-            )
-            old_bb = _read_bloom(args.sig_dir, "band_bloom")
-            if old_bb is not None:
-                with open(os.path.join(args.sig_dir, "band_bloom.json")) as fh:
-                    bb_meta = json.load(fh)
-                bb_mh = bb_meta.get("max_hamming", 3)
-                floor_b = int(bb_meta.get("floor_m", BLOOM_M))
-                surviving_s = spark.read.parquet(sims_dir)
-                m_b = sized_bloom_m(
-                    surviving_s.count() * (bb_mh + 1), floor=floor_b
-                )
-                _write_bloom(
-                    args.sig_dir,
-                    history_band_bloom(
-                        surviving_s, max_hamming=bb_mh, m=m_b, k=BLOOM_K
-                    ),
-                    m_b,
-                    BLOOM_K,
-                    name="band_bloom",
-                    max_hamming=bb_mh,
-                    floor_m=floor_b,
-                )
-        files_after = len(
-            glob.glob(os.path.join(args.sig_dir, "*", "**", "*.parquet"), recursive=True)
-        )
+    elif args.cmd == "compact":
+        # Old markers stay, so replays of already-committed steps remain
+        # no-ops after compaction.
+        folded = S.roll_up(spark, args.sig_dir, LAYOUT, markers.done, args.expire_before)
+        if args.expire_before is not None:
+            S.rebuild_blooms(spark, args.sig_dir, {})
         if args.verbose:
             print(
-                f"compact: {files_before} -> {files_after} files, "
-                f"{len(committed)} committed steps merged"
+                f"compact: {folded} partitions per table folded"
                 + (
                     f", hashes expired before day {args.expire_before}"
                     if args.expire_before is not None
@@ -370,175 +196,39 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 + f" in {time.perf_counter() - t0:.2f}s"
             )
-        spark.stop()
-        return 0
-
-    # --- step ---------------------------------------------------------
-    step_id = args.step_id or _step_id_from(args.batch)
-    marker = os.path.join(steps_dir, step_id)
-    if os.path.exists(marker):
+    else:
+        step_id = args.step_id or _step_id_from(args.batch)
+        if markers.done(step_id):
+            if args.verbose:
+                print(f"step {step_id}: already committed — no-op replay")
+            spark.stop()
+            return 0
+        blooms = (
+            dict.fromkeys(name for name, _, _ in S.BLOOMS)
+            if args.no_bloom
+            else S.load_blooms(args.sig_dir, args.max_hamming)
+        )
+        S.step(
+            spark, args.sig_dir, LAYOUT, spark.read.parquet(args.batch), step_id,
+            stamp=args.day if args.day is not None else LAYOUT.seed_stamp,
+            resight=args.day is not None,
+            max_hamming=args.max_hamming,
+            blooms=blooms,
+            write_flags=lambda flags: flags.write.mode("overwrite").parquet(args.flags_out),
+            advance=not args.no_advance,
+        )
+        if not args.no_advance:
+            markers.mark(step_id)
         if args.verbose:
-            print(f"step {step_id}: already committed — no-op replay")
-        spark.stop()
-        return 0
-
-    batch = spark.read.parquet(args.batch)
-    # visibility rule: a replayed step must not see its own half-appended
-    # partitions — read state EXCLUDING this step's partition values
-    sig = (
-        spark.read.parquet(hashes_dir).filter(F.col("step") != step_id).drop("step"),
-        spark.read.parquet(sims_dir).filter(F.col("step") != step_id).drop("step"),
-    )
-    bloom = None if args.no_bloom else _read_bloom(args.sig_dir)
-    band_bloom = None if args.no_bloom else _read_bloom(args.sig_dir, "band_bloom")
-    if band_bloom is not None:
-        # band geometry is a function of max_hamming: a bloom built for a
-        # different banding would have FALSE NEGATIVES — drop it instead
-        with open(os.path.join(args.sig_dir, "band_bloom.json")) as fh:
-            if json.load(fh).get("max_hamming") != args.max_hamming:
-                band_bloom = None
-    # the two blooms share (m, k) by construction (written together)
-    # ONE SimHash aggregation and ONE banded near join per step, shared by
-    # every consumer — the flags pass, the survivor state append, and the
-    # retention re-sighting signal (the streaming sink's r11 shape). The
-    # old step re-derived the fingerprints from raw text up to three times
-    # and ran the banded join twice when --day was given; at 100 TB that
-    # is the day's dominant aggregation and join each paid double. Flags
-    # and appended rows are bit-identical: the substitutes are the same
-    # expressions over the same inputs (per-doc signatures deterministic;
-    # the band bloom on the shared pair frame has zero false negatives).
-    new_h, new_s = batch_signatures(batch)
-    if not args.no_advance:
-        # the advance re-projects the survivor fingerprints out of new_s
-        new_s = new_s.persist()
-    pairs = matched_history_pairs(
-        new_s,
-        sig[1],
-        max_hamming=args.max_hamming,
-        history_band_bloom_packed=band_bloom[0] if band_bloom else None,
-        bloom_m=band_bloom[1] if band_bloom else BLOOM_M,
-        bloom_k=band_bloom[2] if band_bloom else BLOOM_K,
-    )
-    if args.day is not None and not args.no_advance:
-        # two consumers (near flag + fingerprint re-sightings) → cache the
-        # joined pairs; otherwise the single consumer inlines them
-        pairs = pairs.persist()
-    flags = incremental_dedup(
-        batch,
-        max_hamming=args.max_hamming,
-        history_sig=sig,
-        history_bloom_packed=bloom[0] if bloom else None,
-        bloom_m=bloom[1] if bloom else BLOOM_M,
-        bloom_k=bloom[2] if bloom else BLOOM_K,
-        new_sig=(new_h, new_s),
-        near_pairs=pairs,
-    )
-    flags.write.mode("overwrite").parquet(args.flags_out)
-    if not args.no_advance:
-        # the O(day) state advance: survivors' signatures land in this
-        # step's OWN partitions (overwrite = replay-safe); the bloom OR
-        # is idempotent by algebra. Survivor signatures are PROJECTIONS
-        # of the cached batch signature frames (semi-join on the kept
-        # ids), bit-identical to history_signatures(survivors) by
-        # determinism of the per-doc signature — raw batch text is not
-        # re-fingerprinted.
-        surv_ids = (
-            spark.read.parquet(args.flags_out)
-            .filter(F.col("is_kept"))
-            .select("doc_id")
-        )
-        day_h = (
-            new_h.join(surv_ids, "doc_id", "left_semi")
-            .select("content_hash")
-            .distinct()
-        )
-        day_s = new_s.join(surv_ids, "doc_id", "left_semi").select(
-            F.col("simhash").alias("hist_sim")
-        )
-        day_h = day_h.withColumn(
-            "last_seen", F.lit(args.day or 0).cast("long")
-        )
-        day_s = day_s.withColumn(
-            "last_seen", F.lit(args.day or 0).cast("long")
-        )
-        if args.day is not None:
-            # retention sightings: an exact-dup match means its history
-            # hash was SEEN today — append a (hash, day) row so the
-            # compaction cutoff keeps re-crawled content alive. Disjoint
-            # from the survivor hashes (an exact dup is never kept), and
-            # duplicate-tolerant downstream (the exact check is EXISTS
-            # semantics; compaction max-collapses per hash). Near-dup
-            # rejects contribute NOTHING to the hash table — their novel
-            # hashes must not enter the state (a later exact copy of a
-            # rejected doc has to flag near_dup again, not exact_dup).
-            resight = (
-                spark.read.parquet(args.flags_out)
-                .filter(F.col("exact_dup"))
-                .select("content_hash")
-                .distinct()
-                .withColumn("last_seen", F.lit(args.day).cast("long"))
+            out = spark.read.parquet(args.flags_out)
+            n = out.count()
+            kept = out.filter("is_kept").count()
+            print(
+                f"step {step_id}: {n} docs, {kept} kept, {n - kept} flagged "
+                f"({'state advanced' if not args.no_advance else 'no advance'}"
+                f"{', bloom prefilter' if blooms['bloom'] else ''}) "
+                f"in {time.perf_counter() - t0:.2f}s -> {args.flags_out}"
             )
-            day_h = day_h.unionByName(resight)
-            # fingerprint sightings: every history fingerprint the batch
-            # near-matches (exact copies land here too at hamming 0) — a
-            # DISTINCT projection of the shared pair frame, not a second
-            # banded pass. Appending matched values (not novel ones)
-            # cannot change any future near-dup flag.
-            sim_resight = (
-                pairs.select("hist_sim")
-                .distinct()
-                .withColumn("last_seen", F.lit(args.day).cast("long"))
-            )
-            day_s = day_s.unionByName(sim_resight)
-        write_with_bloom(day_h, _part(hashes_dir, step_id), ["content_hash"])
-        day_s.write.mode("overwrite").parquet(_part(sims_dir, step_id))
-        if bloom is not None:
-            from .operators.sketches import bloom_merge_packed
-
-            day_bloom = history_bloom(
-                spark.read.parquet(_part(hashes_dir, step_id)),
-                m=bloom[1],
-                k=bloom[2],
-            )
-            # floor_m rides every rewrite so the next expiry rebuild
-            # keeps the configured floor instead of falling back to BLOOM_M
-            _write_bloom(
-                args.sig_dir,
-                bloom_merge_packed(bloom[0], day_bloom),
-                bloom[1],
-                bloom[2],
-                floor_m=_bloom_floor(args.sig_dir),
-            )
-        if band_bloom is not None:
-            from .operators.sketches import bloom_merge_packed
-
-            day_bb = history_band_bloom(
-                spark.read.parquet(_part(sims_dir, step_id)),
-                max_hamming=args.max_hamming,
-                m=band_bloom[1],
-                k=band_bloom[2],
-            )
-            _write_bloom(
-                args.sig_dir,
-                bloom_merge_packed(band_bloom[0], day_bb),
-                band_bloom[1],
-                band_bloom[2],
-                name="band_bloom",
-                max_hamming=args.max_hamming,
-                floor_m=_bloom_floor(args.sig_dir, "band_bloom"),
-            )
-        os.makedirs(steps_dir, exist_ok=True)
-        open(marker, "w").close()
-    if args.verbose:
-        out = spark.read.parquet(args.flags_out)
-        n = out.count()
-        kept = out.filter("is_kept").count()
-        print(
-            f"step {step_id}: {n} docs, {kept} kept, {n - kept} flagged "
-            f"({'state advanced' if not args.no_advance else 'no advance'}"
-            f"{', bloom prefilter' if bloom else ''}) "
-            f"in {time.perf_counter() - t0:.2f}s -> {args.flags_out}"
-        )
     spark.stop()
     return 0
 

@@ -24,6 +24,11 @@ Rules encoded here that matter at scale:
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -52,6 +57,37 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def swap_dir(path: str, rewrite: Callable[[str], list[str] | None]) -> None:
+    """Replace the directory ``path`` with what ``rewrite(tmp)`` writes at a
+    sibling ``tmp``. ``rewrite`` returns the entries of ``path`` to carry
+    into the new directory unchanged (uncommitted partials that a replay
+    will overwrite), or None to leave ``path`` as it is.
+
+    The protocol is re-runnable after a crash at any point: restore
+    ``path`` from the backup when a crash between the two renames left
+    only the backup; clear stale tmp and backup dirs; write; carry; rename
+    ``path`` to the backup and ``tmp`` to ``path``; delete the backup.
+    Healing comes first, so ``rewrite`` always lists the live directory.
+    LOCAL FILESYSTEM ONLY: the swap uses ``os.rename``; on an object store
+    use a table format with transactional compaction instead."""
+    path = path.rstrip("/")
+    tmp = path + "._compact_tmp"
+    bak = path + "._compact_old"
+    if os.path.exists(bak) and not os.path.exists(path):
+        os.rename(bak, path)
+    for stale in (tmp, bak):
+        if os.path.exists(stale):
+            shutil.rmtree(stale)
+    carry = rewrite(tmp)
+    if carry is None:
+        return
+    for entry in carry:
+        shutil.move(entry, os.path.join(tmp, os.path.basename(entry)))
+    os.rename(path, bak)
+    os.rename(tmp, path)
+    shutil.rmtree(bak)
+
+
 def compact_small_files(
     spark: SparkSession,
     path: str,
@@ -68,67 +104,51 @@ def compact_small_files(
     of bytes. Compaction is one read + one write: partition count is
     computed from the directory's actual byte size (not row counts, which
     mispredict after compression), an optional task-local sort restores
-    row-group skipping, and the rewrite goes through a temp directory so a
-    crash mid-compact never leaves the table truncated. Hive-partitioned
-    layouts are preserved: partition columns are detected from the
-    ``key=value`` directory segments and the rewrite re-issues
-    ``partitionBy`` on them, so `PartitionFilters` pruning survives
-    compaction. LOCAL-FILESYSTEM ONLY: the swap uses ``os.rename``; on an
-    object store use a table format with transactional compaction
-    (OPTIMIZE) instead — this is the plain-parquet equivalent with the
-    same sizing rule. Re-runnable: stale temp/backup dirs from a crashed
-    prior run are recovered (backup restored if the table vanished) or
-    cleared at entry."""
-    import glob
-    import os
-    import shutil
-
+    row-group skipping, and the rewrite goes through :func:`swap_dir`, so
+    a crash mid-compact never leaves the table truncated and a rerun
+    recovers from it. Hive-partitioned layouts are preserved: partition
+    columns are detected from the ``key=value`` directory segments and the
+    rewrite re-issues ``partitionBy`` on them, so `PartitionFilters`
+    pruning survives compaction. LOCAL-FILESYSTEM ONLY, like
+    :func:`swap_dir` — this is the plain-parquet equivalent of OPTIMIZE
+    with the same sizing rule."""
     path = path.rstrip("/")
-    tmp = path + "._compact_tmp"
-    bak = path + "._compact_old"
-    # Crash recovery: a failure between the two renames leaves the table
-    # only at `bak`; restore it. A stale `bak` next to a live table (crash
-    # after swap, before cleanup) or a stale `tmp` (crash mid-write) is
-    # dead weight — clear it so the rename below can't collide.
-    if os.path.exists(bak) and not os.path.exists(path):
-        os.rename(bak, path)
-    elif os.path.exists(bak):
-        shutil.rmtree(bak)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
+    files_before = 0
 
-    data_files = [f for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)]
-    files_before = len(data_files)
-    total_bytes = sum(os.path.getsize(f) for f in data_files)
-    n_out = max(1, round(total_bytes / (target_file_mb << 20)))
+    def rewrite(tmp: str) -> list[str]:
+        nonlocal files_before
+        data_files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+        files_before = len(data_files)
+        total_bytes = sum(os.path.getsize(f) for f in data_files)
+        n_out = max(1, round(total_bytes / (target_file_mb << 20)))
 
-    # Detect Hive partitioning from the key=value directory segments so the
-    # rewrite preserves it (a flat rewrite would demote partition columns to
-    # data columns and silently lose PartitionFilters pruning).
-    partition_cols: list[str] = []
-    if data_files:
-        rel = os.path.relpath(data_files[0], path)
-        for seg in rel.split(os.sep)[:-1]:
-            if "=" in seg:
-                partition_cols.append(seg.split("=", 1)[0])
+        # Detect Hive partitioning from the key=value directory segments so
+        # the rewrite preserves it (a flat rewrite would demote partition
+        # columns to data columns and silently lose PartitionFilters pruning).
+        partition_cols: list[str] = []
+        if data_files:
+            rel = os.path.relpath(data_files[0], path)
+            for seg in rel.split(os.sep)[:-1]:
+                if "=" in seg:
+                    partition_cols.append(seg.split("=", 1)[0])
 
-    df = spark.read.parquet(path)
-    if partition_cols:
-        # Hash on the partition columns: each task holds whole partitions,
-        # so file count stays ~n_out instead of tasks × partitions.
-        out = df.repartition(n_out, *partition_cols)
-    else:
-        out = df.repartition(n_out)
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    writer = out.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
-    # atomic-ish swap: replace only after the full rewrite committed
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
+        df = spark.read.parquet(path)
+        if partition_cols:
+            # Hash on the partition columns: each task holds whole
+            # partitions, so file count stays ~n_out instead of
+            # tasks × partitions.
+            out = df.repartition(n_out, *partition_cols)
+        else:
+            out = df.repartition(n_out)
+        if sort_cols:
+            out = out.sortWithinPartitions(*sort_cols)
+        writer = out.write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(tmp)
+        return []
+
+    swap_dir(path, rewrite)
     files_after = len(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
     return files_before, files_after
 

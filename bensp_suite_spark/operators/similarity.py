@@ -1761,6 +1761,16 @@ def load_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
     )
 
 
+def _append_new(add: DataFrame, table: str) -> None:
+    """Append the rows of ``add`` whose ``neighbor_id`` the index table at
+    ``table`` does not hold yet: every upsert below derives its rows
+    deterministically from the vector, so a replayed upsert (a retried
+    step, a crashed stream batch) appends nothing instead of duplicating
+    neighbours in every later probe."""
+    held = add.sparkSession.read.parquet(table).select("neighbor_id")
+    add.join(held, "neighbor_id", "left_anti").write.mode("append").parquet(table)
+
+
 def upsert_ivf_index(
     spark,
     path: str,
@@ -1780,8 +1790,7 @@ def upsert_ivf_index(
     knob: retrain (save_ivf_index) when cell-size skew degrades probe
     recall — same contract as FAISS's add() vs retrain."""
     cent = spark.read.parquet(path + "/centroids")
-    add = _assign(new_vectors, cent, 1, id_col, vec_col)
-    add.write.mode("append").parquet(path + "/cells")
+    _append_new(_assign(new_vectors, cent, 1, id_col, vec_col), path + "/cells")
 
 
 def save_ivfpq_index(
@@ -1908,7 +1917,7 @@ def upsert_ivfpq_index(
     add = _ivfpq_encode(
         new_vectors, cent, cassign, books, id_col, vec_col, meta["residual"]
     )
-    add.write.mode("append").parquet(path + "/coded")
+    _append_new(add, path + "/coded")
 
 
 def save_lsh_index(
@@ -1951,7 +1960,7 @@ def upsert_lsh_index(
     parameters must match the original build (they parameterize the
     seeded hyperplane draw)."""
     add = _lsh_table(new_vectors, id_col, vec_col, dim, n_planes, n_tables)
-    add.write.mode("append").parquet(path)
+    _append_new(add, path)
 
 
 def upsert_pq_index(
@@ -1969,9 +1978,7 @@ def upsert_pq_index(
     codebooks. Codebook drift under sustained growth is the retrain
     knob, as with IVF centroids."""
     books, _codes = load_pq_index(spark, path)
-    pq_encode(new_vectors, books, id_col, vec_col).write.mode("append").parquet(
-        path + "/codes"
-    )
+    _append_new(pq_encode(new_vectors, books, id_col, vec_col), path + "/codes")
 
 
 def kcenter_sample(

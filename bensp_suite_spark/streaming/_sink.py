@@ -78,7 +78,8 @@ class Markers:
     """Per-batch entries ``<dir>/<prefix><batch_id>`` through the Hadoop
     FileSystem, so they honour the directory's scheme (an os.path probe of
     an HDFS checkpoint would report every batch as new): commit marker
-    files, or with ``prefix="batch_id="`` :func:`write_batch` directories."""
+    files, or with ``prefix="batch_id="`` :func:`write_batch` directories.
+    Keys are batch ids or any other names (``daily_cli``'s step ids)."""
 
     def __init__(self, spark: SparkSession, dir: str, prefix: str = "") -> None:
         self._path = spark._jvm.org.apache.hadoop.fs.Path
@@ -86,13 +87,13 @@ class Markers:
         self.dir = dir
         self.prefix = prefix
 
-    def _at(self, batch_id: int):
+    def _at(self, batch_id: int | str):
         return self._path(posixpath.join(self.dir, f"{self.prefix}{batch_id}"))
 
-    def done(self, batch_id: int) -> bool:
+    def done(self, batch_id: int | str) -> bool:
         return self._fs.exists(self._at(batch_id))
 
-    def mark(self, batch_id: int) -> None:
+    def mark(self, batch_id: int | str) -> None:
         out = self._fs.create(self._at(batch_id), True)
         try:
             out.write(bytearray(b"committed"))

@@ -196,13 +196,16 @@ def stream_encode(
     # T6/O1: intra-batch total order restore before the sink; the batch's
     # directory carries its micro-batch id, so (batch_id, file_id, l1, l2)
     # is a total order across the run.
-    return foreach_batch(
-        flagged,
-        out_dir,
-        checkpoint_dir,
-        lambda batch_df, _id: batch_df.orderBy("file_id", "l1", "l2"),
-        await_termination,
-    )
+    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # pinned: the sort's range-sampling job would otherwise run the
+        # stateful operator a second time (one extra Python call per group)
+        batch_df = batch_df.persist()
+        try:
+            write_batch(batch_df.orderBy("file_id", "l1", "l2"), out_dir, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return foreach_batch(flagged, out_dir, checkpoint_dir, per_batch, await_termination)
 
 
 def windowed_event_metrics(

@@ -16,7 +16,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from ..ferret.pipeline import ferret_topk
-from ._sink import foreach_batch
+from ._sink import foreach_batch, write_batch
 
 
 def stream_similarity_search(
@@ -38,11 +38,17 @@ def stream_similarity_search(
     cached_before = corpus.storageLevel != StorageLevel.NONE
     corpus = corpus.cache()  # static side: scan once, reuse per trigger
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> DataFrame | None:
+    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
-            return None
-        result = ferret_topk(batch_df, corpus, top_k=top_k, dim=dim, mode=mode)
-        return result.orderBy("q_image_id", "rank")  # T6 ordered emission
+            return
+        # pinned: the sort's range-sampling job would otherwise rerun the
+        # EMD rerank
+        result = ferret_topk(batch_df, corpus, top_k=top_k, dim=dim, mode=mode).persist()
+        try:
+            # T6 ordered emission
+            write_batch(result.orderBy("q_image_id", "rank"), out_dir, batch_id)
+        finally:
+            result.unpersist()
 
     q = foreach_batch(query_stream, out_dir, checkpoint_dir, per_batch, await_termination)
     if await_termination and not cached_before:

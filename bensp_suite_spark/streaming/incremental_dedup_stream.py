@@ -35,8 +35,9 @@ Two scale features beyond the r6 shape:
   listing ADVICE/VERDICT r6 flagged. Only committed batches (marker
   present) are merged; flags are invariant because merged rows keep
   ``batch_id=-1 < N`` visibility and the exact check is a duplicate-
-  tolerant semi join. LOCAL-FS protocol (rename swap), same as
-  ``operators/layout.compact_small_files``.
+  tolerant semi join. LOCAL-FS protocol: the rename swap of
+  ``operators/layout.swap_dir``, shared with ``daily_cli compact`` and
+  ``compact_small_files``.
 - **Retention** (``retention_window=W``, requires ``compact_every``) —
   ``daily_cli``'s forget semantics at micro-batch cadence, where the
   batch id IS the day number: every batch stamps its appended rows with
@@ -59,35 +60,38 @@ Two scale features beyond the r6 shape:
   "legacy rows count as day 0". Replays stay byte-identical: the stamp
   is the deterministic batch id and re-sightings are a function of the
   same ``batch_id < N`` state prefix the flags are.
+
+The state itself (seed, step, bloom sidecars, roll-up, expiry rebuild) is
+``bensp_suite_spark/signature_state.py``, shared with ``daily_cli``; this
+module keys it by ``batch_id`` and drives it from ``foreachBatch``.
 """
 
 from __future__ import annotations
 
-import glob as _glob
-import json as _json
-import os as _os
 import posixpath as _pp
-import shutil as _shutil
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.dedup_text import (
-    BLOOM_K,
-    BLOOM_M,
-    batch_signatures,
-    history_band_bloom,
-    history_bloom,
-    history_signatures,
-    incremental_dedup,
-    matched_history_pairs,
-    sized_bloom_m,
+from ..operators.dedup_text import BLOOM_M
+from ..signature_state import (
+    Layout,
+    load_blooms,
+    rebuild_blooms,
+    roll_up,
+    seed,
+    step,
 )
 from ._sink import Markers, foreach_batch, write_batch
 
 #: partition value for the caller-seeded day-0 signatures
 SEED_BATCH_ID = -1
+
+#: batch ids are ordered: batch N reads only ``batch_id < N``, so a replay
+#: sees the same prefix; the seed stamp is the seed's own batch id
+LAYOUT = Layout(
+    col="batch_id", col_type="long", seed_key=SEED_BATCH_ID,
+    seed_stamp=SEED_BATCH_ID, ordered=True,
+)
 
 
 def seed_signatures(
@@ -108,138 +112,7 @@ def seed_signatures(
     from) rides the sidecar meta so per-batch OR-advances and expiry
     rebuilds keep/resize the same geometry. ``bloom_floor_m`` is the
     smallest bitset ever used (default ``BLOOM_M``)."""
-    h, s = history_signatures(history)
-    h = h.withColumn("last_seen", F.lit(SEED_BATCH_ID).cast("long"))
-    s = s.withColumn("last_seen", F.lit(SEED_BATCH_ID).cast("long"))
-    seed_h = write_batch(h, _pp.join(sig_dir, "hashes"), SEED_BATCH_ID)
-    seed_s = write_batch(s, _pp.join(sig_dir, "sims"), SEED_BATCH_ID)
-    if use_bloom:
-        spark = history.sparkSession
-        seed_hashes = spark.read.parquet(seed_h)
-        m_h = sized_bloom_m(seed_hashes.count(), BLOOM_K, floor=bloom_floor_m)
-        _write_packed_bloom(
-            sig_dir,
-            history_bloom(seed_hashes, m=m_h, k=BLOOM_K),
-            m_h,
-            BLOOM_K,
-            floor_m=bloom_floor_m,
-        )
-        seed_sims = spark.read.parquet(seed_s)
-        m_b = sized_bloom_m(
-            seed_sims.count() * (max_hamming + 1), BLOOM_K, floor=bloom_floor_m
-        )
-        _write_packed_bloom(
-            sig_dir,
-            history_band_bloom(seed_sims, max_hamming=max_hamming, m=m_b, k=BLOOM_K),
-            m_b,
-            BLOOM_K,
-            name="band_bloom",
-            max_hamming=max_hamming,
-            floor_m=bloom_floor_m,
-        )
-
-
-def _concurrently(*fns) -> list:
-    """Run independent callables on their own driver threads (guide §2.6:
-    pay one latency, not one per call); → their results, in order."""
-    if len(fns) < 2:
-        return [fn() for fn in fns]
-    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-        futs = [pool.submit(fn) for fn in fns]
-        return [f.result() for f in futs]
-
-
-def _write_packed_bloom(
-    sig_dir: str, packed: bytes, m: int, k: int, name: str = "bloom", **meta
-) -> None:
-    tmp = _os.path.join(sig_dir, f"{name}.bin.tmp")
-    with open(tmp, "wb") as fh:
-        fh.write(packed)
-    _os.replace(tmp, _os.path.join(sig_dir, f"{name}.bin"))
-    with open(_os.path.join(sig_dir, f"{name}.json"), "w") as fh:
-        _json.dump({"m": m, "k": k, **meta}, fh)
-
-
-def _read_packed_bloom(
-    sig_dir: str, name: str = "bloom"
-) -> tuple[bytes, int, int] | None:
-    bin_p = _os.path.join(sig_dir, f"{name}.bin")
-    meta_p = _os.path.join(sig_dir, f"{name}.json")
-    if not (_os.path.exists(bin_p) and _os.path.exists(meta_p)):
-        return None
-    with open(meta_p) as fh:
-        meta = _json.load(fh)
-    with open(bin_p, "rb") as fh:
-        return fh.read(), int(meta["m"]), int(meta["k"])
-
-
-def _bloom_floor(sig_dir: str, name: str = "bloom") -> int:
-    """The configured floor geometry from the sidecar meta (legacy metas
-    without it fall back to the module default)."""
-    meta_p = _os.path.join(sig_dir, f"{name}.json")
-    if _os.path.exists(meta_p):
-        with open(meta_p) as fh:
-            return int(_json.load(fh).get("floor_m", BLOOM_M))
-    return BLOOM_M
-
-
-def _rebuild_blooms_after_expiry(
-    spark: SparkSession, sig_dir: str, blooms_cache: dict, max_hamming: int
-) -> None:
-    """After an EXPIRING compaction the packed bitsets must be rebuilt
-    from the surviving state — expired bits can't be unset by OR (a stale
-    over-full bloom would stay CORRECT, just progressively useless).
-    Each rebuild RE-SIZES the geometry from the surviving cardinality
-    (``sized_bloom_m`` over the state the compaction just rolled up —
-    the counts are bounded by the retention window, not the stream's
-    lifetime), so a bitset can both grow with a swelling crawl and shrink
-    back to the configured floor when the window drains; the new ``m``
-    rides the sidecar meta and the sink's in-memory copy so later
-    batches probe and OR-advance the resized sets."""
-    k = BLOOM_K
-
-    def _rebuild_hash_bloom() -> None:
-        if _read_packed_bloom(sig_dir) is None:
-            return
-        surviving_h = spark.read.parquet(_pp.join(sig_dir, "hashes")).select(
-            "content_hash"
-        )
-        floor = _bloom_floor(sig_dir)
-        m_h = sized_bloom_m(surviving_h.count(), k, floor=floor)
-        rebuilt = history_bloom(surviving_h, m=m_h, k=k)
-        _write_packed_bloom(sig_dir, rebuilt, m_h, k, floor_m=floor)
-        blooms_cache["bloom"] = (rebuilt, m_h, k)
-
-    def _rebuild_band_bloom() -> None:
-        if _read_packed_bloom(sig_dir, "band_bloom") is None:
-            return
-        # rebuild with the SINK's banding — the geometry the probes use
-        # (a disk meta from a different max_hamming would be dropped by
-        # the sink's guard anyway; rebuilding here re-aligns it)
-        surviving_s = spark.read.parquet(_pp.join(sig_dir, "sims")).select(
-            "hist_sim"
-        )
-        floor_bb = _bloom_floor(sig_dir, "band_bloom")
-        m_b = sized_bloom_m(
-            surviving_s.count() * (max_hamming + 1), k, floor=floor_bb
-        )
-        rebuilt_bb = history_band_bloom(
-            surviving_s, max_hamming=max_hamming, m=m_b, k=k
-        )
-        _write_packed_bloom(
-            sig_dir,
-            rebuilt_bb,
-            m_b,
-            k,
-            name="band_bloom",
-            max_hamming=max_hamming,
-            floor_m=floor_bb,
-        )
-        blooms_cache["band"] = (rebuilt_bb, m_b, k)
-
-    # independent bitsets over independent tables — overlap the rebuilds
-    # (guide §2.6), same reasoning as the compaction roll-ups
-    _concurrently(_rebuild_hash_bloom, _rebuild_band_bloom)
+    seed(history, sig_dir, LAYOUT, use_bloom, max_hamming, bloom_floor_m)
 
 
 def compact_signature_state(
@@ -257,66 +130,8 @@ def compact_signature_state(
     swap: values whose newest sighting is ``< expire_before`` are
     dropped from BOTH tables (the caller rebuilds the packed blooms —
     OR can't unset bits)."""
-    def _compact_one(table: str, col: str) -> int:
-        root = _pp.join(sig_dir, table)
-        bak0 = root + "._compact_old"
-        if _os.path.exists(bak0) and not _os.path.exists(root):
-            # a crash between the two swap renames left the table root
-            # missing — restore the old root before doing anything else
-            # (the interrupted merge's tmp dir is cleaned below and the
-            # merge simply re-runs)
-            _os.rename(bak0, root)
-        parts = [
-            p
-            for p in _glob.glob(_os.path.join(root, "batch_id=*"))
-            if int(p.split("batch_id=")[-1]) == SEED_BATCH_ID
-            or int(p.split("batch_id=")[-1]) in committed_ids
-        ]
-        if len(parts) <= 1:
-            return 0
-        tmp, bak = root + "._compact_tmp", root + "._compact_old"
-        for stale in (tmp, bak):
-            if _os.path.exists(stale):
-                _shutil.rmtree(stale)
-        raw = spark.read.option("mergeSchema", "true").parquet(*parts)
-        ls = (
-            F.coalesce(F.col("last_seen"), F.lit(SEED_BATCH_ID))
-            if "last_seen" in raw.columns
-            else F.lit(SEED_BATCH_ID)
-        )
-        out = raw.groupBy(col).agg(F.max(ls).cast("long").alias("last_seen"))
-        if expire_before is not None:
-            out = out.filter(F.col("last_seen") >= expire_before)
-        # The merged seed writes HASH-BUCKETED MULTI-FILE, not coalesce(1):
-        # the groupBy above already hash-partitioned the state by value,
-        # so writing its partitions directly costs zero extra shuffle and
-        # the roll-up parallelizes across executors — at 100 TB a window-
-        # bounded crawl state is still 10⁸-10⁹ rows, and a single-writer
-        # funnel here was the one stop-the-world stage in an otherwise
-        # bounded maintenance loop (r9 verdict #1). AQE coalesces the toy-
-        # scale case back to few files; readers glob the directory either
-        # way, and the rename-swap crash protocol is unchanged — the swap
-        # moves the DIRECTORY, never individual files.
-        (
-            out.write.mode("overwrite")
-            .parquet(_os.path.join(tmp, f"batch_id={SEED_BATCH_ID}"))
-        )
-        for p in _glob.glob(_os.path.join(root, "batch_id=*")):
-            if p not in parts:  # carry crashed partials across the swap
-                _shutil.move(p, _os.path.join(tmp, _os.path.basename(p)))
-        _os.rename(root, bak)
-        _os.rename(tmp, root)
-        _shutil.rmtree(bak)
-        return len(parts)
-
-    # the two tables' roll-ups are independent (separate directories,
-    # separate swap protocols) — overlap them so the maintenance pause
-    # costs one roll-up latency, not two (guide §2.6)
-    return max(
-        _concurrently(
-            lambda: _compact_one("hashes", "content_hash"),
-            lambda: _compact_one("sims", "hist_sim"),
-        )
+    return roll_up(
+        spark, sig_dir, LAYOUT, lambda key: int(key) in committed_ids, expire_before
     )
 
 
@@ -358,231 +173,37 @@ def stream_incremental_dedup(
             "retention_window requires compact_every — the expiry filter "
             "lives inside the compaction roll-up (daily_cli's protocol)"
         )
-    hashes_dir = _pp.join(sig_dir, "hashes")
-    sims_dir = _pp.join(sig_dir, "sims")
     commits = Markers(spark, _pp.join(checkpoint_dir, "incr_commits"))
-    if not Markers(spark, hashes_dir, prefix="batch_id=").done(SEED_BATCH_ID):
+    state_parts = Markers(spark, _pp.join(sig_dir, "hashes"), prefix="batch_id=")
+    if not state_parts.done(SEED_BATCH_ID):
         raise ValueError(
             f"no seeded signature state at {sig_dir} — call seed_signatures "
             "first (an unseeded stream would silently keep historical dups)"
         )
-
-    # bloom state is read from disk ONCE per run and carried in memory
-    # across batches — this sink is the only writer, so the in-memory
-    # copy is always the newest committed-or-ahead state (an ahead copy
-    # from a crashed batch only adds maybe-bits, same argument as the
-    # on-disk protocol). Hoisting the per-batch read/parse was the r7
-    # drift item; the per-batch WRITE stays (durability for restart).
-    _blooms: dict = {"loaded": False, "bloom": None, "band": None}
+    # the sidecars are read once per run and carried in memory: this sink is
+    # their only writer, so the copy is always the newest state (one ahead
+    # of the disk after a crashed batch only adds maybe-bits)
+    blooms = load_blooms(sig_dir, max_hamming)
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         if commits.done(batch_id):
             return
-        if compact_every is not None:
-            n_parts = len(_glob.glob(_os.path.join(hashes_dir, "batch_id=*")))
-            if n_parts >= compact_every:
-                expire = (
-                    batch_id - retention_window
-                    if retention_window is not None
-                    else None
-                )
-                compact_signature_state(
-                    spark, sig_dir, commits.ids(), expire_before=expire
-                )
-                if expire is not None:
-                    _rebuild_blooms_after_expiry(
-                        spark, sig_dir, _blooms, max_hamming
-                    )
-        # select exactly the signature columns: the exact/near checks need
-        # nothing else, so the parquet scan prunes last_seen and mixed
-        # (legacy vs stamped) partition schemas never need mergeSchema.
-        # Schemas are EXPLICIT: the state layout is fixed by this module,
-        # and inference would re-read a parquet footer on every batch
-        # (per-trigger driver fixed cost for zero information).
-        hist_h = (
-            spark.read.schema("content_hash string, last_seen long, batch_id long")
-            .parquet(hashes_dir)
-            .filter(F.col("batch_id") < batch_id)
-            .select("content_hash")
-        )
-        hist_s = (
-            spark.read.schema("hist_sim long, last_seen long, batch_id long")
-            .parquet(sims_dir)
-            .filter(F.col("batch_id") < batch_id)
-            .select("hist_sim")
-        )
-        if not _blooms["loaded"]:
-            _blooms["bloom"] = _read_packed_bloom(sig_dir)
-            band = _read_packed_bloom(sig_dir, "band_bloom")
-            if band is not None:
-                # band geometry follows max_hamming; a mismatched bloom
-                # would have false negatives — drop it (flags stay
-                # correct, slower)
-                with open(_os.path.join(sig_dir, "band_bloom.json")) as fh:
-                    if _json.load(fh).get("max_hamming") != max_hamming:
-                        band = None
-            _blooms["band"] = band
-            _blooms["loaded"] = True
-        bloom = _blooms["bloom"]
-        band_bloom = _blooms["band"]
-        batch_df = batch_df.persist()
-        # ONE SimHash aggregation and ONE banded near join per batch,
-        # shared by every consumer (the near flag, the retention
-        # re-sighting signal, the survivor fingerprint append) — the
-        # previous shape recomputed the fingerprint pass up to three
-        # times and the band join twice per batch, which at 100 TB
-        # doubles the dominant join and locally pays the per-action
-        # fixed cost once per recompute (guide §1.1/§2.4: don't compute
-        # things twice).
-        new_h, new_s = batch_signatures(batch_df)
-        new_s = new_s.persist()
-        pairs = matched_history_pairs(
-            new_s,
-            hist_s,
+        if compact_every is not None and len(state_parts.ids()) >= compact_every:
+            expire = (
+                batch_id - retention_window if retention_window is not None else None
+            )
+            compact_signature_state(spark, sig_dir, commits.ids(), expire_before=expire)
+            if expire is not None:
+                rebuild_blooms(spark, sig_dir, blooms, max_hamming)
+        step(
+            spark, sig_dir, LAYOUT, batch_df, batch_id,
+            stamp=batch_id,
+            resight=retention_window is not None,
             max_hamming=max_hamming,
-            history_band_bloom_packed=band_bloom[0] if band_bloom else None,
-            bloom_m=band_bloom[1] if band_bloom else BLOOM_M,
-            bloom_k=band_bloom[2] if band_bloom else BLOOM_K,
+            blooms=blooms,
+            write_flags=lambda flags: write_batch(flags, out_dir, batch_id),
+            on_survivors=on_survivors,
         )
-        if retention_window is not None:
-            # two consumers (near flag + re-sighting rows) → cache the
-            # joined pairs; without retention the single consumer
-            # inlines them (persist would only cost memory)
-            pairs = pairs.persist()
-        try:
-            flags = incremental_dedup(
-                batch_df,
-                max_hamming=max_hamming,
-                history_sig=(hist_h, hist_s),
-                history_bloom_packed=bloom[0] if bloom else None,
-                bloom_m=bloom[1] if bloom else BLOOM_M,
-                bloom_k=bloom[2] if bloom else BLOOM_K,
-                new_sig=(new_h, new_s),
-                near_pairs=pairs,
-            ).persist()
-            try:
-                write_batch(flags, out_dir, batch_id)
-                survivors = batch_df.join(
-                    flags.filter(F.col("is_kept")).select("doc_id"),
-                    "doc_id",
-                    "left_semi",
-                )
-                # survivor signatures are PROJECTIONS of the cached batch
-                # signature frames (semi join on the kept ids), not a
-                # re-derivation from raw text — bit-identical to
-                # history_signatures(survivors) by determinism of the
-                # per-doc signature
-                surv_ids = flags.filter(F.col("is_kept")).select("doc_id")
-                day_h = (
-                    new_h.join(surv_ids, "doc_id", "left_semi")
-                    .select("content_hash")
-                    .distinct()
-                    .withColumn("last_seen", F.lit(batch_id).cast("long"))
-                )
-                day_s = (
-                    new_s.join(surv_ids, "doc_id", "left_semi")
-                    .select(F.col("simhash").alias("hist_sim"))
-                    .withColumn("last_seen", F.lit(batch_id).cast("long"))
-                )
-                if retention_window is not None:
-                    # re-sighting rows (daily_cli's --day protocol at
-                    # batch cadence): an exact-dup match means its history
-                    # hash was SEEN this batch; every history fingerprint
-                    # the batch near-matches was seen too. Both are
-                    # deterministic functions of the same batch_id < N
-                    # state prefix the flags are, so replays rewrite
-                    # identical rows. Near-dup REJECTS contribute nothing
-                    # (their novel hashes must not enter the state).
-                    resight_h = (
-                        flags.filter(F.col("exact_dup"))
-                        .select("content_hash")
-                        .distinct()
-                        .withColumn("last_seen", F.lit(batch_id).cast("long"))
-                    )
-                    day_h = day_h.unionByName(resight_h)
-                    resight_s = (
-                        pairs.select("hist_sim")
-                        .distinct()
-                        .withColumn("last_seen", F.lit(batch_id).cast("long"))
-                    )
-                    day_s = day_s.unionByName(resight_s)
-                # the two state appends are independent single-directory
-                # writes over already-cached inputs — overlap them so the
-                # batch pays one write latency, not two (guide §2.6);
-                # exactly-once is untouched (both precede the marker, and
-                # a replay overwrites both)
-                batch_h_dir, batch_s_dir = _concurrently(
-                    lambda: write_batch(day_h, hashes_dir, batch_id),
-                    lambda: write_batch(day_s, sims_dir, batch_id),
-                )
-                # the two sidecar advances are INDEPENDENT (different
-                # input dirs, different output files, different _blooms
-                # keys) — overlap them in the same 2-thread pattern as
-                # the state appends above so the batch pays one
-                # aggregate+collect latency, not two; each advance's own
-                # sequencing (read-back → OR-merge → rewrite) and the
-                # pre-marker ordering are unchanged
-                def _advance_hash_bloom() -> None:
-                    from ..operators.sketches import bloom_merge_packed
-
-                    add = history_bloom(
-                        spark.read.parquet(batch_h_dir), m=bloom[1], k=bloom[2]
-                    )
-                    # OR is idempotent: a replayed advance re-ORs the same
-                    # bits; a stale bloom only costs extra maybe-rows
-                    merged_b = bloom_merge_packed(bloom[0], add)
-                    # floor_m rides EVERY rewrite: the next expiry rebuild
-                    # re-sizes from the sidecar meta, and dropping it here
-                    # would shrink a custom-floored bitset back to BLOOM_M
-                    _write_packed_bloom(
-                        sig_dir, merged_b, bloom[1], bloom[2],
-                        floor_m=_bloom_floor(sig_dir),
-                    )
-                    _blooms["bloom"] = (merged_b, bloom[1], bloom[2])
-
-                def _advance_band_bloom() -> None:
-                    from ..operators.sketches import bloom_merge_packed
-
-                    add_b = history_band_bloom(
-                        spark.read.parquet(batch_s_dir),
-                        max_hamming=max_hamming,
-                        m=band_bloom[1],
-                        k=band_bloom[2],
-                    )
-                    # max_hamming must ride along on EVERY rewrite: the
-                    # sink's geometry guard above drops any band bloom
-                    # whose meta lacks/mismatches it, so omitting it here
-                    # would silently disable the NEAR prefilter from the
-                    # next batch on (flags identical — only perf lost)
-                    merged_bb = bloom_merge_packed(band_bloom[0], add_b)
-                    _write_packed_bloom(
-                        sig_dir,
-                        merged_bb,
-                        band_bloom[1],
-                        band_bloom[2],
-                        name="band_bloom",
-                        max_hamming=max_hamming,
-                        floor_m=_bloom_floor(sig_dir, "band_bloom"),
-                    )
-                    _blooms["band"] = (merged_bb, band_bloom[1], band_bloom[2])
-
-                _concurrently(
-                    *([_advance_hash_bloom] if bloom is not None else []),
-                    *([_advance_band_bloom] if band_bloom is not None else []),
-                )
-                if on_survivors is not None:
-                    # downstream maintenance (e.g. ANN index upsert) runs
-                    # pre-marker: a crash here replays the batch against
-                    # the same state prefix and the same survivor set —
-                    # the callback's own idempotency closes the loop
-                    on_survivors(survivors, batch_id)
-            finally:
-                flags.unpersist()
-        finally:
-            new_s.unpersist()
-            if retention_window is not None:
-                pairs.unpersist()
-            batch_df.unpersist()
         commits.mark(batch_id)
 
     # per_batch writes its own directories and returns None

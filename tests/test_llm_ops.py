@@ -789,6 +789,51 @@ def test_lsh_and_pq_upsert_equal_full_rebuild(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.parametrize("family", ["ivf", "ivfpq", "lsh", "pq"])
+def test_replayed_ann_upsert_changes_nothing(spark, tmp_path, family):
+    """An upsert replayed with the same vectors (a retried step, a crashed
+    stream batch) must leave the index as one upsert left it: the same
+    row count and the same probe output, with no duplicate neighbours."""
+    emb = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    ).filter("vec_id < 160")
+    old, new, q = emb.filter("vec_id < 120"), emb.filter("vec_id >= 120"), emb.filter("vec_id < 5")
+    path = str(tmp_path / family)
+    save, upsert, table, probe = {
+        "ivf": (
+            lambda: SIM.save_ivf_index(old, path, n_cells=8),
+            SIM.upsert_ivf_index, "/cells",
+            lambda: SIM.ivf_ann_topk(q, emb, k=5, index=SIM.load_ivf_index(spark, path)),
+        ),
+        "ivfpq": (
+            lambda: SIM.save_ivfpq_index(old, path, n_cells=8, n_centroids=16),
+            SIM.upsert_ivfpq_index, "/coded",
+            lambda: SIM.ivfpq_ann_topk(
+                q, emb, k=5, index=SIM.load_ivfpq_index(spark, path)[:3]
+            ),
+        ),
+        "lsh": (
+            lambda: SIM.save_lsh_index(old, path),
+            SIM.upsert_lsh_index, "",
+            lambda: SIM.lsh_ann_topk(q, emb, k=5, index=SIM.load_lsh_index(spark, path)),
+        ),
+        "pq": (
+            lambda: SIM.save_pq_index(old, path),
+            SIM.upsert_pq_index, "/codes",
+            lambda: SIM.pq_ann_topk(q, emb, k=5, index=SIM.load_pq_index(spark, path)),
+        ),
+    }[family]
+    save()
+
+    def upserted():
+        upsert(spark, path, new)
+        rows = spark.read.parquet(path + table).count()
+        return rows, sorted(map(tuple, probe().collect()))
+
+    once = upserted()
+    assert upserted() == once
+
+
 def test_ivfpq_all_cells_high_refine_equals_bruteforce(spark):
     """IVF-PQ degenerates to exact search when every cell is probed and
     refine·k covers the corpus: the ADC cut keeps everything and the

@@ -1157,6 +1157,49 @@ def test_daily_cli_step_idempotent_and_compact_preserves_flags(spark, tmpdir):
     assert f2[200][0] is True and f2[200][2] is False
 
 
+def test_daily_cli_compact_heals_an_interrupted_swap(spark, tmpdir):
+    """A crash between compact's two swap renames leaves sig/hashes only at
+    its backup. The next compact must restore it before it lists the
+    partitions, keep every hash, and leave a state the next step reads."""
+    hist = spark.createDataFrame(
+        [(i, f"heal corpus doc {i} about {i % 4}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    d1 = spark.createDataFrame(
+        [(100, "heal corpus doc 3 about 3"), (101, "a fresh doc about tides")],
+        "doc_id long, text string",
+    )
+    paths = {n: os.path.join(tmpdir, n) for n in ("hist", "d1", "d2", "sig", "f1", "f2")}
+    hist.write.parquet(paths["hist"])
+    d1.write.parquet(paths["d1"])
+    d1.write.parquet(paths["d2"])
+    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
+    cwd = os.path.dirname(os.path.dirname(__file__))
+
+    def run(*argv):
+        r = subprocess.run(
+            [sys.executable, "-m", "bensp_suite_spark.daily_cli", *argv],
+            capture_output=True, text=True, env=env, cwd=cwd,
+        )
+        assert r.returncode == 0, r.stderr[-2000:]
+
+    run("init", paths["hist"], paths["sig"])
+    run("step", paths["d1"], paths["sig"], paths["f1"])
+    hashes = os.path.join(paths["sig"], "hashes")
+
+    def distinct_hashes():
+        return {r[0] for r in spark.read.parquet(hashes).select("content_hash").collect()}
+
+    want = distinct_hashes()
+    os.rename(hashes, hashes + "._compact_old")
+    run("compact", paths["sig"])
+    assert os.path.isdir(hashes)
+    assert distinct_hashes() == want
+    run("step", paths["d2"], paths["sig"], paths["f2"])
+    f2 = {r["doc_id"]: r["is_kept"] for r in spark.read.parquet(paths["f2"]).collect()}
+    assert f2 == {100: False, 101: False}  # both seen: history, then day 1
+
+
 def test_web_cli_linkgraph_rank_curate(spark, tmpdir):
     """web_cli end-to-end: linkgraph output equals the library operator,
     rank output equals pagerank_int over the host edges, curate output

@@ -1644,11 +1644,8 @@ def test_bloom_geometry_scales_with_history_cardinality(spark, tmp_path):
         sized_bloom_m,
     )
     from bensp_suite_spark.operators.sketches import bloom_fill_ratio_packed
-    from bensp_suite_spark.streaming.incremental_dedup_stream import (
-        _read_packed_bloom,
-        _rebuild_blooms_after_expiry,
-        seed_signatures,
-    )
+    from bensp_suite_spark.signature_state import read_bloom, rebuild_blooms
+    from bensp_suite_spark.streaming.incremental_dedup_stream import seed_signatures
 
     # (a) pure sizing rule, at the default floor and a small one: 10× the
     # comfort-zone cardinality still lands under the design fill
@@ -1675,14 +1672,14 @@ def test_bloom_geometry_scales_with_history_cardinality(spark, tmp_path):
     )
     sig = str(tmp_path / "sig")
     seed_signatures(hist, sig, use_bloom=True, bloom_floor_m=floor)
-    packed, m_h, k = _read_packed_bloom(sig)
+    packed, m_h, k = read_bloom(sig)
     assert m_h > floor
     measured = bloom_fill_ratio_packed(packed, m_h)
     assert 0.0 < measured < 0.5
     with open(os.path.join(sig, "bloom.json")) as fh:
         meta = json.load(fh)
     assert meta["m"] == m_h and meta["floor_m"] == floor
-    bb_packed, m_b, _ = _read_packed_bloom(sig, "band_bloom")
+    bb_packed, m_b, _ = read_bloom(sig, "band_bloom")
     assert m_b > floor
     assert bloom_fill_ratio_packed(bb_packed, m_b) < 0.5
 
@@ -1691,7 +1688,7 @@ def test_bloom_geometry_scales_with_history_cardinality(spark, tmp_path):
     # in-memory cache follows
     sig2 = str(tmp_path / "sig2")
     seed_signatures(hist.limit(5), sig2, use_bloom=True, bloom_floor_m=floor)
-    assert _read_packed_bloom(sig2)[1] == floor
+    assert read_bloom(sig2)[1] == floor
     grown_h = spark.range(n_docs).select(
         F.md5(F.concat(F.lit("grown"), F.col("id").cast("string"))).alias(
             "content_hash"
@@ -1705,8 +1702,8 @@ def test_bloom_geometry_scales_with_history_cardinality(spark, tmp_path):
         "overwrite"
     ).parquet(os.path.join(sig2, "sims", "batch_id=0"))
     cache: dict = {}
-    _rebuild_blooms_after_expiry(spark, sig2, cache, max_hamming=3)
-    packed2, m2, _ = _read_packed_bloom(sig2)
+    rebuild_blooms(spark, sig2, cache, max_hamming=3)
+    packed2, m2, _ = read_bloom(sig2)
     assert m2 > floor
     assert bloom_fill_ratio_packed(packed2, m2) < 0.5
     assert cache["bloom"][1] == m2
@@ -1872,3 +1869,56 @@ def test_streams_sink_only_through_the_sink_module():
         if isinstance(node, ast.Call) and any(b in ast.unparse(node) for b in banned)
     ]
     assert found == []
+
+
+def test_stream_encode_runs_the_state_function_once_per_group(spark, tmpdir, monkeypatch):
+    """stream_encode's ordered write plans a range-sampling job before the
+    write job; the batch is pinned, so the stateful operator's Python
+    function still runs once per (batch, digest) group."""
+    from bensp_suite_spark.queries import _stateful_stream_parts
+
+    calls = spark.sparkContext.accumulator(0)
+    state_fn = dedup_stream._dedup_state_fn
+
+    def counted(key, pdfs, state):
+        calls.add(1)
+        yield from state_fn(key, pdfs, state)
+
+    monkeypatch.setattr(dedup_stream, "_dedup_state_fn", counted)
+    src, out, ckpt = (os.path.join(tmpdir, d) for d in ("src", "out", "ckpt"))
+    docs = fixtures.synthetic_docs(spark, n_files=2, file_bytes=4096, seed=5)
+    docs.repartitionByRange(2, "file_id").write.parquet(src)
+    stream = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    with _stateful_stream_parts(spark, src):
+        dedup_stream.stream_encode(spark, stream, out, ckpt)
+    groups = spark.read.parquet(out).select("batch_id", "sha1").distinct().count()
+    assert groups > 0 and calls.value == groups
+
+
+def test_signature_state_has_one_home():
+    """daily_cli and the incremental stream drive signature_state.py and
+    touch no state file themselves; the directory swap is written once
+    (operators/layout.swap_dir), and the bloom OR-advance and the banded
+    history join each have one caller outside their defining modules."""
+    pkg = pathlib.Path(_sink.__file__).parents[1]
+    for rel in ("daily_cli.py", "streaming/incremental_dedup_stream.py"):
+        text = (pkg / rel).read_text()
+        for banned in ("os.rename", "os.replace", "shutil", "open(", "_compact_"):
+            assert banned not in text, (rel, banned)
+    sources = {p.relative_to(pkg).as_posix(): p.read_text() for p in pkg.rglob("*.py")}
+    assert sum(t.count("._compact_old") for t in sources.values()) == 1
+
+    def callers(fn):
+        return [
+            f"{rel}:{node.lineno}"
+            for rel, text in sources.items()
+            for node in ast.walk(ast.parse(text))
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "id", getattr(node.func, "attr", None)) == fn
+        ]
+
+    for fn, home in (
+        ("bloom_merge_packed", "operators/sketches.py"),
+        ("matched_history_pairs", "operators/dedup_text.py"),
+    ):
+        assert len([c for c in callers(fn) if not c.startswith(home + ":")]) == 1, fn
