@@ -172,10 +172,10 @@ def main() -> None:
 
     # Warm the JVM (codegen, Arrow workers) with one throwaway query. The
     # input tables are NOT persisted: every timed rep scans + decodes the
-    # parquet inputs (earlier rounds pre-persisted them via
-    # tables.cache_tables; that puts the base-table scan outside the timed
-    # region, so it was removed this round — see OPTIMIZATION_r11.md
-    # methodology item 5). Steady state comes from the min-of-3 rep
+    # parquet inputs (earlier rounds pre-persisted them with a helper that
+    # no longer exists; that put the base-table scan outside the timed
+    # region, so r11 removed it — see OPTIMIZATION_r11.md methodology
+    # item 5). Steady state comes from the min-of-3 rep
     # protocol alone: rep 0 warms the OS page cache, which is exactly the
     # footing the DuckDB comparison point has (views over the same files).
     Q.QUERIES["p7_range_filter"](spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -1658,7 +1658,7 @@ def main() -> None:
                     "phase_secs": _PHASE_SECS,
                     # cold first-invocation build/load seconds for the
                     # session-keyed index builds, bucketed-table writes and
-                    # _memo_load calls (r11 verdict: warm minima must never
+                    # index loads (r11 verdict: warm minima must never
                     # be conflated with the cold cost they exclude)
                     "cold_build_sec": {
                         k: round(v, 4) for k, v in Q.COLD_BUILD_SECONDS.items()

@@ -110,9 +110,10 @@ def main(argv: list[str] | None = None) -> int:
     st.add_argument("--no-advance", action="store_true",
                     help="flag only; leave the signature tables untouched")
     st.add_argument("--no-bloom", action="store_true",
-                    help="skip the packed-bloom prefilter entirely (flags "
-                         "identical). Rarely needed since r8: the probe is "
-                         "SIZE-GATED — below ~250k estimated history keys "
+                    help="skip the packed-bloom probe (flags identical; "
+                         "the sidecars still advance). Rarely needed since "
+                         "r8: the probe is SIZE-GATED — below ~250k "
+                         "estimated history keys "
                          "incremental_dedup skips it automatically because "
                          "the exact join broadcasts anyway "
                          "(dedup_text.BLOOM_GATE_MIN_HISTORY)")
@@ -203,11 +204,7 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"step {step_id}: already committed — no-op replay")
             spark.stop()
             return 0
-        blooms = (
-            dict.fromkeys(name for name, _, _ in S.BLOOMS)
-            if args.no_bloom
-            else S.load_blooms(args.sig_dir, args.max_hamming)
-        )
+        blooms = S.load_blooms(args.sig_dir, args.max_hamming)
         S.step(
             spark, args.sig_dir, LAYOUT, spark.read.parquet(args.batch), step_id,
             stamp=args.day if args.day is not None else LAYOUT.seed_stamp,
@@ -216,6 +213,7 @@ def main(argv: list[str] | None = None) -> int:
             blooms=blooms,
             write_flags=lambda flags: flags.write.mode("overwrite").parquet(args.flags_out),
             advance=not args.no_advance,
+            probe=not args.no_bloom,
         )
         if not args.no_advance:
             markers.mark(step_id)
@@ -226,7 +224,7 @@ def main(argv: list[str] | None = None) -> int:
             print(
                 f"step {step_id}: {n} docs, {kept} kept, {n - kept} flagged "
                 f"({'state advanced' if not args.no_advance else 'no advance'}"
-                f"{', bloom prefilter' if blooms['bloom'] else ''}) "
+                f"{', bloom prefilter' if blooms['bloom'] and not args.no_bloom else ''}) "
                 f"in {time.perf_counter() - t0:.2f}s -> {args.flags_out}"
             )
     spark.stop()

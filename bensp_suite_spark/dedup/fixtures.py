@@ -5,6 +5,7 @@ Two generators:
 - ``docs_from_documents``: derives per-file binary content from the
   driver's ``documents`` table (deterministic, sf-scaled) — used by the
   declared query so the correctness input is driver data, not ours.
+  Persisted once per session as a state-registry entry (``state.py``).
 - ``synthetic_docs``: block-pool generator mirroring the reference's
   duplication-controlled text inputs (tools/create_txt_files.c:37-56):
   each file concatenates blocks drawn from a small seeded pool, so the
@@ -22,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
+from .. import state
 from ..session import ensure_worker_imports
 
 FILES_SCHEMA = StructType(
@@ -29,25 +31,25 @@ FILES_SCHEMA = StructType(
 )
 
 
-# One persisted fixture per (session, sf_dir, size): the three cdc_* declared
-# queries all start from the same 80 MB generated input — sharing one
-# materialization instead of three is worth ~2-3 s each in any run that
-# executes the family (bench, driver correctness pass).
-_FIXTURE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def docs_from_documents(spark: SparkSession, sf_dir: str, target_bytes: int = 16384) -> DataFrame:
     """One binary file per document row: the text tiled to ~target_bytes.
 
     Tiling creates genuine intra/inter-file duplicate chunks (documents
     share vocabulary), exercising the dedup path on driver-owned data.
-    Cached + persisted per (session, sf_dir): deterministic content, so
-    reuse is safe.
+    Persisted once per (session, sf_dir, size) in the state registry
+    (state.py): the cdc_* declared queries all start from the same
+    generated input, and sharing one materialization instead of one each
+    is worth ~2-3 s per query in any run that executes the family (bench,
+    driver correctness pass). Deterministic content, so reuse is safe.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, target_bytes)
-    cached = _FIXTURE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return state.get(
+        spark, "fixture", (sf_dir, target_bytes),
+        lambda: _docs_from_documents(spark, sf_dir, target_bytes),
+        drop=state.unpersist,
+    )
+
+
+def _docs_from_documents(spark: SparkSession, sf_dir: str, target_bytes: int) -> DataFrame:
     ensure_worker_imports(spark)
     from ..tables import load_table
 
@@ -71,7 +73,6 @@ def docs_from_documents(spark: SparkSession, sf_dir: str, target_bytes: int = 16
 
     out = docs.mapInPandas(gen, FILES_SCHEMA).persist()
     out.count()
-    _FIXTURE_CACHE[key] = out
     return out
 
 

@@ -184,17 +184,6 @@ def chunk_hash_compress(
     return files.select("file_id", "content").mapInPandas(gen, FUSED_SCHEMA)
 
 
-def _compress_series(data: pd.Series, compress_type: str) -> pd.Series:
-    if compress_type == "gzip":
-        return data.map(lambda b: None if b is None else zlib.compress(bytes(b), 1))
-    if compress_type == "bzip2":
-        # level 9, mirroring BZ2_bzBuffToBuffCompress(..., 9, ...) encoder.c:523
-        return data.map(lambda b: None if b is None else bz2.compress(bytes(b), 9))
-    if compress_type == "none":
-        return data.map(lambda b: None if b is None else bytes(b))
-    raise ValueError(f"unknown compress_type {compress_type!r}")
-
-
 def _first_wins_flags_skew_safe(fused: DataFrame, keys: list[str]) -> DataFrame:
     """Skew-safe first-wins flagging: two-phase min-reduce + re-join,
     replacing the per-digest window sort.

@@ -19,31 +19,13 @@ def _fold(col: Column) -> Column:
     return F.aggregate(col, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def dist_l2(a: Column, b: Column) -> Column:
-    """Squared L2 (dist_L2_float semantics — the reference does NOT sqrt,
-    cass_dist.c:45-58)."""
-    return _fold(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
-
-
 def dist_l1(a: Column, b: Column) -> Column:
     """L1 / Manhattan (dist_L1_*, cass_dist.c:92-105)."""
     return _fold(F.zip_with(a, b, lambda x, y: F.abs(x - y)))
 
 
-def dist_l2_weighted(a: Column, b: Column, w: Column) -> Column:
-    """Weighted squared L2 (dist_L2_*_W, cass_dist.c:60-74):
-    Σ w_i (a_i - b_i)²."""
-    diff2 = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return _fold(F.zip_with(diff2, w, lambda d, wi: d * wi))
-
-
 def dot(a: Column, b: Column) -> Column:
     return _fold(F.zip_with(a, b, lambda x, y: x * y))
-
-
-def dist_cosine(a: Column, b: Column) -> Column:
-    """Cosine distance = 1 - cos similarity (dist_cos_*, cass_dist.c:107-121)."""
-    return F.lit(1.0) - dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 def dist_hamming(a: Column, b: Column) -> Column:
@@ -59,15 +41,5 @@ def _sql_fold(products: str) -> str:
     )
 
 
-def sql_dist_l2(a: str, b: str) -> str:
-    return _sql_fold(
-        f"list_transform(range(1, len({a}) + 1), i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))"
-    )
-
-
 def sql_dist_l1(a: str, b: str) -> str:
     return _sql_fold(f"list_transform(range(1, len({a}) + 1), i -> abs({a}[i] - {b}[i]))")
-
-
-def sql_dot(a: str, b: str) -> str:
-    return _sql_fold(f"list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i])")

@@ -68,6 +68,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import state
 from ..session import local_rows_df
 from .similarity import (
     _CAND_SCHEMA,
@@ -442,7 +443,7 @@ def _build_graphs(sharded: DataFrame, m: int, ef_build: int, books=None) -> Data
 
 
 def _write_meta(spark, path: str, row: tuple, schema: str) -> None:
-    """Every save writes its meta file LAST (see _FROZEN_META_CACHE)."""
+    """Every save writes its meta file LAST (see _frozen_memo)."""
     local_rows_df(spark, [row], schema).write.mode("overwrite").parquet(path + "/meta")
 
 
@@ -556,8 +557,9 @@ def save_nsw_index(
 
 def load_nsw_index(spark, path: str) -> tuple[DataFrame, dict]:
     """→ (graph DataFrame, params) for ``nsw_ann_topk(index=…)``. The
-    params collect is memoized per (session, path, meta mtime) — meta is
-    frozen post-save; the graph read stays fresh (see _frozen_memo)."""
+    params collect is a state-registry entry (state.py) of the session,
+    fresh while the meta mtime stands — meta is frozen post-save; the
+    graph read stays fresh (see _frozen_memo)."""
 
     def _load_frozen():
         meta = _read_meta(spark, path)
@@ -685,8 +687,9 @@ def save_nsw_routed_index(
 
 def load_nsw_routed_index(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     """→ (centroids, graph, params) for ``nsw_routed_ann_topk(index=…)``.
-    Centroids/params are frozen post-save and memoized per (session,
-    path, meta mtime); the graph read stays fresh (see _frozen_memo)."""
+    Centroids/params are frozen post-save and kept as a state-registry
+    entry (state.py) of the session, fresh while the meta mtime stands;
+    the graph read stays fresh (see _frozen_memo)."""
 
     def _load_frozen():
         params = _routed_params(_read_meta(spark, path))
@@ -809,8 +812,9 @@ def load_nsw_routed_pq_index(
     """→ (centroids, graph, codebooks, params) for
     ``nsw_routed_pq_ann_topk``. The codebook fetch is bounded (S·C
     rows). Meta/books/centroids are frozen post-save (upserts rewrite
-    only graph shards), so their collects are memoized per (session,
-    path, meta mtime); the graph read is always fresh."""
+    only graph shards), so their collects are a state-registry entry
+    (state.py) of the session, fresh while the meta mtime stands; the
+    graph read is always fresh (see _frozen_memo)."""
 
     def _load_frozen():
         params = _routed_params(_read_meta(spark, path))
@@ -911,50 +915,31 @@ def upsert_nsw_routed_pq_index(
         add.unpersist()
 
 
-#: (applicationId, path, meta_stamp) → the FROZEN parts of a saved index
-#: (meta params, codebooks ndarray, centroid DataFrame handle). Every
-#: save_* writes its meta file LAST, and upserts rewrite only graph shard
-#: partitions — so for a given meta mtime these parts are immutable and
-#: their per-load collects (2 driver jobs each) are pure fixed cost in a
-#: per-batch maintenance loop. The GRAPH read is never memoized: callers
-#: must see post-upsert shards (the stream query's documented contract).
-_FROZEN_META_CACHE: dict = {}
-
-
-def _meta_stamp(path: str):
-    """Newest mtime_ns among the meta part files, or None off local FS
-    (no memoization there — fresh loads keep the old behavior)."""
-    import glob as _g
-    import os as _os
+def _frozen_memo(spark, path: str, loader):
+    """The FROZEN parts of a saved index (meta params, codebooks ndarray,
+    centroid DataFrame handle) as ``loader()`` returns them: a
+    state-registry entry (state.py) per session and path, fresh while the
+    newest meta part file keeps its mtime. Every save_* writes its meta
+    file LAST, and upserts rewrite only graph shard partitions — so for a
+    given meta mtime these parts are immutable and their per-load
+    collects (2 driver jobs each) are pure fixed cost in a per-batch
+    maintenance loop. Off local FS there is no memo. The GRAPH read is
+    never memoized: callers must see post-upsert shards (the stream
+    query's documented contract)."""
+    import glob
+    import os
 
     try:
-        return max(
-            _os.stat(p).st_mtime_ns
-            for p in _g.glob(_os.path.join(path, "meta", "part-*.parquet"))
+        stamp = max(
+            os.stat(p).st_mtime_ns
+            for p in glob.glob(os.path.join(path, "meta", "part-*.parquet"))
         )
     except (ValueError, OSError):
-        return None
-
-
-def _frozen_memo(spark, path: str, loader):
-    """Memoize ``loader()``'s frozen-part tuple per (session, path, meta
-    mtime); a re-save rewrites meta (last) and invalidates the key."""
-    stamp = _meta_stamp(path)
-    if stamp is None:
         return loader()
-    key = (spark.sparkContext.applicationId, path, stamp)
-    got = _FROZEN_META_CACHE.get(key)
-    if got is None:
-        # evict stale stamps of the same (session, path), and every entry
-        # of a stopped session: a process has one live SparkContext, so a
-        # handle bound to another applicationId can never be served again
-        for k in [
-            k for k in _FROZEN_META_CACHE if k[0] != key[0] or k[1] == path
-        ]:
-            del _FROZEN_META_CACHE[k]
-        got = loader()
-        _FROZEN_META_CACHE[key] = got
-    return got
+    return state.get(
+        spark, "frozen_meta", path, lambda: (stamp, loader()),
+        fresh=lambda got: got[0] == stamp,
+    )[1]
 
 
 def _continue_shards(

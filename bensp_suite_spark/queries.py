@@ -15,7 +15,6 @@ Determinism rules (so the driver's value-hash matches):
 
 from __future__ import annotations
 
-import atexit
 import shutil
 import tempfile
 import time
@@ -25,6 +24,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import state
 from .operators import relational as R
 from .operators import temporal as T
 from .session import align_session, local_rows_df
@@ -59,11 +59,12 @@ def query(name: str, oracle: str | None = None):
 FIXTURE_BUILD_SECONDS: dict[str, float] = {}
 
 #: Cold first-invocation build/load seconds (r11 verdict item: the
-#: session-keyed index builds and ``_memo_load`` shift work out of warm
-#: reps — record what the COLD invocation paid so warm minima are never
-#: conflated with cold cost). Keys are ``"<query>:build"`` for on-disk
-#: index builds / bucketed-table writes and ``"load:<kind>"`` for the
-#: per-session memoized index loads; values accumulate across the run.
+#: build-once indexes of ``_prebuilt`` and ``layout_bucketed_join`` shift
+#: work out of warm reps — record what the COLD invocation paid so warm
+#: minima are never conflated with cold cost). Keys are ``"<query>:build"``
+#: for on-disk index builds / bucketed-table writes and ``"load:<kind>"``
+#: for the index loads; each session pays both once (state.py), and
+#: values accumulate across the run.
 #: The bench exports a snapshot as ``extras.cold_build_sec``; unlike
 #: FIXTURE_BUILD_SECONDS, nothing is subtracted from any recorded time.
 COLD_BUILD_SECONDS: dict[str, float] = {}
@@ -90,31 +91,24 @@ def _cold_build(name: str):
     return _timed(COLD_BUILD_SECONDS, name)
 
 
-#: directories a query leaves behind on purpose — cached index builds and
-#: sources of a returned lazy DataFrame; removed when the interpreter exits
-_KEPT_DIRS: list[str] = []
-
-
-@atexit.register
-def _remove_kept_dirs() -> None:
-    for d in _KEPT_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 @contextmanager
-def _scratch(prefix: str, keep: bool = False):
+def _scratch(prefix: str, keep: tuple | None = None):
     """A fresh temp directory, removed when the block exits — also when it
-    raises. With ``keep``, a block that completes hands the directory to
-    _KEPT_DIRS instead: a returned lazy DataFrame or a cached index still
-    reads it."""
+    raises. A block that completes with ``keep=(spark, key)`` hands the
+    directory to the state registry (state.py) instead: a returned lazy
+    DataFrame or a cached index still reads it until the session ends or
+    the next block kept under ``key`` completes."""
     path = tempfile.mkdtemp(prefix=prefix)
     kept = False
     try:
         yield path
-        kept = keep
+        kept = keep is not None
     finally:
         if kept:
-            _KEPT_DIRS.append(path)
+            spark, key = keep
+            state.get(
+                spark, "dir", key, lambda: path, fresh=lambda _: False, drop=state.rmtree
+            )
         else:
             shutil.rmtree(path, ignore_errors=True)
 
@@ -4335,7 +4329,7 @@ def cdc_ddp_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drift guard), so it reports itself to the bench's build/run split.
     # The returned DataFrame scans the archives lazily, so they are kept.
     with (
-        _scratch("bensp_ddp_q_", keep=True) as d,
+        _scratch("bensp_ddp_q_", keep=(spark, "cdc_ddp_datasource_scan")) as d,
         _fixture_build("cdc_ddp_datasource_scan"),
     ):
         for g in range(3):
@@ -5471,7 +5465,7 @@ def layout_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events").select("event_type", "ts", "value")
     # the returned DataFrame reads the layout lazily, so it is kept
-    with _scratch("bensp_layout_q_", keep=True) as d:
+    with _scratch("bensp_layout_q_", keep=(spark, "layout_partition_pruning")) as d:
         path = f"{d}/events_parted"
         L.write_partitioned(ev, path, ["event_type"], sort_cols=["ts"])
     back = L.read_partitioned(spark, path).filter(
@@ -5549,39 +5543,37 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     straight shuffle join — the layout is a physical optimization with no
     semantic surface."""
     import uuid as _uuid
+    from urllib.parse import unquote, urlparse
 
     from .operators import bucketing as B
 
     # The bucketed WRITE is the layout build (the shuffle paid once at
-    # write time — the whole point of bucketing); cache it per (session,
-    # sf_dir) like the ANN index builds so repeat invocations measure
-    # the exchange-free JOIN, not a table rewrite. Deterministic
-    # content, so reuse is safe.
-    app = spark.sparkContext.applicationId
-    cache_key = ("bucketed", sf_dir, app)
-    tables = _ANN_INDEX_CACHE.get(cache_key)
-    if tables is None:
-        # clear prior-SESSION leftovers only: another sf_dir's cached
-        # tables in THIS session must survive (dropping them would leave
-        # their cache entry pointing at nothing)
-        if not any(
-            k[0] == "bucketed" and k[2] == app for k in _ANN_INDEX_CACHE
-        ):
-            for t in spark.catalog.listTables():
-                if t.name.startswith("bensp_q_"):
-                    spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+    # write time — the whole point of bucketing); it is a state-registry
+    # entry per (session, sf_dir) like the ANN index builds, so repeat
+    # invocations measure the exchange-free JOIN, not a table rewrite.
+    # Deterministic content, so reuse is safe. Its drop removes the table
+    # dirs by path, which needs no live session (DROP TABLE does).
+    def write_tables():
         tag = _uuid.uuid4().hex[:8]
-        t_o, t_c = f"bensp_q_orders_{tag}", f"bensp_q_customer_{tag}"
+        names = f"bensp_q_orders_{tag}", f"bensp_q_customer_{tag}"
         with _cold_build("layout_bucketed_join:build"):
             o = _t(spark, sf_dir, "orders").select(
                 "o_orderkey", "o_custkey", "o_totalprice"
             )
             c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-            B.write_bucketed(o, t_o, 8, "o_custkey")
-            B.write_bucketed(c, t_c, 8, "c_custkey")
-        _ANN_INDEX_CACHE[cache_key] = (t_o, t_c)
-    else:
-        t_o, t_c = tables
+            B.write_bucketed(o, names[0], 8, "o_custkey")
+            B.write_bucketed(c, names[1], 8, "c_custkey")
+        dirs = [
+            unquote(urlparse(r.data_type).path)
+            for t in names
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()
+            if r.col_name == "Location"
+        ]
+        return names, dirs
+
+    (t_o, t_c), _dirs = state.get(
+        spark, "bucketed", sf_dir, write_tables, drop=lambda got: state.rmtree(*got[1])
+    )
     joined = spark.table(t_o).join(
         spark.table(t_c), F.col("o_custkey") == F.col("c_custkey")
     )
@@ -5591,40 +5583,23 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: deterministic prebuilt ANN indexes, one build per (family, corpus)
-_ANN_INDEX_CACHE: dict = {}
-
-
-def _memo_load(spark: SparkSession, kind: str, path: str, loader):
-    """Memoize a loaded index per (session, kind, path): load_* eagerly
-    collects its meta row (a driver job), so re-loading per declared-
-    query call paid ~0.2 s of pure session fixed cost. The loaded tuple
-    holds lazy DataFrames bound to the session — keyed by applicationId
-    so a fresh session never sees another session's plans."""
-    key = ("loaded", kind, path, spark.sparkContext.applicationId)
-    got = _ANN_INDEX_CACHE.get(key)
-    if got is None:
-        with _cold_build(f"load:{kind}"):
-            got = loader(spark, path)
-        _ANN_INDEX_CACHE[key] = got
-    return got
-
-
 def _prebuilt(spark, name, family, sf_dir, build, kind, load):
-    """Build-once index: the first call for ``(family, sf_dir)`` in this
-    process runs ``build(path)`` into a kept directory, timed under
-    COLD_BUILD_SECONDS["<name>:build"]; every call then loads the index
-    once per session through _memo_load(kind). The index is deterministic
-    per corpus, so repeated invocations (bench reps) reuse the persisted
-    build. Returns ``(index, what build returned)``."""
-    got = _ANN_INDEX_CACHE.get((family, sf_dir))
-    if got is None:
-        with _cold_build(f"{name}:build"), _scratch("bensp_ann_idx_", keep=True) as d:
-            path = f"{d}/{family}"
-            got = (path, build(path))
-        _ANN_INDEX_CACHE[(family, sf_dir)] = got
-    path, built = got
-    return _memo_load(spark, kind, path, load), built
+    """Build-once index: the first call for ``(family, sf_dir)`` in a
+    session runs ``build(path)`` into a kept directory, timed under
+    COLD_BUILD_SECONDS["<name>:build"], and loads it, timed under
+    ``"load:<kind>"``. The index is deterministic per corpus, so every
+    later call of the session (bench reps) reuses the loaded index, a
+    state-registry entry (state.py). Returns ``(index, what build
+    returned)``."""
+
+    def build_once():
+        keep = (spark, (family, sf_dir))
+        with _cold_build(f"{name}:build"), _scratch("bensp_ann_idx_", keep) as d:
+            built = build(f"{d}/{family}")
+        with _cold_build(f"load:{kind}"):
+            return load(spark, f"{d}/{family}"), built
+
+    return state.get(spark, "index", (family, sf_dir), build_once)
 
 
 def _nsw_index(spark: SparkSession, name: str, sf_dir: str, emb: DataFrame):

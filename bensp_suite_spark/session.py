@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import state
+
 #: Arrow batch size for pandas-UDF stages. This is the Spark analog of the
 #: reference's ITEM_PER_FETCH / CHUNK_ANCHOR_PER_FETCH queue-batching knobs
 #: (reference: apps/dedup/src/dedupdef.h:282-295).
@@ -144,10 +146,6 @@ def local_rows_df(spark: SparkSession, rows, schema, parts: int = 1):
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
 
 
-#: One live cache generation per call site — see :func:`pooled_persist`.
-_PERSIST_POOL: dict[str, object] = {}
-
-
 def pooled_persist(df, key: str):
     """Persist + materialize ``df``, releasing the cache a *previous* call
     with the same ``key`` left behind.
@@ -157,11 +155,14 @@ def pooled_persist(df, key: str):
     DataFrame, so it can never unpersist its own cache — but run 46 such
     queries twice in a bench sweep and dozens of dead generations pile up in
     unified memory, squeezing execution memory (spills) and evicting the
-    caches that ARE live. Keeping exactly one generation per call site keeps
-    the benefit (branches share one materialization) without the leak. A
-    pin does NOT recompute: it is a ``localCheckpoint`` with truncated
-    lineage, so an action on a pin whose blocks are lost (executor loss,
-    cleared local storage) fails instead of falling back to its plan.
+    caches that ARE live. The pin is a state-registry entry (state.py) of
+    the session, keyed by ``key``: one generation per key, fresh while the
+    new ``df`` has the same logical plan (``sameResult``), so repeated
+    same-input invocations reuse it; a different plan unpersists the old
+    generation and pins anew. A pin does NOT recompute: it is a
+    ``localCheckpoint`` with truncated lineage, so an action on a pin
+    whose blocks are lost (executor loss, cleared local storage) fails
+    instead of falling back to its plan.
 
     The handed-out pin is ``localCheckpoint(eager=True)`` rather than a
     bare ``persist()``: a persisted DataFrame still carries its FULL
@@ -171,42 +172,35 @@ def pooled_persist(df, key: str):
     on every downstream action (day3's executed plan measured ~20 MB and
     ~8 s of pure driver planning per invocation at r12). The checkpoint
     truncates the handed-out lineage to a LogicalRDD while the ORIGINAL
-    plan is kept in the pool for the sameResult reuse check, so repeated
-    invocations still hit the memo. Values are identical; storage
-    lifecycle is unchanged (the superseded generation's blocks are
-    released by the ContextCleaner when the pool drops its reference)."""
-    entry = _PERSIST_POOL.get(key)
-    if entry is not None:
-        src, out = entry
+    plan is kept in the entry for the sameResult check. Values are
+    identical; the superseded generation's checkpoint blocks are
+    released by the ContextCleaner once nothing references them."""
+
+    def same_plan(entry) -> bool:
         try:
-            # Same logical plan ⇒ same result: reuse the live pin instead
-            # of re-materializing (the intermediate-result store a repeated
-            # query batch wants — simhash signatures, shingle tables, LSH
-            # indexes survive across same-input invocations). A different
-            # input path/plan fails sameResult and falls through to rebuild.
-            if src._jdf.queryExecution().analyzed().sameResult(
+            return entry[0]._jdf.queryExecution().analyzed().sameResult(
                 df._jdf.queryExecution().analyzed()
-            ):
-                return out
+            )
         except Exception:
-            pass
-        try:
-            src.unpersist(blocking=False)
-        except Exception:
-            pass  # e.g. its SparkSession is already stopped
-    # persist() FIRST, then checkpoint: the eager checkpoint's single job
-    # computes the cache-marked plan, so one materialization populates
-    # BOTH artifacts. The persisted original stays registered in Spark's
-    # CacheManager, which substitutes it into ANY other query whose plan
-    # contains the same subtree (e.g. dedup_simhash's whole plan IS the
-    # subtree dedup_simhash_pairs pins) — dropping the persist() cost
-    # that cross-query reuse and flagged a real drift (r12 bench:
-    # dedup_simhash 0.17 → 0.86 s). The handed-out frame stays the
-    # lineage-truncated checkpoint.
-    pinned = df.persist()
-    out = pinned.localCheckpoint(eager=True)
-    _PERSIST_POOL[key] = (pinned, out)
-    return out
+            return False
+
+    def pin():
+        # persist() FIRST, then checkpoint: the eager checkpoint's single
+        # job computes the cache-marked plan, so one materialization
+        # populates BOTH artifacts. The persisted original stays
+        # registered in Spark's CacheManager, which substitutes it into
+        # ANY other query whose plan contains the same subtree (e.g.
+        # dedup_simhash's whole plan IS the subtree dedup_simhash_pairs
+        # pins) — dropping the persist() cost that cross-query reuse and
+        # flagged a real drift (r12 bench: dedup_simhash 0.17 → 0.86 s).
+        # The handed-out frame stays the lineage-truncated checkpoint.
+        pinned = df.persist()
+        return pinned, pinned.localCheckpoint(eager=True)
+
+    return state.get(
+        df.sparkSession, "pin", key, pin, fresh=same_plan,
+        drop=lambda entry: state.unpersist(entry[0]),
+    )[1]
 
 
 def pooled_persist_all(*items: tuple[object, str]) -> tuple:
@@ -216,8 +210,9 @@ def pooled_persist_all(*items: tuple[object, str]) -> tuple:
     day-loop queries pin (hashes, sims) signature pairs whose plans share
     only already-cached parents; at toy scale each pin is ~1 job of
     driver fixed cost, so overlapping the pair halves that bill. Results
-    and cache semantics are identical to sequential calls — the pool dict
-    is keyed, and Spark schedules concurrent jobs FIFO."""
+    and cache semantics are identical to sequential calls — the registry
+    builds different keys concurrently, and Spark schedules concurrent
+    jobs FIFO."""
     from concurrent.futures import ThreadPoolExecutor
 
     if len(items) == 1:

@@ -231,12 +231,16 @@ def step(
     blooms: dict,
     write_flags: Callable[[DataFrame], object],
     advance: bool = True,
+    probe: bool = True,
     on_survivors: Callable[[DataFrame, int | str], object] | None = None,
 ) -> None:
     """Flag ``batch`` (doc_id, text) against the state visible to ``key``
     and hand the flags to ``write_flags``; with ``advance``, overwrite the
     key's own partitions with the survivors' signatures stamped
     ``stamp`` and OR their bits into ``blooms`` (memory and sidecars).
+    Without ``probe`` the flags skip the bloom prefilter (they are
+    identical either way), but the blooms still advance, so they keep
+    covering the state.
 
     ``resight`` also appends the retention re-sightings: (hash, stamp) per
     exact-dup match and (fingerprint, stamp) per history fingerprint the
@@ -265,7 +269,7 @@ def step(
     new_s = new_s.persist()
     pairs = matched_history_pairs(
         new_s, hist_s, max_hamming=max_hamming,
-        **_probe(blooms["band_bloom"], "history_band_bloom_packed"),
+        **_probe(blooms["band_bloom"] if probe else None, "history_band_bloom_packed"),
     )
     if resight and advance:
         pairs = pairs.persist()  # two consumers: the near flag, the re-sightings
@@ -276,7 +280,7 @@ def step(
             history_sig=(hist_h, hist_s),
             new_sig=(new_h, new_s),
             near_pairs=pairs,
-            **_probe(blooms["bloom"], "history_bloom_packed"),
+            **_probe(blooms["bloom"] if probe else None, "history_bloom_packed"),
         ).persist()
         try:
             write_flags(flags)

@@ -15,8 +15,6 @@ Reference behaviors → Spark ``binaryFile`` source options:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,17 +67,6 @@ def read_files(
         .withColumn("file_id", F.row_number().over(w).cast("long") - 1)
     )
     return out.join(F.broadcast(ranked), "file_path")
-
-
-def write_files(df: DataFrame, out_dir: str) -> None:
-    """Materialize (file_name, content) rows back to individual files —
-    the decoder's output surface (decoder.c writes the reconstructed file).
-    Driver-side loop is fine here: this is a verification sink, not a data
-    path (the data path is the parquet ddp table)."""
-    os.makedirs(out_dir, exist_ok=True)
-    for row in df.select("file_name", "content").toLocalIterator():
-        with open(os.path.join(out_dir, row.file_name), "wb") as fh:
-            fh.write(bytes(row.content))
 
 
 def read_tar_members(spark: SparkSession, path: str, skip_dotfiles: bool = True) -> DataFrame:

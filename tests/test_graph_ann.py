@@ -8,6 +8,7 @@ import inspect
 
 from pyspark.sql import functions as F
 
+from bensp_suite_spark import state
 from bensp_suite_spark.operators import graph_ann as GA
 
 from .conftest import SF_CORRECT
@@ -99,11 +100,11 @@ def test_frozen_meta_memo_drops_entries_of_stopped_sessions(spark, tmp_path):
     )
     path = str(tmp_path / "nsw")
     GA.save_nsw_index(emb, path, n_shards=2, m=4, ef_build=8)
-    dead = ("dead-app", path, 1)
-    GA._FROZEN_META_CACHE[dead] = ({"n_shards": 2, "m": 4, "ef_build": 8},)
+    dead = ("dead-app", "frozen_meta", path)
+    state._entries[dead] = ((1, ({"n_shards": 2, "m": 4, "ef_build": 8},)), None)
     try:
         _graph, params = GA.load_nsw_index(spark, path)
         assert params == {"n_shards": 2, "m": 4, "ef_build": 8}
-        assert dead not in GA._FROZEN_META_CACHE
+        assert dead not in state._entries
     finally:
-        GA._FROZEN_META_CACHE.pop(dead, None)
+        state._entries.pop(dead, None)

@@ -10,6 +10,8 @@ import glob
 import os
 import pathlib
 import shutil
+import subprocess
+import sys
 import tempfile
 
 import pytest
@@ -21,7 +23,7 @@ from bensp_suite_spark.dedup import fixtures, pipeline
 from bensp_suite_spark.ferret import fixtures as FF
 from bensp_suite_spark.streaming import _sink, dedup_stream
 
-from .conftest import SF_CORRECT
+from .conftest import REPO, SF_CORRECT
 
 
 @pytest.fixture()
@@ -1922,3 +1924,36 @@ def test_signature_state_has_one_home():
         ("matched_history_pairs", "operators/dedup_text.py"),
     ):
         assert len([c for c in callers(fn) if not c.startswith(home + ":")]) == 1, fn
+
+
+def test_daily_cli_no_bloom_step_still_advances_the_bloom(spark, tmp_path):
+    """``daily_cli step --no-bloom`` skips only the bloom probe: the day's
+    survivors still enter ``bloom.bin``, so a later step that probes it
+    cannot miss a copy of them."""
+    from bensp_suite_spark.operators.sketches import bloom_maybe_contains_packed
+    from bensp_suite_spark.signature_state import read_bloom
+
+    paths = {n: str(tmp_path / n) for n in ("hist", "day1", "sig", "flags")}
+    spark.createDataFrame(
+        [(i, f"history document {i}") for i in range(4)], "doc_id long, text string"
+    ).write.parquet(paths["hist"])
+    spark.createDataFrame(
+        [(100, "a fresh document the step keeps")], "doc_id long, text string"
+    ).write.parquet(paths["day1"])
+    # both commands in one interpreter, so the test starts one JVM
+    script = (
+        "from bensp_suite_spark.daily_cli import main\n"
+        f"assert main(['init', {paths['hist']!r}, {paths['sig']!r}]) == 0\n"
+        f"assert main(['step', {paths['day1']!r}, {paths['sig']!r}, "
+        f"{paths['flags']!r}, '--no-bloom']) == 0\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, cwd=tmp_path,
+        env=dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g"),
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert [row.is_kept for row in spark.read.parquet(paths["flags"]).collect()] == [True]
+    survivor = spark.read.parquet(os.path.join(paths["sig"], "hashes", "step=day1"))
+    packed, m, k = read_bloom(paths["sig"])
+    probed = bloom_maybe_contains_packed(survivor, "content_hash", packed, m=m, k=k)
+    assert [row.bloom_maybe for row in probed.collect()] == [True]
